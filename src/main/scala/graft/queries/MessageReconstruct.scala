@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Telemetry
-import graft.ops.{ArgmaxLatest, ChangeSplit, JsonExplode, SnapshotBracket}
+import graft.ops.{ArgmaxLatest, ChangeSplit, SnapshotBracket, TieredResolve}
 
 /** Point-in-time message reconstruction — the engine's flagship capability.
   *
@@ -14,11 +14,15 @@ import graft.ops.{ArgmaxLatest, ChangeSplit, JsonExplode, SnapshotBracket}
   * - `SQL/GetMessage.sql:8-998` (snapshot-bracketed: nearest snapshot +
   *   delta-log slice + JSON explode + sentinel defaults).
   *
-  * One Catalyst DAG: slice → max_by argmax (one shuffle) → snapshot explode
-  * (map-only) → anti-join/left-join lattice (broadcast: field lists are
-  * small) → union → sort. The snapshot bracket bounds the fact scan to
-  * `[snap_min_start, target]` — the partition-pruning move that makes this
-  * O(epoch) instead of O(history) at 100 TB.
+  * Driver side: the header probe and the snapshot bracket, one small
+  * collect each. Then one Catalyst DAG ([[TieredResolve]]): epoch log slice
+  * ∪ exploded snap_min ∪ one −1 sentinel per message field → one
+  * `max_by` aggregate (one hash exchange, map-side partial combine) → a
+  * single-partition key-level sentinel window → broadcast name/type join →
+  * sort. Five Spark jobs per call: header, bracket, field-list broadcast,
+  * the shuffle-map stage, the result. The snapshot bracket bounds the fact
+  * scan to `[snap_min_start, target]` — the partition-pruning move that
+  * makes this O(epoch) instead of O(history) at 100 TB.
   *
   * Value lattice per (field, src, dst, relative_path):
   *   latest log update in the epoch ≫ snapshot value ≫ −1 sentinel
@@ -30,7 +34,7 @@ import graft.ops.{ArgmaxLatest, ChangeSplit, JsonExplode, SnapshotBracket}
   */
 object MessageReconstruct {
 
-  private val Key = Seq("uevol_field_id", "src_id", "dst_id")
+  private val Key = TieredResolve.Key
 
   /** Reconstruct the full field vector of message instance `target`.
     *
@@ -47,46 +51,21 @@ object MessageReconstruct {
       uevolField: DataFrame,
       snapshotCatalog: Option[DataFrame],
       snapshotLoader: String => DataFrame,
-      target: Long): DataFrame = {
-
-    val spark = instanceField.sparkSession
-    import spark.implicits._
-
+      target: Long): DataFrame =
     resolveHeader(instanceMessage, target) match {
       case None => emptyResult(uevolField) // unknown id: the NULL branch (:992-996)
       case Some((msgId, srcId, dstId)) =>
         val messageFields = fieldsOf(uevolField, msgId, srcId, dstId)
 
         // Bracket snapshots; snap_min bounds the delta scan (GetMessage.sql:63-92).
-        val bracket = snapshotCatalog.map(SnapshotBracket.bracket(_, target))
-        val snapMin = bracket.flatMap(_._1)
+        val snapMin = snapshotCatalog.flatMap(SnapshotBracket.bracket(_, target)._1)
         val sliceLo = snapMin.map(_.start_instance_message_id).getOrElse(Long.MinValue)
 
-        // Latest update per (field, path) within the epoch — the J6 argmax.
-        val latest = epochLatest(instanceField, msgId, srcId, dstId, sliceLo, target)
-
-        // Snapshot values for paths not updated within the epoch: explode
-        // the snap_min JSON (dot-safe map explode, GetMessage.sql:282-355)
-        // and anti-join the argmax keys.
-        val snapValues = snapMin match {
-          case Some(ref) =>
-            snapshotRemainder(
-              loadSnapshot(snapshotLoader, ref.name, srcId, dstId, messageFields),
-              latest)
-          case None => spark.emptyDataset[ValueRow].toDF()
-        }
-
-        // No distinct: `covered` only feeds the sentinel anti-join, and
-        // left_anti is dedup-agnostic — the distinct would be a pure extra
-        // shuffle.
-        val covered = latest.select(Key.map(col): _*)
-          .unionByName(snapValues.select(Key.map(col): _*))
-        decorate(
-          latest.unionByName(snapValues)
-            .unionByName(sentinelDefaults(messageFields, covered)),
-          messageFields)
+        TieredResolve.resolve(
+          epochSlice(instanceField, msgId, srcId, dstId, sliceLo, target),
+          snapMin.map(ref => loadSnapshot(snapshotLoader, ref.name, srcId, dstId)),
+          messageFields, messageFields)
     }
-  }
 
   /** Reference-parity reconstruction using the same/diff snapshot-compare
     * shortcut (`SQL/GetMessage.sql:127-176`): keys whose `json_value` is
@@ -100,13 +79,11 @@ object MessageReconstruct {
     * change detection, exactly as the reference does — we delegate to
     * [[getMessage]].
     *
-    * Caching note: the two snapshot-side frames are persisted
-    * (MEMORY_AND_DISK) for the lifetime of the returned plan — state-sized,
-    * read by 2+ branches each, the Spark analog of the temp tables the
-    * reference materializes here (GetMessage.sql:96-176). A long-running
-    * driver issuing many reconstructions should release them
-    * (`spark.catalog.clearCache()` or unpersist via the cache manager)
-    * once results are consumed.
+    * Same resolver as [[getMessage]]; only the log tier differs. The
+    * reference's "unchanged keys keep the snapshot" ∪ "changed keys fall
+    * back to snap_min" is exactly the exploded snap_min tier, so parity mode
+    * is the [[getMessage]] candidate union with the quiescent keys
+    * anti-joined out of the log slice BEFORE the shuffle.
     */
   def getMessageSnapshotDiff(
       instanceField: DataFrame,
@@ -114,8 +91,7 @@ object MessageReconstruct {
       uevolField: DataFrame,
       snapshotCatalog: Option[DataFrame],
       snapshotLoader: String => DataFrame,
-      target: Long): DataFrame = {
-
+      target: Long): DataFrame =
     resolveHeader(instanceMessage, target) match {
       case None => emptyResult(uevolField)
       case Some((msgId, srcId, dstId)) =>
@@ -123,48 +99,21 @@ object MessageReconstruct {
         (bracket.flatMap(_._1), bracket.flatMap(_._2)) match {
           case (Some(lo), Some(hi)) if lo.name != hi.name =>
             val messageFields = fieldsOf(uevolField, msgId, srcId, dstId)
-
-            val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-            val sMin = graft.CacheRegistry.track(
-              loadSnapshot(snapshotLoader, lo.name, srcId, dstId, messageFields)
-                .persist(disk))
-            val (same0, _) = ChangeSplit.split(sMin,
-              loadSnapshot(snapshotLoader, hi.name, srcId, dstId, messageFields))
-            val same = graft.CacheRegistry.track(same0.persist(disk))
-            val sameKeys = same.select(Key.map(col): _*)
-
-            // Unchanged keys keep the snapshot state verbatim (log skipped).
-            val sameVals = JsonExplode.flatten(same, "json_value",
-              Key :+ "instance_message_id")
-              .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-                col("relative_path"), col("instance_message_id"), col("value"))
-
-            // Everything else — changed keys AND keys absent from the
-            // snapshots — consults the epoch slice; the anti-join on the
+            val sMin = loadSnapshot(snapshotLoader, lo.name, srcId, dstId)
+            val (same, _) = ChangeSplit.split(sMin,
+              loadSnapshot(snapshotLoader, hi.name, srcId, dstId))
+            // Unchanged keys keep the snapshot state: the anti-join on the
             // tiny same-key set is the pre-shuffle scan reduction.
-            val latest = epochLatest(instanceField, msgId, srcId, dstId,
-              lo.start_instance_message_id, target,
-              prune = _.join(broadcast(sameKeys), Key, "left_anti"))
-
-            // Changed keys with no epoch update at a path fall back to snap_min.
-            val snapValues = snapshotRemainder(
-              sMin.join(broadcast(sameKeys), Key, "left_anti"), latest)
-
-            // No distinct — anti-join input, see getMessage.
-            val covered = sameVals.select(Key.map(col): _*)
-              .unionByName(latest.select(Key.map(col): _*))
-              .unionByName(snapValues.select(Key.map(col): _*))
-            decorate(
-              sameVals.unionByName(latest).unionByName(snapValues)
-                .unionByName(sentinelDefaults(messageFields, covered)),
-              messageFields)
+            val slice = epochSlice(instanceField, msgId, srcId, dstId,
+              lo.start_instance_message_id, target)
+              .join(broadcast(same.select(Key.map(col): _*)), Key, "left_anti")
+            TieredResolve.resolve(slice, Some(sMin), messageFields, messageFields)
 
           case _ =>
             getMessage(instanceField, instanceMessage, uevolField,
               snapshotCatalog, snapshotLoader, target)
         }
     }
-  }
 
   /** Log-only reconstruction (`RetrieveMessage.java:54-118` semantics):
     * (field id, name, latest new_value ≤ target) for every field of the
@@ -198,11 +147,13 @@ object MessageReconstruct {
   // ---- shared steps of both reconstruction modes ----
 
   /** GetMessage.sql:25-38 header probe: (msgId, srcId, dstId), None for an
-    * unknown target instance.
+    * unknown target instance. Instance ids key `instance_message`, so the
+    * filtered projection is at most one row: a plain collect is one job,
+    * where `limit(1)` would scale up into two.
     */
   private def resolveHeader(instanceMessage: DataFrame, target: Long): Option[(Int, Int, Int)] =
     instanceMessage.where(col("id") === target)
-      .select("uevol_message_id", "src_id", "dst_id").limit(1).collect()
+      .select("uevol_message_id", "src_id", "dst_id").collect()
       .headOption.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
 
   /** GetMessage.sql:42-54: the message's field list with constant src/dst. */
@@ -212,72 +163,25 @@ object MessageReconstruct {
       .select(col("id").as("uevol_field_id"), col("name"), col("type"),
         lit(srcId).as("src_id"), lit(dstId).as("dst_id"))
 
-  /** Epoch-bounded per-(key, path) argmax over the pruned fact slice; the
-    * payload is pruned BEFORE the shuffle. `prune` lets the parity mode
-    * drop its quiescent keys pre-shuffle.
+  /** The message's epoch-bounded fact slice, pruned to the resolver's
+    * payload before the shuffle.
     */
-  private def epochLatest(instanceField: DataFrame, msgId: Int, srcId: Int,
-                          dstId: Int, sliceLo: Long, target: Long,
-                          prune: DataFrame => DataFrame = identity): DataFrame = {
-    val slice = instanceField.where(
+  private def epochSlice(instanceField: DataFrame, msgId: Int, srcId: Int,
+                         dstId: Int, sliceLo: Long, target: Long): DataFrame =
+    instanceField.where(
       col("uevol_message_id") === msgId && col("src_id") === srcId &&
         col("dst_id") === dstId &&
         col("instance_message_id").between(sliceLo, target))
-    ArgmaxLatest.latestRows(
-      prune(slice)
-        .select((Key :+ "relative_path" :+ "instance_message_id" :+ "new_value").map(col): _*),
-      Key :+ "relative_path",
-      col("instance_message_id"))
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-        col("relative_path"), col("instance_message_id"),
-        col("new_value").cast("double").as("value"))
-  }
+      .select((Key :+ "relative_path" :+ "instance_message_id" :+ "new_value").map(col): _*)
 
-  /** Snapshot rows for this message: src/dst slice + field-list semi-join. */
+  /** Snapshot rows for this src/dst pair. Rows of other messages' fields
+    * resolve as keys of their own and drop out at the resolver's name join.
+    */
   private def loadSnapshot(snapshotLoader: String => DataFrame, name: String,
-                           srcId: Int, dstId: Int, messageFields: DataFrame): DataFrame =
+                           srcId: Int, dstId: Int): DataFrame =
     snapshotLoader(name)
       .where(col("src_id") === srcId && col("dst_id") === dstId)
-      .join(broadcast(messageFields.select("uevol_field_id")),
-        Seq("uevol_field_id"), "left_semi")
       .select((Key :+ "instance_message_id" :+ "json_value").map(col): _*)
-
-  /** Snapshot paths NOT shadowed by an epoch update: flatten + anti-join
-    * (GetMessage.sql:282-355 explode, :571-590 fallback).
-    */
-  private def snapshotRemainder(snapRows: DataFrame, latest: DataFrame): DataFrame =
-    JsonExplode.flatten(snapRows, "json_value", Key :+ "instance_message_id")
-      .join(latest.select((Key :+ "relative_path").map(col): _*),
-        Key :+ "relative_path", "left_anti")
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-        col("relative_path"), col("instance_message_id"), col("value"))
-
-  /** −1 sentinel rows at the scalar path for uncovered fields
-    * (GetMessage.sql:435,571-590).
-    */
-  private def sentinelDefaults(messageFields: DataFrame, covered: DataFrame): DataFrame =
-    messageFields
-      .join(covered, Key, "left_anti")
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-        lit(Telemetry.ScalarPath).as("relative_path"),
-        lit(Telemetry.NeverUpdatedId).as("instance_message_id"),
-        lit(Telemetry.NeverUpdatedValue).as("value"))
-
-  /** Decorate with name/type and apply the reference's output order
-    * (GetMessage.sql:595-597).
-    */
-  private def decorate(values: DataFrame, messageFields: DataFrame): DataFrame =
-    values
-      .join(broadcast(messageFields.select("uevol_field_id", "name", "type")),
-        Seq("uevol_field_id"))
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"), col("name"),
-        col("instance_message_id"), col("relative_path"), col("type"),
-        col("value"))
-      .orderBy("uevol_field_id", "relative_path")
-
-  private case class ValueRow(
-      uevol_field_id: Int, src_id: Int, dst_id: Int,
-      relative_path: String, instance_message_id: Long, value: Double)
 
   private def emptyResult(uevolField: DataFrame): DataFrame = {
     val spark = uevolField.sparkSession

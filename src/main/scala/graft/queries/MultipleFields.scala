@@ -3,20 +3,27 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.model.Telemetry
-import graft.ops.{ArgmaxLatest, ArgsTable, JsonExplode, SnapshotBracket}
+import graft.ops.{ArgsTable, SnapshotBracket, TieredResolve}
 
 /** Point-in-time reconstruction for an arbitrary (field, src, dst) argument
   * set — `SQL/GetMultipleFields.sql:8-952` (+History variant `:8-386`),
   * arguments parsed/expanded per `SQL/CreateArgumentsTable.sql:8-123`.
   *
-  * Same value lattice as [[MessageReconstruct]] (update ≫ snapshot ≫ −1
-  * sentinel), driven by an arguments table instead of a message's field
-  * list. Arguments are tiny (user input) → broadcast everywhere.
+  * Same value lattice and resolver as [[MessageReconstruct]] (update ≫
+  * snapshot ≫ −1 sentinel, [[TieredResolve]]), driven by an arguments table
+  * instead of a message's field list. Arguments are tiny (user input), so
+  * the log slice and the snapshot are semi-joined to ONE broadcast of the
+  * argument keys before the shuffle (GetMultipleFields.sql:78-100's
+  * join-input reduction). Driver side: the snapshot-bracket collect. Then
+  * one DAG: epoch slice ∪ exploded snap_min ∪ one sentinel per argument →
+  * one `max_by` aggregate (one hash exchange) → single-partition sentinel
+  * window → broadcast name/type join → sort. Five Spark jobs per call:
+  * bracket, args broadcast, `uevol_field` broadcast, the shuffle-map stage,
+  * the result.
   */
 object MultipleFields {
 
-  private val Key = Seq("uevol_field_id", "src_id", "dst_id")
+  private val Key = TieredResolve.Key
 
   /** Parse the reference's `'(f),(f)'` / `'(s),(s)'` / `'(d),(d)'` list
     * literals into the expanded argument-triple table, deduplicated
@@ -50,59 +57,19 @@ object MultipleFields {
       args: DataFrame,
       target: Long): DataFrame = {
 
-    val spark = instanceField.sparkSession
-    val argKeys = broadcast(args.select(Key.map(col): _*).distinct())
-
-    val bracket = snapshotCatalog.map(SnapshotBracket.bracket(_, target))
-    val snapMin = bracket.flatMap(_._1)
+    // No distinct: a semi-join and the resolver's aggregate are both
+    // duplicate-agnostic, and a distinct would add a shuffle of its own.
+    val argKeys = broadcast(args.select(Key.map(col): _*))
+    val snapMin = snapshotCatalog.flatMap(SnapshotBracket.bracket(_, target)._1)
     val sliceLo = snapMin.map(_.start_instance_message_id).getOrElse(Long.MinValue)
 
-    // Latest update per (arg triple, path) in the epoch — semi-join the big
-    // log slice to the broadcast args BEFORE the argmax shuffle
-    // (GetMultipleFields.sql:78-100's join-input reduction).
-    val latest = ArgmaxLatest.latestRows(
+    TieredResolve.resolve(
       instanceField
         .where(col("instance_message_id").between(sliceLo, target))
         .join(argKeys, Key, "left_semi")
-        // prune to the argmax payload before the shuffle
         .select((Key :+ "relative_path" :+ "instance_message_id" :+ "new_value").map(col): _*),
-      Key :+ "relative_path",
-      col("instance_message_id"))
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-        col("relative_path"), col("instance_message_id"),
-        col("new_value").cast("double").as("value"))
-
-    val snapValues = snapMin match {
-      case Some(ref) =>
-        JsonExplode.flatten(
-          snapshotLoader(ref.name).join(argKeys, Key, "left_semi"),
-          "json_value", Key :+ "instance_message_id")
-          .join(latest.select((Key :+ "relative_path").map(col): _*),
-            Key :+ "relative_path", "left_anti")
-          .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-            col("relative_path"), col("instance_message_id"), col("value"))
-      case None =>
-        latest.where(lit(false)) // empty, same schema
-    }
-
-    // No distinct: only the anti-join below reads `covered`, and left_anti
-    // is dedup-agnostic — duplicates per key are bounded by the per-key
-    // path count anyway.
-    val covered = latest.select(Key.map(col): _*)
-      .unionByName(snapValues.select(Key.map(col): _*))
-    val defaults = args.select(Key.map(col): _*).distinct()
-      .join(covered, Key, "left_anti")
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"),
-        lit(Telemetry.ScalarPath).as("relative_path"),
-        lit(Telemetry.NeverUpdatedId).as("instance_message_id"),
-        lit(Telemetry.NeverUpdatedValue).as("value"))
-
-    latest.unionByName(snapValues).unionByName(defaults)
-      .join(broadcast(uevolField.select(col("id").as("uevol_field_id"),
-        col("name"), col("type"))), Seq("uevol_field_id"))
-      .select(col("uevol_field_id"), col("src_id"), col("dst_id"), col("name"),
-        col("instance_message_id"), col("relative_path"), col("type"),
-        col("value"))
-      .orderBy("uevol_field_id", "relative_path")
+      snapMin.map(ref => snapshotLoader(ref.name).join(argKeys, Key, "left_semi")),
+      args,
+      uevolField.withColumnRenamed("id", "uevol_field_id"))
   }
 }

@@ -468,9 +468,9 @@ object EventQueries {
     // mapped onto the telemetry schema (event_type -> field id, user ->
     // src), a snapshot of user 7's state at S = max_id/2 is synthesized as
     // the reference's JSON rows, and MessageReconstruct.getMessage
-    // reconstructs at T = 3·max_id/4 — snapshot bracket, epoch-bounded
-    // argmax, dot-safe JSON explode, anti-join, and -1 sentinels all in one
-    // DAG. The oracle recomputes the value lattice directly.
+    // reconstructs at T = 3·max_id/4 — snapshot bracket, epoch slice,
+    // dot-safe JSON explode and -1 sentinels resolved by one tiered
+    // aggregate. The oracle recomputes the value lattice directly.
     "q23_snapshot_reconstruct" -> { (s, dir) =>
       import s.implicits._
       val e = ev(s, dir)
@@ -489,7 +489,7 @@ object EventQueries {
     // risk 2): the synthesized json_value nests an object under "000.001",
     // and the update log writes both the scalar path and the nested leaf —
     // so JsonExplode.flatten's second-level explode AND the per-path
-    // anti-join shadowing run inside getMessage under the oracle.
+    // update-over-snapshot resolution run inside getMessage under the oracle.
     "q28_nested_reconstruct" -> { (s, dir) =>
       import s.implicits._
       val e = ev(s, dir)

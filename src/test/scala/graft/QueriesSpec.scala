@@ -513,6 +513,84 @@ class DriverQueryPlanSpec extends SparkSpec {
   }
 }
 
+/** Plan shape of the two point lookups on the fixture store written as
+  * parquet: the tiered candidate union resolves in ONE hash exchange with
+  * the map-side `partial_max_by` combine below it, the log is scanned
+  * once, the final (field, path) order adds no range exchange, and a call
+  * costs at most five Spark jobs including its driver-side collects.
+  */
+class PointLookupPlanSpec extends SparkSpec {
+
+  private lazy val dir = graft.WorkDirs.acquire("test_graft_point_lookup_plan").toString
+
+  private lazy val store: Map[String, org.apache.spark.sql.DataFrame] = {
+    val tables = Map(
+      "instance_field" -> Fixtures.instanceField(spark),
+      "instance_message" -> Fixtures.instanceMessage(spark),
+      "uevol_field" -> Fixtures.uevolField(spark)) ++ Fixtures.snapshots(spark)
+    tables.map { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+      name -> spark.read.parquet(s"$dir/$name")
+    }
+  }
+
+  override def afterAll(): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+
+  /** `body`'s result and the jobs started while it ran, counted by a
+    * listener; the bus is drained on both sides so no other call's events
+    * leak in.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { val result = body; drain(); (result, jobs.get) }
+    finally sc.removeSparkListener(listener)
+  }
+
+  private def checkShape(call: => org.apache.spark.sql.DataFrame): Unit = {
+    assert(store.nonEmpty) // write the store before counting
+    val (df, jobs) = jobsOf { val df = call; assert(df.collect().nonEmpty); df }
+    assert(jobs <= 5, s"expected at most 5 jobs per lookup, got $jobs")
+    // the plan AQE ran (the string also carries the initial plan after it)
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val exchanges = "Exchange hashpartitioning".r.findAllMatchIn(plan).toSeq
+    assert(exchanges.length === 1,
+      s"expected one hash exchange, got ${exchanges.length}:\n$plan")
+    assert(plan.indexOf("partial_max_by") > exchanges.head.start,
+      s"expected the partial_max_by combine below the exchange:\n$plan")
+    assert(!plan.contains("rangepartitioning"),
+      s"expected no range exchange for the final order:\n$plan")
+    val opt = df.queryExecution.optimizedPlan
+    val logScans = opt.collectLeaves().count(_.output.exists(_.name == "new_value"))
+    assert(logScans === 1, s"expected one scan of the log, got $logScans:\n$opt")
+  }
+
+  test("getMessage: one hash exchange over partial_max_by, one log scan, <= 5 jobs") {
+    checkShape(MessageReconstruct.getMessage(store("instance_field"),
+      store("instance_message"), store("uevol_field"),
+      Some(Fixtures.snapshotCatalog(spark)), store, 150L))
+  }
+
+  test("getMultipleFields: one hash exchange over partial_max_by, one log scan, <= 5 jobs") {
+    val args = MultipleFields.parseArgs(spark, "(1),(4),(6)",
+      s"(${Fixtures.Src}),(${Fixtures.Src}),(${Fixtures.Src})",
+      s"(${Fixtures.Dst}),(${Fixtures.Dst}),(${Fixtures.Dst})")
+    checkShape(MultipleFields.getMultipleFields(store("instance_field"),
+      store("uevol_field"), Some(Fixtures.snapshotCatalog(spark)), store, args, 150L))
+  }
+}
+
 class DriverContractSpec extends SparkSpec {
 
   test("every declared query has an oracle; no orphan oracle SQL") {

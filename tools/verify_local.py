@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Usage: python3 tools/verify_local.py [sfDir] [outDir]
+Usage: python3 tools/verify_local.py [sfDir] [outDir] [q1,q2,...]
 
-Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` has already produced
-<outDir>/<name>/ parquet dirs and <outDir>/oracle_sql.json. For each query:
+Assumes `sbt "runMain graft.Verify <sfDir> <outDir> [q1,q2,...]"` has
+already produced <outDir>/<name>/ parquet dirs and <outDir>/oracle_sql.json.
+The optional third argument is the same comma-separated query-name filter
+graft.Verify takes: only those queries are compared. For each query:
 run the oracle SQL in DuckDB over views of the same testdata, then compare
 (schema-insensitively): columns sorted by name, rows sorted, values
 compared with exact equality (floats via repr after float64 cast).
@@ -16,6 +18,7 @@ import pandas as pd
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -23,6 +26,12 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+if only is not None:
+    unknown = sorted(only - set(oracle))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}")
+        sys.exit(2)
+    oracle = {n: q for n, q in oracle.items() if n in only}
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -77,7 +86,8 @@ for name in sorted(oracle):
         fails += 1
 
 queries_missing = [n for n in os.listdir(out)
-                   if os.path.isdir(f"{out}/{n}") and n not in oracle]
+                   if os.path.isdir(f"{out}/{n}") and n not in oracle
+                   and (only is None or n in only)]
 for n in queries_missing:
     print(f"NOTE {n}: spark output without oracle (rows-only check)")
 print(f"\n{'ALL PASS' if fails == 0 else f'{fails} FAILURES'}")
