@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraftConf {
 
   /** Settings that must be present BEFORE the SparkContext exists —
-    * pass to `SparkSession.builder().config(...)` (or spark-submit
+    * pass to the session builder's `config(...)` (or spark-submit
     * --conf). `cleanCheckpoints` makes superseded reliable checkpoint
     * files eligible for deletion when their RDD is GC'd; without it a
     * long-running driver accumulates one file set per superstep for the
@@ -39,49 +39,36 @@ object GraftConf {
     "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.NioLocalFs")
 
-  /** Shuffle-writer settings for the iterative/superstep-heavy workload —
-    * a DEPLOYMENT KNOB, deliberately NOT applied by Bench/Verify since
-    * round 20: the canonical local[32] environment measured the forced
-    * sort writer 2.5x WORSE on the superstep class (q31 2.34 → 5.88 s,
-    * driver PERF_r19; d05 anti-scaled 0.27 from 8 → 32 cores), while a
-    * 4-8-effective-core box measures it 15-35% better — the writer choice
-    * is environment-sensitive at small R, and Spark's own heuristic
-    * (bypass when R ≤ 200) is the default the engine is graded on.
-    * Deployments whose profiles show the bypass writer's O(M·R) file cost
-    * dominating tiny-shuffle supersteps can still opt in here.
+  /** The one local-mode session recipe every main builds through, so a
+    * profile measures the configuration the bench it adjudicates runs:
+    * `local[cpus]` with as many shuffle partitions, AQE on, UTC, no UI,
+    * and [[localFsConf]].
     *
-    * (r19 rationale, kept for that regime:) guide §2.2 "fewer, larger
-    * blocks" applied to the
-    * small-shuffle regime. Stack-sampling the graph/containment rows
-    * showed ~36% of their executor CPU in the BYPASS shuffle writer's
-    * file machinery: with R reducers each map task opens R partition
-    * files (`DiskBlockObjectWriter.open` 14%), probes temp-block names
-    * (`File.exists` 6%), then mmaps/concatenates them into one output
-    * (`FileChannel.map/unmap` 12%) plus a checksum sidecar per map task.
-    * A superstep query runs 40-80 tiny shuffles, so this O(M·R) file
-    * cost dominates its actual aggregation work.
-    *
-    * - `bypassMergeThreshold = 0` forces the serialized sort writer
-    *   (ONE spill file + index per map task, no per-partition files, no
-    *   concat). Production-scale jobs with R > 200 take that path
-    *   ALREADY (the bypass writer is only chosen when
-    *   R <= bypassMergeThreshold, default 200), so this aligns the
-    *   small-R local regime with the at-scale code path rather than
-    *   tuning for local mode. Measured on the seven hottest iterative
-    *   rows: 15-35% wall reduction each (d149 6.5→4.8, d152 7.5→5.3,
-    *   q31 4.2→3.5, d156 3.0→1.9 s).
-    * - `checksum.enabled = false` drops the per-map-task shuffle
-    *   checksum sidecar file — a fetch-corruption DIAGNOSTIC (Spark
-    *   3.2+, used to classify corruption on fetch retry), not an
-    *   integrity gate on results; with it off results are identical and
-    *   each tiny shuffle saves one file create+write+rename. Measured
-    *   on top of the writer change: d149 4.8→3.4, d152 5.3→4.1,
-    *   q31 3.5→2.8, d146 7.2→5.4 s. Deployments debugging flaky disks
-    *   should re-enable it.
+    * The bench's stdout contract line must be its only stdout line: a
+    * raised `maxToStringFields` keeps the "Truncated the string
+    * representation of a plan" WARN from ever firing (10k covers every
+    * plan here; the widest, the q24 pivot, is far under 1k fields).
+    * `maxPlanStringLength` caps the plan description AQE renders on every
+    * plan update even with the UI off — uncapped, that rendering measured
+    * 4-9% of the deep composed queries' wall (d14/d19/d38; BASELINE.md,
+    * "Plan-description rendering is capped"); no query result depends on
+    * it.
     */
-  val shuffleConf: Map[String, String] = Map(
-    "spark.shuffle.sort.bypassMergeThreshold" -> "0",
-    "spark.shuffle.checksum.enabled" -> "false")
+  def session(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.debug.maxToStringFields", "10000")
+      .config("spark.sql.maxPlanStringLength", "65536")
+      .config(localFsConf)
+      .getOrCreate()
+
+  /** `SPARK_GRAFT_CPUS` when set, else the caller's default. */
+  def envCpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
 
   /** Point the session at a reliable (HDFS/S3/shared-FS) checkpoint
     * directory. After this, [[Checkpoints.eager]] — the materialization
@@ -164,19 +151,12 @@ object Checkpoints {
   private val localFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  // A/B instrumentation ONLY (BASELINE.md round-15 adjudication): with
-  // SPARK_GRAFT_NO_EAGER_RELEASE=1 both release paths no-op, emulating
-  // the pre-round-15 lifetime where dead superstep blocks survive until
-  // a JVM GC lets the ContextCleaner reap them — so one binary can
-  // measure the block-accumulation mechanism and its fix side by side.
-  private val releaseDisabled = sys.env.contains("SPARK_GRAFT_NO_EAGER_RELEASE")
-
   /** The block-holding RDD behind a frame produced by [[eager]]'s
     * localCheckpoint path: its analyzed plan is a `LogicalRDD` whose
     * `rdd` field is the persisted internal-row RDD. Accessed
     * reflectively — `LogicalRDD` lives in `org.apache.spark.sql.execution`
     * and is not API — with a None fallback (tracking is then skipped and
-    * behavior degrades to pre-round-15 GC-driven release, never an error).
+    * behavior degrades to GC-driven release, never an error).
     */
   private def blockRdd(cp: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     try {
@@ -217,12 +197,7 @@ object Checkpoints {
       spark.createDataFrame(rdd, df.schema)
     } else {
       val cp = df.localCheckpoint(true)
-      // under the A/B disable flag, tracking must be skipped too: a
-      // tracked-but-never-released RDD is a strong reference that blocks
-      // the ContextCleaner's GC-driven reaping for the JVM lifetime,
-      // which would make the "disabled" arm strictly WORSE than the
-      // pre-round-15 behavior it exists to emulate
-      if (!releaseDisabled) blockRdd(cp).foreach(localFrames.add)
+      blockRdd(cp).foreach(localFrames.add)
       cp
     }
   }
@@ -238,7 +213,7 @@ object Checkpoints {
     * [[GraftConf.builderConf]]'s cleanCheckpoints).
     */
   def release(cp: DataFrame): Unit =
-    if (!releaseDisabled) blockRdd(cp).foreach { r =>
+    blockRdd(cp).foreach { r =>
       localFrames.remove(r)
       try r.unpersist(true)
       catch { case scala.util.control.NonFatal(_) => () }
@@ -250,7 +225,7 @@ object Checkpoints {
     * safe while a graft query is mid-execution). Blocking, for the same
     * reason CacheRegistry's release is.
     */
-  def releaseAll(): Unit = if (!releaseDisabled) {
+  def releaseAll(): Unit = {
     var r = localFrames.poll()
     while (r != null) {
       try r.unpersist(true)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,18 +7,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] = rest.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shell-fork-free local FS (r19) — see graft.io.NioLocalFileSystem
-      .config(GraftConf.localFsConf)
-      // no shuffle-writer override (r20) — the r19 GraftConf.shuffleConf
-      // regressed the superstep class 2.5x at the canonical local[32]
-      // (driver PERF_r19, q31); Spark's default writer heuristic stands
-      .getOrCreate()
+    val spark = GraftConf.session(GraftConf.envCpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -36,21 +24,9 @@ object Verify {
       // crowd the next query's working set
       finally { CacheRegistry.releaseAll(); Checkpoints.releaseAll() }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = Json.fields(SparkEntry.oracleSql.toSeq.map { case (k, v) =>
+      k -> Json.text(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(json))
     spark.stop()
   }
 }

@@ -244,8 +244,8 @@ object Sketches {
     * without touching either corpus again, the same standing-artifact
     * contract as [[kmvOverlap]] for set overlap.
     *
-    * Accuracy regime (measured, tools/ScaleStress round12): relative
-    * error ≈ distinct-keys/width, so the estimate is TIGHT for
+    * Accuracy regime (measured, SCALE.md "Count-Min frequency sketch"):
+    * relative error ≈ distinct-keys/width, so the estimate is TIGHT for
     * heavy-hitter-dominated streams (100 keys at width 2048 → 1.04× the
     * true 1.25e13 on 50M×75M rows) and a LOOSE-but-sound upper bound on
     * sparse wide-domain joins (20M keys → collision mass dominates).

@@ -25,11 +25,11 @@ import org.apache.spark.sql.DataFrame
   * and every caller is set-oriented downstream, so results are identical
   * either way.
   *
-  * GUARD (round 20, hardened after the r19 driver adjudication): both
-  * entry points apply only to frames whose analyzed plan is narrow work
-  * (projections/filters/aliases) over a single FILE-SOURCE leaf — the one
-  * plan shape the single-row-group pathology can produce. Everything else
-  * passes through untouched, enforced by code rather than a doc contract:
+  * GUARD: [[toCores]] applies only to frames whose analyzed plan is
+  * narrow work (projections/filters/aliases) over a single FILE-SOURCE
+  * leaf — the one plan shape the single-row-group pathology can
+  * produce. Everything else passes through untouched, enforced by code
+  * rather than a doc contract:
   *  - exchange-rooted frames: probing them via `.rdd` would make AQE
   *    materialize their shuffle stages eagerly at plan-construction time
   *    (and re-run them at action time), and a shuffle has already decided
@@ -46,38 +46,12 @@ import org.apache.spark.sql.DataFrame
   */
 object Spread {
 
-  /** Operational escape hatch (and the A/B toggle ProfileR19's
-    * interleaved-arm harness flips): `false` makes both entry points the
-    * identity. Session-scoped, read per call. */
-  private def enabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.spread.enabled", "true")
-      .equalsIgnoreCase("true")
-
-  /** Target partition count: `spark.graft.spread.parts` when it parses to
-    * a positive int, the session's default parallelism otherwise (a
-    * malformed override must degrade to the default, not throw at
-    * query-construction time). */
-  private def parts(df: DataFrame): Int = {
-    val dp = df.sparkSession.sparkContext.defaultParallelism
-    df.sparkSession.conf.get("spark.graft.spread.parts", "")
-      .toIntOption.filter(_ > 0).getOrElse(dp)
-  }
-
   def toCores(df: DataFrame): DataFrame =
-    if (df.isStreaming || !enabled(df) ||
-        !narrowOverFileScan(df.queryExecution.analyzed)) df
+    if (df.isStreaming || !narrowOverFileScan(df.queryExecution.analyzed)) df
     else {
-      val cores = parts(df)
+      val cores = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
     }
-
-  /** Alias of [[toCores]] — the guard that used to distinguish the two
-    * entry points is now enforced inside [[toCores]] itself (the r19
-    * advisor note: a contract a doc comment carries is one a future call
-    * site breaks). Kept so operator-internal call sites read as "guarded
-    * by design" at the use site.
-    */
-  def toCoresIfNarrowScan(df: DataFrame): DataFrame = toCores(df)
 
   private def narrowOverFileScan(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =

@@ -1401,11 +1401,11 @@ object TextAnalysis {
   def stripBoilerplate(df: org.apache.spark.sql.DataFrame, idCol: String,
                        linesCol: String,
                        maxDocFreq: Int = 1): org.apache.spark.sql.DataFrame = {
-    // S4 persist rule, MEASURED (tools/ProfileR9): the census branch and
-    // the anti-join branch both descend from this explode, and their
-    // exchanges differ (partial-agg vs join build) so AQE reuse cannot
-    // dedup the double tokenize — persist is 0.45→0.30 s at the 10x
-    // probe, a wash at 1x.
+    // S4 persist rule, MEASURED (SCALE.md, boilerplate stripping): the
+    // census branch and the anti-join branch both descend from this
+    // explode, and their exchanges differ (partial-agg vs join build) so
+    // AQE reuse cannot dedup the double tokenize — persist is 0.45→0.30 s
+    // at a 10x corpus, a wash at 1x.
     val exploded = graft.CacheRegistry.track(df
       .select(col(idCol), posexplode_outer(col(linesCol)).as(Seq("pos", "line")))
       .where(col("line").isNotNull)

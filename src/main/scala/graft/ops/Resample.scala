@@ -43,8 +43,8 @@ object Resample {
     require(stepNs > 0, s"stepNs=$stepNs must be positive")
     val keys = keyCols.map(col)
     // one value per (key, instant): last writer (highest ordCol) wins.
-    // NOT persisted, by measurement (round 10, tools/ProfileQ43): the
-    // bounds branch only consumes dedup's GROUPING columns, so Catalyst
+    // NOT persisted, by measurement (BASELINE.md, "q43 LOCF grid ships
+    // unpersisted"): the bounds branch only consumes dedup's GROUPING columns, so Catalyst
     // prunes the max_by aggregate out of that branch entirely —
     // min/max(t) compute straight off a 2-column scan (plan-asserted in
     // QueriesSpec). The "dedup computes twice" premise behind the old S4

@@ -233,7 +233,7 @@ object PipelineQueries {
     // the md5 fill + pixel extraction is per-row CPU — guarded spread
     // (r19, guide §2.5): fires on the one-row-group batch scan, no-op on
     // the d167 streaming side and at scale
-    graft.functions.Spread.toCoresIfNarrowScan(df)
+    graft.functions.Spread.toCores(df)
       .select(col("doc_id"), unhex(blobHex).as("blob"))
       .select(col("doc_id"), Multimodal.grayPixels(col("blob"), 72).as("px"))
       .select(col("doc_id"), Multimodal.dHash64(col("px")).as("phash"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MinHashLSH, TextAnalysis}
@@ -31,10 +30,7 @@ object ExamplePipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_pipeline_out")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftConf.session(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

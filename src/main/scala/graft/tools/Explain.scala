@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftConf, SparkEntry}
 
 /** Dev tool: print the formatted physical plan of one or more SparkEntry
   * queries — used to audit pushdown (PushedFilters/ReadSchema), broadcast
@@ -15,15 +13,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     // SPARK_GRAFT_CPUS so plan dumps can be taken at the canonical
-    // parallelism (the r19 dumps were all local[4], which hid the
-    // spread/AQE behavior the local[32] driver actually executes)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // parallelism: a local[4] dump hides the spread/AQE behavior a
+    // local[32] run executes
+    val spark = GraftConf.session(GraftConf.envCpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorIVF, VectorLSH, VectorOps}
@@ -16,10 +15,7 @@ import graft.functions.{VectorIVF, VectorLSH, VectorOps}
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftConf.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select("vec_id", "embedding")

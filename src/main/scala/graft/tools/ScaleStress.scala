@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Bench, GraftConf}
 import graft.functions.{JaccardJoin, MinHashLSH, SimHash, TextAnalysis}
 
 /** Scale-up probe (dev tool): runs the corpus-heavy operators on the sf0.1
@@ -27,65 +28,10 @@ import graft.functions.{JaccardJoin, MinHashLSH, SimHash, TextAnalysis}
   */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftConf.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     if (args.contains("semantic")) {
       runEmbeddingProbes(spark); spark.stop(); return
-    }
-    if (args.contains("round10")) {
-      runRound10Probes(spark); spark.stop(); return
-    }
-    if (args.contains("round11")) {
-      runRound11Probes(spark); spark.stop(); return
-    }
-    if (args.contains("round12")) {
-      runRound12Probes(spark); spark.stop(); return
-    }
-    if (args.contains("round13")) {
-      runRound13Probes(spark); spark.stop(); return
-    }
-    if (args.contains("round13graph")) {
-      runRound13GraphProbes(spark); spark.stop(); return
-    }
-    if (args.contains("round14tri")) {
-      runRound14TriangleSkewProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round15hub")) {
-      // "kcoreonly": re-run arm for the 10x k-core peel, which OOMs the
-      // default 8 GB probe heap (the round13b assortativity precedent) —
-      // run with SPARK_DRIVER_MEM=48g
-      runRound15HubProbes(spark, kcoreOnly = args.contains("kcoreonly"))
-      spark.stop(); return
-    }
-    if (args.contains("round16wcore")) {
-      runRound16WeightedCoreProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round16phash")) {
-      runRound16PhashProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round17contain")) {
-      runRound17ContainmentProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round18decode")) {
-      runRound18DecodeProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round19state")) {
-      runRound19StateProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round19dedup")) {
-      runRound19DedupProbe(spark); spark.stop(); return
-    }
-    if (args.contains("round13b")) {
-      runRound13bProbes(spark, full = true); spark.stop(); return
-    }
-    if (args.contains("round13b2")) {
-      // assortativity + meters only (the arms after the first probe run's
-      // 8g-heap OOM on the 80M-edge double-degree join; run with
-      // SPARK_DRIVER_MEM=48g)
-      runRound13bProbes(spark, full = false); spark.stop(); return
     }
     val docs1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text")
@@ -95,14 +41,6 @@ object ScaleStress {
       docs1.select((col("doc_id") + lit(r * 10_000_000L)).as("doc_id"),
         concat(lit(tag), regexp_replace(col("text"), " ", " " + tag)).as("text"))
     }.reduce(_ unionByName _)
-
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
 
     if (args.contains("across")) {
       // Corpus for the asymmetric probe: 10x UNTAGGED replication — pure
@@ -133,21 +71,19 @@ object ScaleStress {
         .select((col("doc_id") + lit(benchOffset)).as("doc_id"), col("text"))
       val nb = bench.count(); val nc = corpus.count()
       println(s"--- asymmetric probe: |bench|=$nb x |corpus|=$nc ---")
-      def drain(): Unit = {
-        graft.CacheRegistry.releaseAll()
-        spark.sharedState.cacheManager.clearCache()
-      }
       // Warm JIT/codegen on the small side before timing.
       t("warmup cross (bench x 1x)") {
         JaccardJoin.similarPairsAcross(bench, docs1, "doc_id", "text", 0.8).count()
       }
-      drain()
+      Bench.dropCaches(spark)
       // Min-of-3 on BOTH arms (the same statistic Bench and BASELINE.md
       // use): the self-join arm's wall time swings several x run-to-run
       // under spill pressure, so a single sample is noise, and the spread
       // itself is part of the finding — print min and max.
       def minOf3(name: String)(f: => Long): (Double, Double) = {
-        val ts = (1 to 3).map { i => val s = t(s"$name #$i")(f); drain(); s }
+        val ts = (1 to 3).map { i =>
+          val s = t(s"$name #$i")(f); Bench.dropCaches(spark); s
+        }
         (ts.min, ts.max)
       }
       val (tCross, tCrossMax) = minOf3(s"cross bench x ${rep}x corpus") {
@@ -274,246 +210,20 @@ object ScaleStress {
     spark.stop()
   }
 
-  /** Round-11 census-family probe: skylineByDomain and temperatureMix at
-    * x1 vs x10. Both ops' only corpus-sized stage is one partial-agg
-    * census shuffle; the frontier window / rate math runs on the census.
-    * A wall ratio near the scan ratio (~10x or below, since fixed
-    * session cost amortizes) confirms the shape; far above flags a
-    * regression to data-sized windows or joins.
-    */
-  /** Round-12 probe: CMS frequency/join-size vs the exact census at
-    * WIDE key domains — the d110/d113 scale claim. The sketch's exchange
-    * is partitions × depth × width longs whatever the domain; the exact
-    * census shuffles every distinct key, and the exact join-size answer
-    * additionally joins two censuses. Results recorded in SCALE.md.
-    */
-  private def runRound12Probes(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // n items over a dom-wide key domain (each key ~ n/dom occurrences),
-    // hashed into the repo's 60-bit space like every CMS consumer
-    def wide(n: Long, dom: Long, salt: String = "") = spark.range(n)
-      .select(conv(substring(md5(concat(lit(salt),
-          pmod(col("id"), lit(dom)).cast("string"))), 1, 15), 16, 10)
-        .cast("long").as("h"))
-    def cms(tag: String, n: Long, dom: Long) = t(s"$tag cms") {
-      val d = wide(n, dom)
-      val r = d.agg(graft.functions.Sketches
-        .cmsAgg(d, col("h"), 4, 2048).as("s")).count()
-      drop(); r
-    }
-    def census(tag: String, n: Long, dom: Long) = t(s"$tag census") {
-      val r = wide(n, dom).groupBy("h").count().count(); drop(); r
-    }
-    cms("warmup 5M/2M", 5_000_000L, 2_000_000L)
-    val c1 = cms("50M/20M", 50_000_000L, 20_000_000L)
-    val e1 = census("50M/20M", 50_000_000L, 20_000_000L)
-    val c2 = cms("200M/80M", 200_000_000L, 80_000_000L)
-    val e2 = census("200M/80M", 200_000_000L, 80_000_000L)
-    println(f"wide-domain cms 50M=$c1%6.2f census 50M=$e1%6.2f " +
-      f"(${e1 / c1}%4.2fx) | cms 200M=$c2%6.2f census 200M=$e2%6.2f " +
-      f"(${e2 / c2}%4.2fx)")
-
-    // join-size: sketch path = two bounded aggs + array math; exact path
-    // = two censuses + an equijoin on the distinct keys. Two regimes,
-    // because the CMS inner-product error is ADDITIVE e/width·‖a‖₁‖b‖₁:
-    //  - sparse (wide domains, small true join): the estimate is a loose
-    //    but sound upper bound — collision mass dominates;
-    //  - dense (heavy-hitter streams, domain ≲ width): collisions are
-    //    rare and the estimate is essentially exact.
-    def joinPair(tag: String, a: DataFrame, b: DataFrame): Unit = {
-      var est = -1L; var exact = -1L
-      val ts = t(s"$tag cms_join_size") {
-        val ska = a.agg(graft.functions.Sketches.cmsAgg(a, col("h"), 4, 2048).as("sa"))
-        val skb = b.agg(graft.functions.Sketches.cmsAgg(b, col("h"), 4, 2048).as("sb"))
-        est = ska.crossJoin(broadcast(skb))
-          .select(graft.functions.Sketches
-            .cmsInnerProduct(col("sa"), col("sb"), 4, 2048).as("e"))
-          .head().getDecimal(0).longValueExact
-        drop(); est
-      }
-      val tx = t(s"$tag exact_join_size") {
-        exact = a.groupBy("h").count().withColumnRenamed("count", "ca")
-          .join(b.groupBy("h").count().withColumnRenamed("count", "cb"), "h")
-          .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)))
-          .head().getLong(0)
-        drop(); exact
-      }
-      println(f"$tag join-size est=$est true=$exact " +
-        f"(est/true=${est.toDouble / exact}%8.3f) " +
-        f"wall cms=$ts%6.2f s exact=$tx%6.2f s")
-    }
-    joinPair("sparse 50Mx60M/20M-keys",
-      wide(50_000_000L, 20_000_000L),
-      wide(50_000_000L, 20_000_000L, salt = "b")
-        .union(wide(10_000_000L, 5_000_000L)))
-    // relative error ≈ distinct-keys/width (collision pairs K²/width at
-    // weight (n/K)² vs true n²/K): K=1000 at width 2048 still ~2x over;
-    // K=100 lands within a few percent — the heavy-hitter regime where
-    // join-size estimation from sketches is actually informative
-    joinPair("dense 50Mx75M/100-keys",
-      wide(50_000_000L, 100L),
-      wide(50_000_000L, 100L, salt = "b")
-        .union(wide(25_000_000L, 50L)))
+  /** Run `f`, print its wall seconds and row count, return the seconds. */
+  private def t(name: String)(f: => Long): Double = {
+    val t0 = System.nanoTime()
+    val rows = f
+    val s = (System.nanoTime() - t0) / 1e9
+    println(f"$name%-28s ${s}%7.2f s  rows=$rows")
+    s
   }
 
-  private def runRound11Probes(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    val docs1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "lang", "text", "n_chars")
-    val docs10 = (0 until 10).map { r =>
-      docs1.select((col("doc_id") + lit(r * 10_000_000L)).as("doc_id"),
-        col("lang"), col("text"), col("n_chars"))
-    }.reduce(_ unionByName _)
-    def pts(d: DataFrame) = d.select(col("doc_id"), col("lang"),
-      TextAnalysis.qualityScore(col("text")).as("quality"), col("n_chars"))
-    def sky(tag: String, d: DataFrame) = t(s"$tag skylineByDomain") {
-      val n = graft.ops.Skyline
-        .skylineByDomain(pts(d), "lang", "quality", "n_chars").count()
-      drop(); n
-    }
-    def tmix(tag: String, d: DataFrame) = t(s"$tag temperatureMix") {
-      val n = graft.functions.Sampling
-        .temperatureMix(d, "doc_id", "lang", temperature = 2.0).count()
-      drop(); n
-    }
-    sky("warmup", docs1)
-    val s1 = sky("x1", docs1); val s10 = sky("x10", docs10)
-    val m1 = tmix("x1", docs1); val m10 = tmix("x10", docs10)
-    println(f"skyline x1=$s1%6.2f x10=$s10%6.2f ratio=${s10 / s1}%5.1f | " +
-      f"tmix x1=$m1%6.2f x10=$m10%6.2f ratio=${m10 / m1}%5.1f")
-  }
-
-  /** Round-10 probes: (a) KMV sketch vs exact COUNT(DISTINCT) on the
-    * gram set at 1x and 10x — the sketch's win must GROW with scale
-    * (bounded exchange vs all-distinct-values exchange); (b) PQ encode —
-    * map-only, must scale ~linearly; (c) funnel — one key exchange,
-    * ~linear. 10x corpora are tag-disjoint (zero shared grams).
-    */
-  private def runRound10Probes(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    val docs1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val docs10 = (0 until 10).map { r =>
-      val tag = s"r${r}x"
-      docs1.select((col("doc_id") + lit(r * 10_000_000L)).as("doc_id"),
-        concat(lit(tag), regexp_replace(col("text"), " ", " " + tag)).as("text"))
-    }.reduce(_ unionByName _)
-    def grams(d: DataFrame) = MinHashLSH.shingles(d, "doc_id", "text", 3)
-    def kmv(tag: String, d: DataFrame) = t(s"$tag kmv_distinct") {
-      val n = graft.functions.Sketches.kmvDistinct(grams(d), col("sh"), 256).count()
-      drop(); n
-    }
-    def exact(tag: String, d: DataFrame) = t(s"$tag exact_distinct") {
-      val n = grams(d).select("sh").distinct().count()
-      drop(); n
-    }
-    kmv("warmup", docs1)
-    val k1 = kmv("x1", docs1); val k10 = kmv("x10", docs10)
-    val e1 = exact("x1", docs1); val e10 = exact("x10", docs10)
-    println(f"kmv x1=$k1%6.2f x10=$k10%6.2f ratio=${k10 / k1}%5.1f | " +
-      f"exact x1=$e1%6.2f x10=$e10%6.2f ratio=${e10 / e1}%5.1f | " +
-      f"kmv-vs-exact at 10x: ${e10 / k10}%4.2fx")
-
-    // The crossover demonstration: the gram set above (272k distinct) is
-    // toy-sized — exact distinct is fixed-cost there. On a domain the size
-    // a 100 TB corpus actually has (here 50M/200M distinct 60-bit values),
-    // the exact path must exchange every distinct value while the sketch
-    // exchange stays at partitions x k longs.
-    def wide(n: Long) = spark.range(n)
-      .select(conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10)
-        .cast("long").as("h"))
-    def kmvWide(tag: String, n: Long) = t(s"$tag kmv") {
-      val r = wide(n).agg(graft.functions.Sketches
-        .kmvAgg(wide(n), col("h"), 256).as("s")).count()
-      drop(); r
-    }
-    def exactWide(tag: String, n: Long) = t(s"$tag exact") {
-      val r = wide(n).distinct().count(); drop(); r
-    }
-    kmvWide("warmup 5M", 5_000_000L)
-    val wk1 = kmvWide("50M", 50_000_000L)
-    val we1 = exactWide("50M", 50_000_000L)
-    val wk2 = kmvWide("200M", 200_000_000L)
-    val we2 = exactWide("200M", 200_000_000L)
-    println(f"wide-domain kmv 50M=$wk1%6.2f exact 50M=$we1%6.2f " +
-      f"(${we1 / wk1}%4.2fx) | kmv 200M=$wk2%6.2f exact 200M=$we2%6.2f " +
-      f"(${we2 / wk2}%4.2fx)")
-
-    val emb1 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val emb10 = (0 until 10).map { r =>
-      emb1.select((col("vec_id") + lit(r * 10_000_000L)).as("vec_id"),
-        transform(col("embedding"),
-          x => x + lit(r.toFloat * 1e-3f)).as("embedding"))
-    }.reduce(_ unionByName _)
-    def enc(tag: String, e: DataFrame) = t(s"$tag pq_encode") {
-      val n = graft.functions.VectorPQ.encode(e, "vec_id", "embedding", 64)
-        .select(element_at(col("codes"), 1).as("c0")).agg(sum("c0")).count()
-      drop(); n
-    }
-    enc("warmup", emb1)
-    val p1 = enc("x1", emb1); val p10 = enc("x10", emb10)
-    println(f"pq_encode x1=$p1%6.2f x10=$p10%6.2f ratio=${p10 / p1}%5.1f")
-
-    val ev1 = spark.read.parquet("/root/testdata/sf0.1/events.parquet")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts").cast("timestamp")).as("t_us"))
-    val ev10 = (0 until 10).map { r =>
-      ev1.select((col("user_id") + lit(r * 10_000_000L)).as("user_id"),
-        col("event_id"), col("event_type"), col("t_us"))
-    }.reduce(_ unionByName _)
-    def fun(tag: String, e: DataFrame) = t(s"$tag funnel") {
-      val n = graft.ops.Funnel.conversion(e, "user_id", "t_us", "event_type",
-        Seq("view", "click", "purchase")).count()
-      drop(); n
-    }
-    fun("warmup", ev1)
-    val f1 = fun("x1", ev1); val f10 = fun("x10", ev10)
-    println(f"funnel x1=$f1%6.2f x10=$f10%6.2f ratio=${f10 / f1}%5.1f")
-  }
-
-  /** `runMain graft.tools.ScaleStress semantic` — just the embedding-side
-    * probes (semdedup + the round-10 semantic family), skipping the text
-    * suite.
+  /** The embedding-side probes (semdedup, semantic decontamination,
+    * centroid outliers) plus the exact-vs-Bloom release screen; run after
+    * the text suite, or alone as `runMain graft.tools.ScaleStress semantic`.
     */
   private def runEmbeddingProbes(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
     // Embedding-side probe: semDedup at 1x and 10x. Replicas are jittered
     // per replica index so every vector is distinct (no artificial exact
     // duplicates), while cell occupancy stays balanced — the within-cell
@@ -530,8 +240,7 @@ object ScaleStress {
       val n = graft.functions.VectorIVF.semDedup(e, "vec_id", "embedding",
         graft.functions.VectorIVF.mdCentroids(spark, 8, 64),
         "cell_id", "cvec", 0.4).count()
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache(); n
+      Bench.dropCaches(spark); n
     }
     semd("warmup", emb1)
     val e1 = semd("x1", emb1); val e10 = semd("x10", emb10)
@@ -585,23 +294,21 @@ object ScaleStress {
     }.reduce(_ unionByName _))
     val benchDocs = docs1s.where(col("doc_id") % 100 === 0)
       .select((col("doc_id") + lit(900_000_000L)).as("doc_id"), col("text"))
-    def drain(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
     var bmp: Array[Long] = null
     val tBuild = t("bloom bitmap build (10x corpus, ONCE)") {
       bmp = TextAnalysis.bloomGramBitmap(corpus10, "text", n = 13,
         bits = 1 << 24)
       bmp.length.toLong
     }
-    drain()
+    Bench.dropCaches(spark)
     t("warmup exact screen") {
       TextAnalysis.ngramContamination(benchDocs, docs1s, "doc_id", "text").count()
     }
-    drain()
+    Bench.dropCaches(spark)
     def minOf3(name: String)(f: => Long): Double =
-      (1 to 3).map { i => val s = t(s"$name #$i")(f); drain(); s }.min
+      (1 to 3).map { i =>
+        val s = t(s"$name #$i")(f); Bench.dropCaches(spark); s
+      }.min
     val tExact1 = minOf3("exact screen vs 1x corpus") {
       TextAnalysis.ngramContamination(
         benchDocs, docs1s, "doc_id", "text").count()
@@ -618,668 +325,5 @@ object ScaleStress {
       f"(grows with corpus); bloom=$tBloom%5.2f flat " +
       f"(bitmap build $tBuild%.2f s, once per corpus)")
     spark.stop()
-  }
-
-  /** Round-13 probe: the q23 reconstruction's epoch bound vs history size.
-    *
-    * The claim under test (SURVEY §2.10 / MessageReconstruct.getMessage):
-    * with a snapshot bracket, the delta scan is bounded to
-    * `instance_message_id ∈ [snap_min, target]` — a parquet-pushable range
-    * — so reconstruction wall time tracks the EPOCH size, not the total
-    * history size. At 100 TB that is the difference between a dashboard
-    * query and a table scan.
-    *
-    * Setup: the sf0.1 events log mapped to the instance_field shape
-    * (~100k rows, epoch slice ~25k rows fixed across arms), then histories
-    * of 100× and 1000× built by appending replicas whose ids are shifted
-    * into strictly PRE-epoch (negative) ranges — pure old-history mass;
-    * the bracketed slice is byte-identical in every arm. Each history is
-    * written to parquet range-partitioned on instance_message_id so
-    * row-group stats make the range predicate actually prunable, as a real
-    * id-ordered log store would be. Two arms per history:
-    *   bounded   — getMessage with the snapshot catalog (epoch scan)
-    *   unbounded — getMessage without it (sliceLo = −∞: argmax over the
-    *               entire log, the cost a user pays without snapshots)
-    * Expectation: bounded stays flat 1×→1000×; unbounded grows with the
-    * history. min-of-3 wall clock per arm, caches dropped between runs.
-    */
-  private def runRound13Probes(spark: SparkSession): Unit = {
-    import spark.implicits._
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    def minOf3(name: String)(f: => Long): Double =
-      (1 to 3).map { _ => val s = t(name)(f); drop(); s }.min
-
-    val base = "/tmp/graft_scale13"
-    val e = spark.read.parquet("/root/testdata/sf0.1/events.parquet")
-    val maxId = e.agg(max("event_id")).head().getLong(0)
-    val (snapAt, target) = (maxId / 2, 3 * maxId / 4)
-    val types = e.select("event_type").distinct()
-      .orderBy("event_type").as[String].collect().toSeq
-    val fm = types.zipWithIndex.map { case (n, i) => (i + 1, n) }
-      .toDF("fid", "event_type")
-    val if1 = e.join(broadcast(fm), "event_type")
-      .select(col("fid").as("uevol_field_id"), lit(1).as("uevol_message_id"),
-        col("event_id").as("instance_message_id"),
-        col("user_id").cast("int").as("src_id"), lit(0).as("dst_id"),
-        lit("000").as("relative_path"), col("value").as("new_value"))
-    // History ×n: replicas r=1..n-1 shifted to disjoint negative id ranges
-    // — all strictly below snap_min, so the bracketed slice never grows.
-    // Built by crossJoin with a replica index (one flat plan; a 1000-way
-    // union would blow up plan compilation, [[deep-plan lineage]] lesson).
-    def hist(n: Int): DataFrame = if1
-      .crossJoin(spark.range(n).select(col("id").as("rep")))
-      .withColumn("instance_message_id",
-        col("instance_message_id") - col("rep") * lit(maxId + 1))
-      .drop("rep")
-    val arms = Seq(1, 100, 1000)
-    arms.foreach { n =>
-      hist(n).repartitionByRange(32, col("instance_message_id"))
-        .sortWithinPartitions("instance_message_id")
-        .write.mode("overwrite").parquet(s"$base/if$n")
-    }
-    val uevolField = types.zipWithIndex.map { case (n, i) => (i + 1, 1, n, 0) }
-      .toDF("id", "uevol_message_id", "name", "type")
-    val instanceMessage = Seq((target, 1, 7, 0))
-      .toDF("id", "uevol_message_id", "src_id", "dst_id")
-    val catalog = Seq(("snap_s", snapAt))
-      .toDF("name", "start_instance_message_id")
-    // Constant-size materialized snapshot (what a real store holds): one
-    // scalar-path json per (field, user 7) at S. Its cost must not vary
-    // across arms — the probe isolates the DELTA scan.
-    val snap = types.indices.map(i => (i + 1, 7, 0, snapAt, """{"000": 1.5}"""))
-      .toDF("uevol_field_id", "src_id", "dst_id", "instance_message_id",
-        "json_value")
-    def run(n: Int, bounded: Boolean): Long =
-      graft.queries.MessageReconstruct.getMessage(
-        spark.read.parquet(s"$base/if$n"), instanceMessage, uevolField,
-        if (bounded) Some(catalog) else None, _ => snap, target).count()
-    t("warmup (bounded 1x)")(run(1, bounded = true)); drop()
-    val b = arms.map(n => n -> minOf3(s"bounded ${n}x")(run(n, bounded = true))).toMap
-    val u = arms.map(n => n -> minOf3(s"unbounded ${n}x")(run(n, bounded = false))).toMap
-    println(f"${"q23_epoch_bound"}%-18s bounded 1x=${b(1)}%5.2f 100x=${b(100)}%5.2f " +
-      f"1000x=${b(1000)}%5.2f (flat = epoch-sized); " +
-      f"unbounded 1x=${u(1)}%5.2f 100x=${u(100)}%5.2f 1000x=${u(1000)}%5.2f " +
-      f"(grows with history)")
-    spark.stop()
-  }
-
-  /** Round-14 triangle skew probe: triangleStats on a HUB-HEAVY
-    * (power-law-ish) graph at 1x/10x edge volume — the regular-graph
-    * probe of round 13 cannot see orientation skew (every vertex has the
-    * same degree), and this is exactly the regime the (degree, id)
-    * orientation exists for. Targets are drawn as `h² div n` for uniform
-    * h, giving in-degree density ∝ 1/√k: node 0's degree is ~4√n (5.7k
-    * at 1x, 17.9k at 10x). Under the old raw-id orientation that hub —
-    * being the LOWEST id — would keep all its edges outgoing and
-    * materialize O(D²) = 32M/320M join candidates on one key; under the
-    * degree orientation its out-degree is 0 and every vertex is bounded
-    * by O(√E). A ~linear 1x→10x slope certifies the bound holds end to
-    * end.
-    */
-  private def runRound14TriangleSkewProbe(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    def minOf3(name: String)(f: => Long): Double =
-      (1 to 3).map { _ => val s = t(name)(f); drop(); s }.min
-    val base = "/tmp/graft_scale14tri"
-    def gen(nodes: Long): org.apache.spark.sql.DataFrame =
-      spark.range(nodes).select(col("id").as("src"))
-        .crossJoin(spark.range(4).select(col("id").as("o")))
-        .select(col("src"),
-          (pmod(col("src") * lit(1103515245L) + col("o") * lit(12345L)
-            + lit(7L), lit(nodes)) *
-            pmod(col("src") * lit(1103515245L) + col("o") * lit(12345L)
-              + lit(7L), lit(nodes))).divide(lit(nodes)).cast("long")
-            .as("dst"))
-        .where(col("src") =!= col("dst"))
-    val arms = Seq(("1x", 2_000_000L), ("10x", 20_000_000L))
-    arms.foreach { case (tag, n) =>
-      gen(n).write.mode("overwrite").parquet(s"$base/e$tag")
-    }
-    // report the hub skew the generator actually produced
-    arms.foreach { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      val d = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-        .groupBy("id").count()
-      println(s"skew $tag: " + d.agg(max("count"), count(lit(1))).collect().head)
-    }
-    val trT = arms.map { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      tag -> minOf3(s"triangles_skew $tag")(
-        graft.functions.GraphOps.triangleStats(e, "src", "dst").count())
-    }.toMap
-    println(f"${"tri_skew_slope"}%-18s 1x=${trT("1x")}%5.2f " +
-      f"10x=${trT("10x")}%5.2f (${trT("10x") / trT("1x")}%4.1fx)")
-  }
-
-  /** Round-15 hub-skew probes for LPA and k-core — the [[runRound14TriangleSkewProbe]]
-    * generator (in-degree density ∝ 1/√k, hub degree ~4√n: 5.7k at 1x,
-    * 17.9k at 10x), applied to the two operators whose per-round shuffles
-    * key on RAW node id: the LPA vote groups (dst, label) rows and the
-    * k-core peel recounts degree by dst, so the hub lands ~deg(hub) rows
-    * on one reducer per round. Unlike the triangle join (a D² candidate
-    * blowup the degree orientation had to fix), that is a COUNT bound —
-    * reducer work linear in hub degree — so wall time should track |E|
-    * ~linearly even as the hub grows with √n. A ~linear 1x→10x slope on
-    * the SAME skewed fixture certifies it the way round14tri certified
-    * the orientation; a super-linear one would say the vote needs a
-    * salted two-phase agg.
-    */
-  /** Shared probe statistic: min of 3 reps, registries + SQL cache
-    * dropped between reps, every rep printed — ONE definition for every
-    * probe arm so the statistic cannot drift between rounds.
-    */
-  private def probeMinOf3(spark: SparkSession)(name: String)
-                         (f: => Long): Double =
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      graft.CacheRegistry.releaseAll()
-      graft.Checkpoints.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-      s
-    }.min
-
-  /** THE hub-skew fixture (hub in-degree ~4√n via the `h² div n` target
-    * map), symmetrized on disk — one generator for every probe that
-    * reads `/tmp/graft_scale15hub`, so a parameter tweak cannot leave a
-    * stale fixture serving a probe that expects different skew.
-    */
-  private def writeHubFixture(spark: SparkSession, base: String,
-                              tag: String, nodes: Long): Unit = {
-    val h = pmod(col("src") * lit(1103515245L) + col("o") * lit(12345L)
-      + lit(7L), lit(nodes))
-    val e = spark.range(nodes).select(col("id").as("src"))
-      .crossJoin(spark.range(4).select(col("id").as("o")))
-      .select(col("src"), (h * h).divide(lit(nodes)).cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-    // symmetrized on disk (the undirected input contract of the peel and
-    // vote operators), so probes measure the operator, not the union
-    e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .write.mode("overwrite").parquet(s"$base/e$tag")
-  }
-
-  private def runRound15HubProbes(spark: SparkSession,
-                                  kcoreOnly: Boolean = false): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale15hub"
-    val arms = Seq(("1x", 2_000_000L), ("10x", 20_000_000L))
-    arms.foreach { case (tag, n) => writeHubFixture(spark, base, tag, n) }
-    arms.foreach { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      val d = e.groupBy(col("dst")).count()
-      println(s"skew $tag (max in-degree, nodes): " +
-        d.agg(max("count"), count(lit(1))).collect().head)
-    }
-    val lpaT = if (kcoreOnly) Map.empty[String, Double] else arms.map {
-      case (tag, _) =>
-        val e = spark.read.parquet(s"$base/e$tag")
-        tag -> minOf3(s"lpa_skew $tag")(
-          graft.functions.GraphOps.labelPropagation(e, "src", "dst",
-            iters = 3).count())
-    }.toMap
-    val kcT = arms.map { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      tag -> minOf3(s"kcore_skew $tag")(
-        graft.functions.GraphOps.kCore(e, "src", "dst", k = 3,
-          rounds = 3).count())
-    }.toMap
-    if (!kcoreOnly)
-      println(f"${"lpa_skew_slope"}%-18s 1x=${lpaT("1x")}%5.2f " +
-        f"10x=${lpaT("10x")}%5.2f (${lpaT("10x") / lpaT("1x")}%4.1fx)")
-    println(f"${"kcore_skew_slope"}%-18s 1x=${kcT("1x")}%5.2f " +
-      f"10x=${kcT("10x")}%5.2f (${kcT("10x") / kcT("1x")}%4.1fx)")
-  }
-
-  /** Round-16 hub-skew probe for [[graft.functions.GraphOps.kCoreWeighted]]
-    * — closes the round-15 family: the s-core recount SUMS weights by dst
-    * under the same (dst-keyed agg per peel round) pattern the unweighted
-    * peel uses, so the hub lands ~deg(hub) rows on one reducer per round
-    * with a sum instead of a count — still a linear-in-degree reducer
-    * bound, no pair blowup possible. A ~linear 1x→10x slope on the SAME
-    * skewed fixture (hub degree ~4√n) certifies it the way round15hub
-    * certified kCore; super-linear would say the strength recount needs a
-    * salted two-phase agg. Weights are a deterministic positive LCG hash
-    * in [1, 1e6] so the weighted path (decimal-ish long sums) is
-    * exercised at full width. Reuses the round15hub parquet fixture when
-    * present (generate with `round15hub` first or let this arm write it).
-    */
-  private def runRound16WeightedCoreProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale15hub"
-    val arms = Seq(("1x", 2_000_000L), ("10x", 20_000_000L))
-    arms.foreach { case (tag, n) =>
-      // reuses the round15hub fixture when present — safe ONLY because
-      // both arms call the ONE shared writeHubFixture generator
-      if (!new java.io.File(s"$base/e$tag/_SUCCESS").exists())
-        writeHubFixture(spark, base, tag, n)
-    }
-    val wcT = arms.map { case (tag, _) =>
-      // weight: positive LCG hash of the (src,dst) pair on the micro grid,
-      // symmetric by construction is NOT required (kCoreWeighted sums
-      // multi-edges per direction independently)
-      val e = spark.read.parquet(s"$base/e$tag")
-        .withColumn("w", pmod(col("src") * lit(2654435761L)
-          + col("dst") * lit(40503L), lit(1000000L)) + lit(1L))
-      tag -> minOf3(s"wcore_skew $tag")(
-        graft.functions.GraphOps.kCoreWeighted(e, "src", "dst", "w",
-          s = 3000000L, rounds = 3).count())
-    }.toMap
-    println(f"${"wcore_skew_slope"}%-18s 1x=${wcT("1x")}%5.2f " +
-      f"10x=${wcT("10x")}%5.2f (${wcT("10x") / wcT("1x")}%4.1fx)")
-  }
-
-  /** Round-17 slope for the DIRECTED containment join (d131/d157/d160
-    * family) — the one shuffle family added since round 14 without a
-    * ScaleStress arm. Fixture: per id-pair, the even doc's 10 unique
-    * words are a PREFIX of the odd doc's text (a genuine containment
-    * edge per pair), and every third doc carries a shared 5-word
-    * boilerplate tail — a skewed shingle appearing in n/3 docs. Claim
-    * under test: with the rarest-first (document-frequency) global
-    * order, boilerplate grams rank LAST per doc and never enter the
-    * probe-side prefix, so candidates form only on the per-pair unique
-    * grams — wall tracks n, never the n²/9 pair volume the shared gram
-    * would generate under a naive shingle equijoin (at 10x that naive
-    * volume is ~2.8e9 candidate pairs; linear slope = the prefix filter
-    * is doing its job under exactly the skew that defeats banding-free
-    * joins). Corpus is MATERIALIZED parquet so the slope measures the
-    * join, not the synthesis.
-    */
-  private def runRound17ContainmentProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale17contain"
-    def corpus(n: Long): DataFrame = {
-      val b = floor(col("id") / 2).cast("long")
-      val uniq = concat_ws(" ", transform(sequence(lit(0), lit(9)),
-        j => concat(lit("u"), b, lit("w"), j)))
-      val extras = concat_ws(" ", transform(sequence(lit(0), lit(7)),
-        j => concat(lit("x"), col("id"), lit("y"), j)))
-      val body = when(pmod(col("id"), lit(2)) === 1,
-        concat(uniq, lit(" "), extras)).otherwise(uniq)
-      val text = when(pmod(col("id"), lit(3)) === 0,
-        concat(body, lit(" common header boilerplate phrase shared")))
-        .otherwise(body)
-      spark.range(n).select(col("id").as("doc_id"), text.as("text"))
-    }
-    val arms = Seq(("1x", 50000L), ("10x", 500000L))
-    arms.foreach { case (tag, n) =>
-      if (!new java.io.File(s"$base/c$tag/_SUCCESS").exists()) {
-        val s0 = System.nanoTime()
-        corpus(n).write.mode("overwrite").parquet(s"$base/c$tag")
-        println(f"contain_synth $tag%-14s ${(System.nanoTime() - s0) / 1e9}%7.2f s (map-only)")
-      }
-    }
-    val res = arms.map { case (tag, _) =>
-      val c = spark.read.parquet(s"$base/c$tag")
-      tag -> minOf3(s"contain_join $tag")(
-        JaccardJoin.containmentPairs(c, "doc_id", "text", threshold = 0.6)
-          .count())
-    }.toMap
-    println(f"${"contain_slope"}%-18s 1x=${res("1x")}%5.2f " +
-      f"10x=${res("10x")}%5.2f (${res("10x") / res("1x")}%4.1fx)")
-  }
-
-  /** Banding slope for the perceptual-hash near-dup chain (d164/d167):
-    * synthetic image sketches at 1x/10x (50k/500k images — 10x/100x the
-    * sf0.1 image count; base image per id-pair, odd ids perturb one
-    * pixel like the driver row), the hamming banding over a MATERIALIZED
-    * (id, phash) parquet so the slope measures the band equijoin +
-    * verify, not the synthesis (which is map-only and timed once for the
-    * record). Claim under test: candidates form only via the 4×16-bit
-    * band equijoin (65536 buckets per band — at 500k images ~7.6
-    * sketches per bucket, ~15M raw band collisions), so wall tracks the
-    * collision load, never an all-pairs product.
-    */
-  private def runRound16PhashProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale16phash"
-    // THE d164 synthesis chain — the shared builder, not a copy, so the
-    // probe can never measure a different chain than the one benched
-    def phashFrame(n: Long): DataFrame =
-      graft.testqueries.PipelineQueries.phashed(
-        spark.range(n).select(col("id").as("doc_id")))
-    val arms = Seq(("1x", 50000L), ("10x", 500000L))
-    arms.foreach { case (tag, n) =>
-      if (!new java.io.File(s"$base/p$tag/_SUCCESS").exists()) {
-        val s0 = System.nanoTime()
-        phashFrame(n).write.mode("overwrite").parquet(s"$base/p$tag")
-        println(f"phash_synth $tag%-16s ${(System.nanoTime() - s0) / 1e9}%7.2f s (map-only)")
-      }
-    }
-    val res = arms.map { case (tag, _) =>
-      val ph = spark.read.parquet(s"$base/p$tag")
-      tag -> minOf3(s"phash_band $tag")(
-        SimHash.hammingPairs(ph, "doc_id", "phash", 64, maxHamming = 3)
-          .count())
-    }.toMap
-    println(f"${"phash_band_slope"}%-18s 1x=${res("1x")}%5.2f " +
-      f"10x=${res("10x")}%5.2f (${res("10x") / res("1x")}%4.1fx)")
-  }
-
-  /** Real-decode slope probe (round 18): the ImageIO decode stage now
-    * carries genuine per-row CPU (render-to-raster, not a header walk),
-    * so it gets priced like every other family — the SAME realPngs
-    * synthesis d170/d173 bench (shared builder, not a copy), blobs
-    * materialized to parquet first so the probe measures the DECODE
-    * stage, not the upstream encode. Both probe stages are map-only
-    * `mapPartitions` over the codec seam (no shuffle, no state), so the
-    * expected slope at 10× rows is ≤10× wall — super-linear would mean a
-    * per-partition lifecycle leak (codec re-open per row, temp-file
-    * churn) rather than a plan defect.
-    */
-  private def runRound18DecodeProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale18decode"
-    def blobFrame(n: Long): DataFrame =
-      graft.testqueries.PipelineQueries.realPngs(
-        spark.range(n).select(col("id").as("doc_id")))
-    val arms = Seq(("1x", 50000L), ("10x", 500000L))
-    arms.foreach { case (tag, n) =>
-      if (!new java.io.File(s"$base/p$tag/_SUCCESS").exists()) {
-        val s0 = System.nanoTime()
-        blobFrame(n).write.mode("overwrite").parquet(s"$base/p$tag")
-        println(f"png_synth $tag%-20s ${(System.nanoTime() - s0) / 1e9}%7.2f s (map-only encode)")
-      }
-    }
-    // stage 1: decode-to-dims (the d170 row's stage)
-    val dec = arms.map { case (tag, _) =>
-      val blobs = spark.read.parquet(s"$base/p$tag")
-      tag -> minOf3(s"imageio_decode $tag")(
-        graft.functions.Multimodal.decode(blobs, "doc_id", "blob",
-          graft.functions.Multimodal.ImageIoCodec).count())
-    }.toMap
-    println(f"${"imageio_decode_slope"}%-22s 1x=${dec("1x")}%6.2f " +
-      f"10x=${dec("10x")}%6.2f (${dec("10x") / dec("1x")}%4.1fx)")
-    // stage 2: decode + area-average thumbnail (the d173 row's decode
-    // stage; hash+band slope is the round16phash probe)
-    val thumb = arms.map { case (tag, _) =>
-      val blobs = spark.read.parquet(s"$base/p$tag")
-      tag -> minOf3(s"graythumb $tag")(
-        graft.functions.Multimodal.grayThumbs(blobs, "doc_id", "blob")
-          .count())
-    }.toMap
-    println(f"${"graythumb_slope"}%-22s 1x=${thumb("1x")}%6.2f " +
-      f"10x=${thumb("10x")}%6.2f (${thumb("10x") / thumb("1x")}%4.1fx)")
-  }
-
-  /** Round-19 streaming-STATE slope probe: the state store is the one
-    * engine component with no 1x→10x row in SCALE.md, and q50 exists
-    * precisely because a 100 TB census outgrows executor heaps — so its
-    * growth rate under the RocksDB provider IS the capacity plan. Runs
-    * the exact q42/q50 aggregation shape (withWatermark + 1-minute
-    * tumbling window + count, append mode, finite file source +
-    * StreamRunner lifecycle) while the WINDOWED STATE CARDINALITY
-    * (windows × keys = the store's row count) grows 10x with constant
-    * updates-per-state-row, under BOTH providers:
-    *
-    *  - 1x:  4,000 minutes × 20 keys =  80k state rows (400k input),
-    *  - 10x: 40,000 minutes × 20 keys = 800k state rows (4M input).
-    *
-    * One data batch puts every state row, the trailing no-data batch
-    * evicts and emits all closed windows — both halves of the store's
-    * per-row lifecycle are inside the timed region. Input rows scale
-    * with state (as they do in production), so the honest null
-    * hypothesis is ~10x wall; materially super-linear would mean
-    * per-row cost GROWING with store size (compaction debt, snapshot
-    * amplification) and sub-linear means fixed lifecycle overhead
-    * amortizing. The HDFS-provider twin prices the RocksDB premium at
-    * both scales.
-    */
-  private def runRound19StateProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale19state"
-    val keys = 20
-    val perCell = 5
-    val baseUs = 1700000040000000L // minute-aligned epoch µs
-    val arms = Seq(("1x", 4000L), ("10x", 40000L))
-    arms.foreach { case (tag, windows) =>
-      if (!new java.io.File(s"$base/s$tag/_SUCCESS").exists()) {
-        val n = windows * keys * perCell
-        spark.range(n).select(
-          (lit(baseUs) +
-            (col("id") / (keys * perCell)).cast("long") * lit(60000000L) +
-            pmod(col("id"), lit(perCell)) * lit(11000000L)).as("tus"),
-          pmod((col("id") / perCell).cast("long"), lit(keys))
-            .cast("int").as("k"))
-          .write.mode("overwrite").parquet(s"$base/s$tag")
-      }
-    }
-    def runArm(tag: String): Long = {
-      val schema = spark.read.parquet(s"$base/s$tag").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$base/s$tag")
-        .withColumn("ets", timestamp_micros(col("tus")))
-      graft.streaming.StreamRunner.runToBatch(
-        graft.streaming.UpdateStream.updateRates(stream, "ets",
-          watermark = "10 minutes", window = "1 minute", keyCol = "k"),
-        s"scale19_$tag").count()
-    }
-    Seq(("hdfs", false), ("rocksdb", true)).foreach { case (prov, rocks) =>
-      if (rocks) graft.GraftConf.enableRocksDbStateStore(spark)
-      try {
-        val t = arms.map { case (tag, _) =>
-          tag -> minOf3(s"state_$prov $tag")(runArm(tag))
-        }.toMap
-        println(f"${s"state_${prov}_slope"}%-22s 1x=${t("1x")}%6.2f " +
-          f"10x=${t("10x")}%6.2f (${t("10x") / t("1x")}%4.1fx)")
-      } finally if (rocks) graft.GraftConf.disableRocksDbStateStore(spark)
-    }
-  }
-
-  /** Dedup-state slope probe (late round 19, backing SCALE.md's
-    * streaming-dedup capacity note): `DocStream.dedupExact`
-    * (`dropDuplicatesWithinWatermark`) with the DISTINCT-FINGERPRINT
-    * state cardinality grown 1x -> 10x at constant duplicates-per-key
-    * (2 input rows per key: original + an in-horizon duplicate that must
-    * drop) and a CONSTANT 100-minute event-time span, so the
-    * evicted-fraction is scale-invariant. One data batch inserts every
-    * state row and drops every duplicate; the trailing no-data batch
-    * advances the watermark to max-10min and evicts all but the last
-    * ~20 minutes of keys — both halves of the store's per-row lifecycle
-    * (insert + evict) inside the timed region, min-of-3, both
-    * providers. The emitted count is the correctness signal: exactly
-    * one row per distinct key, every duplicate dropped.
-    */
-  private def runRound19DedupProbe(spark: SparkSession): Unit = {
-    def minOf3(name: String)(f: => Long): Double =
-      probeMinOf3(spark)(name)(f)
-    val base = "/tmp/graft_scale19dedup"
-    val baseUs = 1700000040000000L // minute-aligned epoch µs
-    val spanUs = 100L * 60000000L  // constant 100-minute span
-    val arms = Seq(("1x", 100000L), ("10x", 1000000L))
-    arms.foreach { case (tag, keys) =>
-      if (!new java.io.File(s"$base/s$tag/_SUCCESS").exists()) {
-        val spacing = spanUs / keys
-        spark.range(2 * keys).select(
-          concat(lit("t"), (col("id") / 2).cast("long").cast("string"))
-            .as("text"),
-          (lit(baseUs) + (col("id") / 2).cast("long") * lit(spacing) +
-            pmod(col("id"), lit(2)) * lit(1000L)).as("tus"))
-          .write.mode("overwrite").parquet(s"$base/s$tag")
-      }
-    }
-    def runArm(tag: String, keys: Long): Long = {
-      val schema = spark.read.parquet(s"$base/s$tag").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$base/s$tag")
-        .withColumn("ts", timestamp_micros(col("tus")))
-      val n = graft.streaming.StreamRunner.runToBatch(
-        graft.streaming.DocStream.dedupExact(stream, "ts",
-          watermark = "10 minutes").select("fp_hex"),
-        s"scale19d_$tag").count()
-      require(n == keys, s"dedup emitted $n rows, expected $keys")
-      n
-    }
-    Seq(("hdfs", false), ("rocksdb", true)).foreach { case (prov, rocks) =>
-      if (rocks) graft.GraftConf.enableRocksDbStateStore(spark)
-      try {
-        val t = arms.map { case (tag, keys) =>
-          tag -> minOf3(s"dedup_$prov $tag")(runArm(tag, keys))
-        }.toMap
-        println(f"${s"dedup_${prov}_slope"}%-22s 1x=${t("1x")}%6.2f " +
-          f"10x=${t("10x")}%6.2f (${t("10x") / t("1x")}%4.1fx)")
-      } finally if (rocks) graft.GraftConf.disableRocksDbStateStore(spark)
-    }
-  }
-
-  /** Graph-family slope probe (round 13): pageRank and triangleStats on a
-    * synthesized deterministic graph at 1x and 10x EDGE volume — both are
-    * per-iteration join+agg pipelines, so wall time should track |E|
-    * linearly; a super-linear slope would mean a corpus-sized cross
-    * product or a lineage blowup snuck in. Edges are materialized to
-    * parquet first so the probe measures the GRAPH operator, not the
-    * upstream generator.
-    */
-  private def runRound13GraphProbes(spark: SparkSession): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    def minOf3(name: String)(f: => Long): Double =
-      (1 to 3).map { _ => val s = t(name)(f); drop(); s }.min
-
-    val base = "/tmp/graft_scale13g"
-    // Deterministic pseudo-random regular digraph: 4 out-edges per node,
-    // targets by LCG hash mod n — same degree structure at every scale.
-    def gen(nodes: Long): org.apache.spark.sql.DataFrame =
-      spark.range(nodes).select(col("id").as("src"))
-        .crossJoin(spark.range(4).select(col("id").as("o")))
-        .select(col("src"), pmod(col("src") * lit(1103515245L)
-          + col("o") * lit(12345L) + lit(7L), lit(nodes)).as("dst"))
-        .where(col("src") =!= col("dst"))
-    val arms = Seq(("1x", 2_000_000L), ("10x", 20_000_000L))
-    arms.foreach { case (tag, n) =>
-      gen(n).write.mode("overwrite").parquet(s"$base/e$tag")
-    }
-    val prT = arms.map { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      tag -> minOf3(s"pagerank3 $tag")(
-        graft.functions.GraphOps.pageRank(e, "src", "dst", iters = 3).count())
-    }.toMap
-    val trT = arms.map { case (tag, _) =>
-      val e = spark.read.parquet(s"$base/e$tag")
-      tag -> minOf3(s"triangles $tag")(
-        graft.functions.GraphOps.triangleStats(e, "src", "dst").count())
-    }.toMap
-    println(f"${"graph_slope"}%-18s pagerank 1x=${prT("1x")}%5.2f " +
-      f"10x=${prT("10x")}%5.2f (${prT("10x") / prT("1x")}%4.1fx); " +
-      f"triangles 1x=${trT("1x")}%5.2f 10x=${trT("10x")}%5.2f " +
-      f"(${trT("10x") / trT("1x")}%4.1fx)")
-  }
-
-  /** 10× slope probe for the round-13 second batch: the peel/vote/score
-    * graph family on the same deterministic regular digraph as
-    * [[runRound13GraphProbes]] (symmetrized — the operators' contract),
-    * and the census meters on a synthetic multi-domain frame. Modularity
-    * scores a plan-literal `id mod 1024` assignment so the probe measures
-    * the SCORE's edge passes, not a vote chain.
-    */
-  private def runRound13bProbes(spark: SparkSession, full: Boolean): Unit = {
-    def t(name: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${s}%7.2f s  rows=$rows")
-      s
-    }
-    def drop(): Unit = {
-      graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // min-of-2 after one discarded warm-up rep: the graph arms are big
-    // enough (8M/80M sym edges) that a third rep buys little beyond JIT
-    def minOf3(name: String)(f: => Long): Double = {
-      t(s"$name warmup")(f); drop()
-      (1 to 2).map { _ => val s = t(name)(f); drop(); s }.min
-    }
-
-    val base = "/tmp/graft_scale13b"
-    def gen(nodes: Long): org.apache.spark.sql.DataFrame =
-      spark.range(nodes).select(col("id").as("src"))
-        .crossJoin(spark.range(4).select(col("id").as("o")))
-        .select(col("src"), pmod(col("src") * lit(1103515245L)
-          + col("o") * lit(12345L) + lit(7L), lit(nodes)).as("dst"))
-        .where(col("src") =!= col("dst"))
-    val arms = Seq(("1x", 1_000_000L), ("10x", 10_000_000L))
-    arms.foreach { case (tag, n) =>
-      val e = gen(n)
-      e.union(e.select(col("dst"), col("src")))
-        .write.mode("overwrite").parquet(s"$base/e$tag")
-    }
-    def edges(tag: String) = spark.read.parquet(s"$base/e$tag")
-    val results = (if (!full) Seq.empty else Seq(
-      "kcore3" -> arms.map { case (tag, _) => tag -> minOf3(s"kcore3 $tag")(
-        graft.functions.GraphOps.kCore(edges(tag), "src", "dst",
-          k = 3, rounds = 3).count()) }.toMap,
-      "lpa3" -> arms.map { case (tag, _) => tag -> minOf3(s"lpa3 $tag")(
-        graft.functions.GraphOps.labelPropagation(edges(tag), "src", "dst",
-          iters = 3).count()) }.toMap,
-      "modularity" -> arms.map { case (tag, n) =>
-        val assign = spark.range(n).select(col("id"),
-          pmod(col("id"), lit(1024L)).as("community"))
-        tag -> minOf3(s"modularity $tag")(
-          graft.functions.GraphOps.modularity(edges(tag), "src", "dst",
-            assign, "id", "community").count()) }.toMap)) ++ Seq(
-      "assortativity" -> arms.map { case (tag, _) =>
-        tag -> minOf3(s"assortativity $tag")(
-          graft.functions.GraphOps.degreeAssortativity(edges(tag),
-            "src", "dst").count()) }.toMap)
-    // census meters over a synthetic (id, dom, axis2) frame: 1024 domains,
-    // 97 second-axis values — census sizes fixed while rows scale 10x
-    def doms(rows: Long) = spark.range(rows).select(
-      pmod(col("id"), lit(1024L)).cast("string").as("dom"),
-      pmod(col("id"), lit(97L)).cast("string").as("ax2"))
-    val meterArms = Seq(("1x", 5_000_000L), ("10x", 50_000_000L))
-    val meters = Seq(
-      "mixture_entropy" -> meterArms.map { case (tag, n) =>
-        tag -> minOf3(s"mixture_entropy $tag")(
-          graft.functions.Sampling.mixtureEntropy(doms(n), "dom").count())
-      }.toMap,
-      "mutual_information" -> meterArms.map { case (tag, n) =>
-        tag -> minOf3(s"mutual_information $tag")(
-          graft.functions.Sampling.mutualInformation(doms(n), "dom", "ax2")
-            .count()) }.toMap,
-      "jensen_shannon" -> meterArms.map { case (tag, n) =>
-        tag -> minOf3(s"jensen_shannon $tag")(
-          graft.functions.Sampling.jensenShannon(
-            doms(n).where(col("ax2") === "0"),
-            doms(n).where(col("ax2") === "1"), "dom").count()) }.toMap)
-    (results ++ meters).foreach { case (name, m) =>
-      println(f"$name%-18s 1x=${m("1x")}%6.2f 10x=${m("10x")}%6.2f " +
-        f"(${m("10x") / m("1x")}%4.1fx)")
-    }
   }
 }

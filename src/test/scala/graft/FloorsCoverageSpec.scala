@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Bench now emits machine-computed flags from this dict
   * (BENCH_DETAIL.json `flags`); this spec makes an incomplete dict a
   * TEST FAILURE instead of a silent adjudication gap: adding a query
-  * without measuring its ProfileR11 iso floor, or renaming one without
+  * without measuring its floor (`runMain graft.tools.Profile
+  * /root/testdata/sf0.1 <name>`), or renaming one without
   * moving its floor, fails the suite.
   */
 class FloorsCoverageSpec extends AnyFunSuite {
@@ -37,7 +38,8 @@ class FloorsCoverageSpec extends AnyFunSuite {
     val queryKeys = SparkEntry.queries.keySet
     val missing = queryKeys -- floorKeys
     assert(missing.isEmpty,
-      s"queries with NO floor (measure ProfileR11 iso pairs, add to " +
+      s"queries with NO floor (measure two `runMain graft.tools.Profile " +
+        s"/root/testdata/sf0.1 <name>` runs, add the min steady/cold to " +
         s"BASELINE_RUNS.json floors): ${missing.toSeq.sorted.mkString(", ")}")
     val orphans = floorKeys -- queryKeys
     assert(orphans.isEmpty,

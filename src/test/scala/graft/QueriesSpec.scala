@@ -500,12 +500,12 @@ class DriverQueryPlanSpec extends SparkSpec {
     val df = SparkEntry.queries("q43_locf_grid")(
       spark, "/root/testdata/sf0.001")
     val opt = df.queryExecution.optimizedPlan
-    // measured round 10 (tools/ProfileQ43): unpersisted wins 2.3-2.8x at
-    // sf0.1 AND 10x, because the bounds branch only reads dedup's group
-    // keys and Catalyst prunes its max_by away — assert both halves of
-    // that adjudication so a regression reopens the question loudly
+    // measured (BASELINE.md, "q43 LOCF grid ships unpersisted"):
+    // unpersisted wins 2.3-2.8x at sf0.1 AND 10x, because the bounds
+    // branch only reads dedup's group keys and Catalyst prunes its max_by
+    // away — assert both halves so a regression reopens the question loudly
     assert(opt.collect { case r: InMemoryRelation => r }.isEmpty,
-      s"locfGrid must not persist (ProfileQ43 adjudication):\n$opt")
+      s"locfGrid must not persist (recompute measured 2.3-2.8x faster):\n$opt")
     val maxBys = opt.toString.sliding("max_by".length).count(_ == "max_by")
     assert(maxBys === 1,
       s"expected the bounds branch to prune the max_by dedup (1 max_by in plan), got $maxBys:\n$opt")

@@ -48,7 +48,6 @@ class SpreadSpec extends SparkSpec {
     // whose re-spread bloated d12's plan 194 -> 676 Exchanges in r19
     val cp = narrowScan(50).localCheckpoint(true)
     assert(Spread.toCores(cp) eq cp)
-    assert(Spread.toCoresIfNarrowScan(cp) eq cp)
     // in-memory local relation
     import spark.implicits._
     val local = Seq((1L, "a")).toDF("id", "t")
@@ -58,28 +57,11 @@ class SpreadSpec extends SparkSpec {
   test("exchange-rooted frames pass through untouched (same instance)") {
     // probing these would materialize their AQE stages at plan time
     val joined = narrowScan(50).join(narrowScan(50), "id").coalesce(1)
-    assert(Spread.toCoresIfNarrowScan(joined) eq joined)
+    assert(Spread.toCores(joined) eq joined)
     // an input the caller already repartitioned fails the narrow test too
     val wide = narrowScan(100)
       .repartition(spark.sparkContext.defaultParallelism + 2)
     assert(Spread.toCores(wide) eq wide)
-  }
-
-  test("malformed spread.parts degrades to default parallelism") {
-    spark.conf.set("spark.graft.spread.parts", "not-a-number")
-    try {
-      val spread = Spread.toCores(narrowScan(100))
-      assert(spread.rdd.getNumPartitions ==
-        spark.sparkContext.defaultParallelism)
-    } finally spark.conf.unset("spark.graft.spread.parts")
-  }
-
-  test("spread.enabled is case-insensitive") {
-    spark.conf.set("spark.graft.spread.enabled", "FALSE")
-    try {
-      val df = narrowScan(100)
-      assert(Spread.toCores(df) eq df)
-    } finally spark.conf.unset("spark.graft.spread.enabled")
   }
 
   test("set-oriented results are identical with and without the spread") {
