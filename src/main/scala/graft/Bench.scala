@@ -86,13 +86,15 @@ object Bench {
     * `sampleTOff` are the samples' start offsets and `tOff` the query's;
     * `preBytes` is what the query parked in the block manager after the
     * cold run, `resBytes`/`resRdds` what survived every release;
-    * `acctDelta` is the [[Acct]] delta over all four samples.
+    * `acctDelta` is the [[Acct]] delta over all four samples; `error` is
+    * the first failing sample's exception as "Class: message".
     */
   final case class QBench(name: String, steady: Double, cold: Double,
                           runs: Seq[Double], spread: Double, tOff: Double,
                           sampleTOff: Seq[Double],
                           preBytes: Long, resBytes: Long, resRdds: Int,
-                          acctDelta: Seq[Long], stream: Seq[String]) {
+                          acctDelta: Seq[Long], stream: Seq[String],
+                          error: Option[String]) {
     /** A sample that threw times as -1, which can never trip a flag — so
       * a failure is reported by name instead. */
     def failed: Boolean = steady < 0 || cold < 0
@@ -148,11 +150,17 @@ object Bench {
               fn: (SparkSession, String) => DataFrame,
               t0: Long = System.nanoTime()): QBench = {
     def tNow(): Double = (System.nanoTime() - t0) / 1e9
-    // a failed query must not masquerade as a fast one: report -1
+    // a failed query must not masquerade as a fast one: report -1 and
+    // keep what it threw; a fatal error (OOM) ends the run instead
+    var error: Option[String] = None
     def timeOnce(): Double = {
       val s = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - s) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          if (error.isEmpty) error = Some(s"${e.getClass.getName}: ${e.getMessage}")
+          -1.0
+      }
     }
     val tOff = tNow()
     drainListenerBus(spark)
@@ -183,7 +191,7 @@ object Bench {
     QBench(name, steady, cold, runs, spread, tOff, sampleT.toSeq,
       preBytes, resBytes, resRdds,
       acct1.zip(acct0).map { case (a, b) => a - b },
-      graft.streaming.StreamMetrics.drain())
+      graft.streaming.StreamMetrics.drain(), error)
   }
 
   /** CPU-availability calibration probe: a fixed single-thread xorshift
@@ -416,6 +424,9 @@ object Bench {
       "cold" -> flagJson(coldFlagged, _.cold),
       "floors_missing" -> Json.strings(floorsMissing),
       "failed" -> Json.strings(failedRuns),
+      // what each query with a failing sample threw, "Class: message"
+      "errors" -> Json.fields(results.flatMap(q =>
+        q.error.map(e => q.name -> Json.text(e)))),
       "floor_total_steady" -> Json.num3(floorTotalSteady),
       "floor_total_cold" -> Json.num3(floorTotalCold),
       "environment" -> Json.text(envNote)))

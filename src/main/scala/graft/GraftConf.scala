@@ -28,8 +28,8 @@ object GraftConf {
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
   /** `file:` scheme served by [[graft.io.NioLocalFileSystem]] — the
-    * shell-fork-free local filesystem (r19 optimization; see that class's
-    * scaladoc for the measurements). Apply wherever the session touches
+    * shell-fork-free local filesystem (see that class's scaladoc for the
+    * measured fork cost it removes). Apply wherever the session touches
     * local scratch (checkpoints, WorkDirs fixtures, catalog artifacts) on
     * a JVM without the Hadoop native library; deployments whose `file:`
     * access is negligible (HDFS/S3 checkpoints) can skip it — results
@@ -135,7 +135,9 @@ object GraftConf {
     }
 }
 
-/** The one materialization seam for per-superstep lineage truncation. */
+/** The one materialization seam for per-superstep lineage truncation
+  * ([[graft.ops.Superstep]] truncates through it).
+  */
 object Checkpoints {
 
   // Block-holding RDDs behind localCheckpoint'd frames. localCheckpoint
@@ -144,19 +146,26 @@ object Checkpoints {
   // they die only when the ContextCleaner notices the RDD object was
   // GC'd, which on a large-heap driver can be tens of minutes after the
   // frame is dead (spark.cleaner.periodicGC.interval defaults to 30 min).
-  // Round 14's bench measured exactly that: graph queries alphabetically
-  // early in the run parked GB of dead superstep blocks in the block
-  // manager, and the mid-run d38-d57 window paid for them in storage
-  // eviction churn. Tracking here makes the blocks explicitly releasable.
+  // The bench measured exactly that: graph queries early in the run
+  // parked GB of dead superstep blocks in the block manager, and later
+  // queries paid for them in storage eviction churn (BASELINE.md). Tracking
+  // here makes the blocks explicitly releasable.
   private val localFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** The block-holding RDD behind a frame produced by [[eager]]'s
-    * localCheckpoint path: its analyzed plan is a `LogicalRDD` whose
-    * `rdd` field is the persisted internal-row RDD. Accessed
-    * reflectively — `LogicalRDD` lives in `org.apache.spark.sql.execution`
-    * and is not API — with a None fallback (tracking is then skipped and
-    * behavior degrades to GC-driven release, never an error).
+  // Reliable-checkpoint file-sets by the frame's row RDD: without
+  // spark.cleaner.referenceTracking.cleanCheckpoints their files live for
+  // the app's lifetime, one copy per superstep; [[release]] deletes them.
+  private val reliableFiles =
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.rdd.RDD[_], String]()
+
+  /** The row RDD behind a frame produced by [[eager]]: its analyzed plan
+    * is a `LogicalRDD` whose `rdd` field is the localCheckpoint'd RDD (or,
+    * on the reliable path, the row conversion over the checkpointed RDD).
+    * Accessed reflectively — `LogicalRDD` lives in
+    * `org.apache.spark.sql.execution` and is not API — with a None
+    * fallback (tracking is then skipped and behavior degrades to
+    * GC-driven release, never an error).
     */
   private def blockRdd(cp: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     try {
@@ -176,15 +185,13 @@ object Checkpoints {
     * The reliable path persists the physical RDD BEFORE materializing:
     * `RDD.checkpoint` writes its files in a SEPARATE job after the first
     * action, which would otherwise re-run the superstep's whole plan a
-    * second time — the cached blocks feed the write job, then free (the
-    * [[functions.MinHashLSH.clustersStar]] pattern, shared here so every
-    * iterative operator gets it instead of re-deriving it).
+    * second time — the cached blocks feed the write job, then free.
     *
-    * Local-path frames are tracked: release one explicitly with
-    * [[release]] (iterative operators call it on the superseded superstep
-    * as soon as the next one materializes, bounding live blocks per query
-    * to ~2 supersteps), and drain the rest with [[releaseAll]] once the
-    * query's result is consumed (Bench does, between queries).
+    * Every frame is tracked: release one explicitly with [[release]]
+    * (the superstep loop calls it on the superseded round as soon as the
+    * next one materializes, bounding live state per query to ~2 rounds),
+    * and drain the rest with [[releaseAll]] once the query's result is
+    * consumed (Bench and Verify do, between queries).
     */
   def eager(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -194,7 +201,9 @@ object Checkpoints {
       rdd.checkpoint()
       rdd.count() // one job computes + feeds the checkpoint write
       rdd.unpersist(false)
-      spark.createDataFrame(rdd, df.schema)
+      val cp = spark.createDataFrame(rdd, df.schema)
+      for (f <- rdd.getCheckpointFile; r <- blockRdd(cp)) reliableFiles.put(r, f)
+      cp
     } else {
       val cp = df.localCheckpoint(true)
       blockRdd(cp).foreach(localFrames.add)
@@ -202,24 +211,31 @@ object Checkpoints {
     }
   }
 
-  /** Free the blocks behind a frame [[eager]] produced, now — not at the
-    * next JVM GC. ONLY for frames that are fully dead: a released frame
-    * (and anything lazily derived from it) fails on its next action,
-    * because the truncated lineage cannot recompute. The iterative loops
-    * call this on superstep t once superstep t+1 has materialized; t+1's
-    * plan roots in its OWN blocks, so t is unreferenced by construction.
-    * No-op for reliable-checkpoint frames (their blocks were already
-    * dropped in [[eager]]; files are governed by the ContextCleaner under
-    * [[GraftConf.builderConf]]'s cleanCheckpoints).
+  /** Free what backs a frame [[eager]] produced, now — not at the next
+    * JVM GC: localCheckpoint blocks, or a reliable checkpoint's files.
+    * ONLY for frames that are fully dead: a released frame (and anything
+    * lazily derived from it) fails on its next action, because the
+    * truncated lineage cannot recompute. The superstep loop calls this on
+    * round t once round t+1 has materialized; t+1's plan roots in its OWN
+    * blocks or files, so t is unreferenced by construction. No-op for a
+    * frame [[eager]] did not produce.
     */
   def release(cp: DataFrame): Unit =
     blockRdd(cp).foreach { r =>
       localFrames.remove(r)
       try r.unpersist(true)
       catch { case scala.util.control.NonFatal(_) => () }
+      Option(reliableFiles.remove(r)).foreach(deleteFiles(r, _))
     }
 
-  /** Unpersist every tracked localCheckpoint RDD and empty the registry.
+  private def deleteFiles(r: org.apache.spark.rdd.RDD[_], dir: String): Unit =
+    try {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(r.sparkContext.hadoopConfiguration).delete(p, true)
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Release every tracked frame — unpersist each localCheckpoint RDD,
+    * delete each reliable checkpoint's files — and empty the registry.
     * Call once per query AFTER its result is fully consumed (the
     * [[CacheRegistry.releaseAll]] contract — and the same caveat: not
     * safe while a graft query is mid-execution). Blocking, for the same
@@ -231,6 +247,9 @@ object Checkpoints {
       try r.unpersist(true)
       catch { case scala.util.control.NonFatal(_) => () }
       r = localFrames.poll()
+    }
+    reliableFiles.keySet.forEach { r =>
+      Option(reliableFiles.remove(r)).foreach(deleteFiles(r, _))
     }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Superstep
+
 /** Distributed graph centrality over edge DataFrames.
   *
   * A training-data pipeline meets graphs twice: the near-dup similarity
@@ -67,21 +69,19 @@ object GraphOps {
     * nodes. The degree-fused edge table and the node set are computed once
     * and persisted (the S4 reuse rule — every iteration reads both); the
     * scalar N rides along as a broadcast 1-row crossJoin, never a driver
-    * collect. Lineage is truncated through [[graft.Checkpoints.eager]]
-    * (reliable checkpoint under [[graft.GraftConf]], localCheckpoint in
-    * local mode) every `checkpointEvery` iterations — at deep iteration counts the
-    * accumulated join-over-join plan otherwise grows without bound (the
-    * same cliff [[MinHashLSH.clustersStar]] hit in round 10).
-    * With `danglingMass = true` the rank vector is read twice per round
-    * (contrib join + dangle sum), so EVERY round MATERIALIZES. Under
-    * RELIABLE checkpoints ([[graft.GraftConf]]) intermediate rounds use
-    * a cache-only persist and only the `checkpointEvery` cadence writes
-    * a checkpoint file-set — O(iters/cadence) file-sets, not one per
-    * round; in local mode every dangling round localCheckpoints (the
-    * cheap materialization there — measured, see the round-15 floor
-    * note). Superseded intermediates (persists and checkpoint blocks
-    * alike) are released as soon as their successor materializes — live
-    * state is O(1) rounds either way.
+    * collect. The rounds run through [[graft.ops.Superstep]], which
+    * truncates lineage every `checkpointEvery` rounds — at deep iteration
+    * counts the accumulated join-over-join plan otherwise grows without
+    * bound, the cliff [[MinHashLSH.clustersStar]] measured (75 s of
+    * analysis for an 11-node chain). With `danglingMass = true` the rank
+    * vector is read twice per round (contrib join + dangle sum), so EVERY
+    * round but the last MATERIALIZES: in local mode by a localCheckpoint
+    * (the cheap materialization there, see the inline measurement), and
+    * under RELIABLE checkpoints ([[graft.GraftConf]]) by a cache-only
+    * persist, with only the `checkpointEvery` cadence writing a file-set
+    * — O(iters/cadence) file-sets, not one per round. Superseded rounds
+    * are released as soon as their successor materializes — live state is
+    * O(1) rounds either way.
     *
     * Returns one row per node: (id, rank_ppb) — rank scaled by 10^9,
     * summing to ≤ 10^9 (truncation loses ≤ 1 ppb per edge per round).
@@ -110,12 +110,7 @@ object GraphOps {
     // to the uniform `r div deg` split, so one loop serves both. Weights
     // must fit the product bound r·w < 2^63: r ≤ 10^9, so w ≤ ~9·10^9 —
     // micro-scaled similarities (≤ 10^6) are far inside it.
-    val e = weightCol match {
-      case Some(w) => edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"), col(w).cast("long").as("__w"))
-      case None => edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"), lit(1L).as("__w"))
-    }
+    val e = weightedEnds(edges, srcCol, dstCol, weightCol)
     // Out-weight fused onto each edge ONCE — re-deriving it per iteration
     // would re-shuffle the full edge table every round. A whole-partition
     // window sum (no orderBy → full-frame), NOT groupBy+self-join: the
@@ -165,16 +160,16 @@ object GraphOps {
           ("CASE WHEN __sd IS NOT NULL THEN __ns" +
             " ELSE CAST(0 AS BIGINT) END AS __dden"))
     }
-    // Dangling FLAG fused onto the node table (r20, guide §2.4 "remove
-    // shuffles outright"): the per-round dangle sum previously SEMI-JOINED
-    // the rank vector against a separately persisted dangling-node set —
-    // one join (+ its exchange and broadcast build) inside every round's
-    // scalar subtree. "No out-edges" is a pure function of the edge set,
-    // so it is computed ONCE here (one left join at node-table build) and
-    // carried as a 0/1 column through every round's rank vector; the
-    // round's dangle sum becomes a scan-agg over the already-materialized
-    // r. Σ __r over __dang=1 rows ≡ Σ __r semi-joined against
-    // (nodes ∖ out-edge sources) — the exact same node set.
+    // Dangling FLAG fused onto the node table, which removes a shuffle per
+    // round: a per-round dangle sum that SEMI-JOINS the rank vector
+    // against a separately persisted dangling-node set pays one join (+ its
+    // exchange and broadcast build) inside every round's scalar subtree.
+    // "No out-edges" is a pure function of the edge set, so it is computed
+    // ONCE here (one left join at node-table build) and carried as a 0/1
+    // column through every round's rank vector; the round's dangle sum
+    // becomes a scan-agg over the already-materialized r. Σ __r over
+    // __dang=1 rows ≡ Σ __r semi-joined against (nodes ∖ out-edge
+    // sources) — the exact same node set.
     val ntd = if (danglingMass) {
       val srcs = ed.select(col("__src").as("__id")).distinct()
         .withColumn("__hasout", lit(1))
@@ -184,82 +179,47 @@ object GraphOps {
         .drop("__hasout")
     } else nt
     val nodes = graft.CacheRegistry.track(ntd.persist(disk))
-    var r =
+    val init =
       if (danglingMass)
         nodes.select(col("__id"), col("__init").as("__r"), col("__dang"))
       else nodes.select(col("__id"), col("__init").as("__r"))
-    // the latest eager'd rank frame: superseded ones are released as soon
-    // as their successor materializes (successor roots in its OWN blocks),
-    // so live checkpoint blocks stay O(1) supersteps per query instead of
-    // O(iters) — the round-14 bench measured the O(iters) residue of dead
-    // localCheckpoint blocks as mid-run storage pressure
-    var rCp: DataFrame = null
-    var rMat: Option[DataFrame] = None
-    def dropMat(): Unit = {
-      rMat.foreach(f =>
-        try f.unpersist(true)
-        catch { case scala.util.control.NonFatal(_) => () })
-      rMat = None
-    }
-    def truncate(frame: DataFrame): DataFrame = {
-      val cp = graft.Checkpoints.eager(frame)
-      if (rCp != null) graft.Checkpoints.release(rCp)
-      rCp = cp
-      dropMat()
-      cp
-    }
-    for (t <- 1 to iters) {
+    def step(r: DataFrame): DataFrame = {
       val sums = ed.join(r, col("__src") === col("__id"))
         .selectExpr("__dst", "(__r * __w) div __tw AS __c")
         .groupBy("__dst").agg(sum("__c").as("__s"))
-      r =
-        if (danglingMass) {
-          // dangle sum: scan-agg over the materialized rank vector via the
-          // fused flag — no join; value identical to the former semi-join
-          val dRow = broadcast(r.agg(
-            coalesce(sum(when(col("__dang") === 1L, col("__r"))), lit(0L))
-              .cast("long").as("__dangle")))
-          nodes.join(sums, nodes("__id") === sums("__dst"), "left")
-            .crossJoin(dRow)
-            .selectExpr("__id",
-              ("__tele + (85 * (coalesce(__s, CAST(0 AS BIGINT))" +
-                " + CASE WHEN __dden > 0 THEN __dangle div __dden" +
-                " ELSE CAST(0 AS BIGINT) END)) div 100 AS __r"),
-              "__dang")
-        } else {
-          nodes.join(sums, nodes("__id") === sums("__dst"), "left")
-            .selectExpr("__id",
-              "__tele + (85 * coalesce(__s, CAST(0 AS BIGINT))) div 100 AS __r")
-        }
-      // dangling mode reads r twice per round (contrib join + dangle
-      // sum): MATERIALIZE each round or the recompute tree doubles. HOW
-      // to materialize depends on the deployment: under RELIABLE
-      // checkpoints a per-round file-set write is the cost to avoid, so
-      // intermediate rounds use a cache-only persist and only the
-      // checkpointEvery cadence truncates (one file-set per cadence);
-      // in local mode localCheckpoint IS the cheap materialization
-      // (measured: the persist+count variant ran d146 2.7x slower at
-      // bench scale — columnar cache encode + full-tree re-planning per
-      // round vs a raw block write), so every dangling round truncates
-      // there, tracked and released as before.
-      if (t < iters) {
-        val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-        if (t % checkpointEvery == 0) r = truncate(r)
-        else if (danglingMass && !reliable) r = truncate(r)
-        else if (danglingMass) {
-          val p = r.persist(disk)
-          p.count()
-          dropMat()
-          rMat = Some(p)
-          r = p
-        }
+      if (danglingMass) {
+        // dangle sum: scan-agg over the materialized rank vector via the
+        // fused flag — no join
+        val dRow = broadcast(r.agg(
+          coalesce(sum(when(col("__dang") === 1L, col("__r"))), lit(0L))
+            .cast("long").as("__dangle")))
+        nodes.join(sums, nodes("__id") === sums("__dst"), "left")
+          .crossJoin(dRow)
+          .selectExpr("__id",
+            ("__tele + (85 * (coalesce(__s, CAST(0 AS BIGINT))" +
+              " + CASE WHEN __dden > 0 THEN __dangle div __dden" +
+              " ELSE CAST(0 AS BIGINT) END)) div 100 AS __r"),
+            "__dang")
+      } else {
+        nodes.join(sums, nodes("__id") === sums("__dst"), "left")
+          .selectExpr("__id",
+            "__tele + (85 * coalesce(__s, CAST(0 AS BIGINT))) div 100 AS __r")
       }
     }
-    // the LAST intermediate persist backs the returned frame's lineage:
-    // hand it to CacheRegistry so the caller's standard releaseAll
-    // discipline frees it (Verify/Bench between queries)
-    rMat.foreach(graft.CacheRegistry.track(_))
-    r.selectExpr("__id AS id", "__r AS rank_ppb")
+    // Dangling mode reads r twice per round (contrib join + dangle sum),
+    // so every round but the last is materialized. Locally a
+    // localCheckpoint is the cheap materialization (a persist + count
+    // measured d146 2.7x slower at bench scale: columnar cache encode
+    // plus full-tree re-planning per round, vs a raw block write), so
+    // every round truncates; under reliable checkpoints a file-set write
+    // per round is the cost to avoid, so rounds persist and only the
+    // `checkpointEvery` cadence writes files. The last round stays lazy:
+    // the caller's action computes it.
+    val reliable = graft.GraftConf.reliableCheckpointsEnabled(edges.sparkSession)
+    val every = if (danglingMass && !reliable) 1 else checkpointEvery
+    val r = Superstep.iterate("pageRank", init, iters - 1,
+      truncateEvery = every, readsTwice = danglingMass)(step).frame
+    step(r).selectExpr("__id AS id", "__r AS rank_ppb")
   }
 
   /** Fixed-round k-core peel (Seidman 1983) of an undirected graph — the
@@ -270,84 +230,53 @@ object GraphOps {
     * first rounds) — a sharper structural gate than [[triangleStats]]'
     * one-row census, per node instead of global.
     *
-    * One peel round: restrict edges to pairs whose BOTH endpoints
-    * survived the previous round (two semi joins on the persisted edge
-    * table), recount degrees (one keyed agg), keep nodes with degree ≥ k.
-    * Rounds are FIXED like [[labelPropagation]] — the output after R
+    * Rounds are FIXED like [[labelPropagation]]: the output after R
     * rounds is the R-round peel (a superset of the true k-core that
-    * equals it once peeling stabilizes, which the spec checks on its
-    * fixtures by comparing R and R+1) and a pure integer function of the
-    * edge set, replayable by any engine as R unrolled restrict-count
-    * rounds. Per round the surviving edge set only shrinks, so the
-    * shuffle budget is monotonically decreasing; the round's node-sized
-    * degree table is materialized eagerly ([[graft.Checkpoints.eager]]) because
-    * BOTH next-round semi joins and the loop exit read it — lazy, the
-    * recompute tree doubles per round. Pass a symmetrized edge list.
-    * For peel-to-fixpoint semantics see [[kCoreConverged]].
+    * equals it once peeling stabilizes) and a pure integer function of
+    * the edge set, replayable by any engine as R unrolled restrict-count
+    * rounds. Duplicate (src, dst) rows count once; self loops drop. Pass
+    * a symmetrized edge list. The round plan is [[peel]]'s; for
+    * peel-to-fixpoint semantics see [[kCoreConverged]].
     *
     * Returns (id, degree) for nodes surviving round R — degree counted
     * in the round-R restricted graph.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int = 3): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(rounds >= 1 && rounds <= 100, s"rounds=$rounds out of [1,100]")
-    val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .where(col("__src") =!= col("__dst"))
-        .distinct().persist(disk))
-    var surv = e.select(col("__src").as("__id")).distinct()
-    var deg: DataFrame = null
-    for (t <- 1 to rounds) {
-      val rs = e.join(surv, e("__src") === surv("__id"), "left_semi")
-      val rd = rs.join(surv, rs("__dst") === surv("__id"), "left_semi")
-      // deg is MATERIALIZED each round (Checkpoints.eager): the next
-      // round reads surv TWICE (both endpoint semi joins) and the loop
-      // exit reads deg again — left lazy, the recompute tree would double
-      // per round (2^rounds plans), the Pregel-superstep lesson. Node-
-      // sized, so the materialization is the cheapest step of the round.
-      // The superseded round's blocks are released immediately — the new
-      // frame roots in its own blocks, so round t-1 is dead once t lands.
-      val nd = graft.Checkpoints.eager(
-        rd.groupBy("__src").agg(count(lit(1)).cast("long").as("__d")))
-      if (deg != null) graft.Checkpoints.release(deg)
-      deg = nd
-      surv = deg.where(col("__d") >= k).select(col("__src").as("__id"))
-    }
-    deg.where(col("__d") >= k).selectExpr("__src AS id", "__d AS degree")
-  }
+            k: Int, rounds: Int = 3): DataFrame =
+    peel("kCore", edges, srcCol, dstCol, None, k, rounds, converge = false)
 
-  /** [[kCore]] that peels until the survivor set STABILIZES (the true
-    * k-core, Matula & Beck 1983's algorithm distributed) or `maxRounds`
-    * is reached. Peeling is monotone — each round's survivor set is a
-    * subset of the previous round's — so "survivor count unchanged"
-    * is an EXACT fixpoint test (count equality on nested sets is set
-    * equality), one 1-row driver scalar per round. And because rounds
-    * past the fixpoint are identity, the result ALWAYS equals the
-    * `maxRounds`-unrolled fixed-round peel — the early exit buys wall
-    * clock, never changes the answer, which keeps the variant
-    * oracle-replayable despite the data-dependent stop.
+  /** [[kCore]] peeled until the survivor set STABILIZES — the true
+    * k-core, Matula & Beck 1983's algorithm distributed — or `maxRounds`
+    * is reached. Peeling is monotone (each round's survivors are a subset
+    * of the previous round's), so "survivor count unchanged" is an EXACT
+    * fixpoint test: count equality on nested sets is set equality, one
+    * 1-row driver scalar per round. Rounds past the fixpoint are
+    * identity, so the result ALWAYS equals the `maxRounds`-unrolled
+    * [[kCore]]: the early exit buys wall clock and never changes the
+    * answer, which keeps the data-dependent stop oracle-replayable.
+    *
+    * Returns (id, degree), as [[kCore]].
     */
+  def kCoreConverged(edges: DataFrame, srcCol: String, dstCol: String,
+                     k: Int, maxRounds: Int = 10): DataFrame =
+    peel("kCoreConverged", edges, srcCol, dstCol, None, k, maxRounds,
+      converge = true)
+
   /** STRENGTH-threshold core peel — [[kCore]] in the weighted regime
     * (Eidsaa & Almaas 2013's s-core): per round, keep nodes whose
     * STRENGTH (sum of incident edge weights, e.g. micro-scaled jaccard)
-    * stays ≥ s in the restricted graph. The weighted sharpening
-    * [[labelPropagation]]'s weightCol gives the vote, applied to the
-    * density gate: a node with ONE certain duplicate (w ≈ 10^6) can
-    * out-survive a node with three marginal band matches (w ≈ 5·10^5
-    * each) under the count peel's inversion — the s-core ranks by
-    * duplicate MASS, which is what a canonical-election cap wants.
+    * stays ≥ s in the restricted graph. A node with ONE certain duplicate
+    * (w ≈ 10^6) can out-survive a node with three marginal band matches
+    * (w ≈ 5·10^5 each) under the count peel's inversion — the s-core
+    * ranks by duplicate MASS, which is what a canonical-election cap
+    * wants ([[labelPropagation]]'s weighted vote, applied to the density
+    * gate).
     *
-    * Same plan shape as [[kCore]] (two semi joins on the persisted
-    * weight-summed edge table + one keyed agg per round, superseded
-    * superstep blocks released immediately), same fixed-round
-    * replayability (the output after R rounds is a pure integer function
-    * of the weighted edge set). Duplicate (src, dst) rows SUM their
-    * weights (the [[modularityWeighted]] multigraph convention); weights
-    * must be POSITIVE longs — enforced loudly. With w ≡ 1 and s = k this
-    * is [[kCore]] bit-for-bit (strength = degree), which the spec pins.
+    * Same fixed-round replayability as [[kCore]]. Duplicate (src, dst)
+    * rows SUM their weights (the [[modularityWeighted]] multigraph
+    * convention); weights must be POSITIVE longs — enforced loudly. With
+    * w ≡ 1 and s = k this is [[kCore]] bit-for-bit (strength = degree),
+    * which the spec pins.
     *
     * Returns (id, strength) for nodes surviving round R — strength
     * summed in the round-R restricted graph. Pass a symmetrized edge
@@ -355,110 +284,72 @@ object GraphOps {
     */
   def kCoreWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                     weightCol: String, s: Long,
-                    rounds: Int = 3): DataFrame = {
-    require(s >= 1, s"s=$s must be >= 1")
-    require(rounds >= 1 && rounds <= 100, s"rounds=$rounds out of [1,100]")
-    val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"),
-          col(weightCol).cast("long").as("__w"))
-        .where(col("__src") =!= col("__dst"))
-        .groupBy("__src", "__dst").agg(sum("__w").as("__w"))
-        .persist(disk))
-    requirePositiveWeights(e, "__w", "kCoreWeighted")
-    var surv = e.select(col("__src").as("__id")).distinct()
-    var st: DataFrame = null
-    for (t <- 1 to rounds) {
-      val rs = e.join(surv, e("__src") === surv("__id"), "left_semi")
-      val rd = rs.join(surv, rs("__dst") === surv("__id"), "left_semi")
-      val nd = graft.Checkpoints.eager(
-        rd.groupBy("__src").agg(sum("__w").cast("long").as("__st")))
-      if (st != null) graft.Checkpoints.release(st)
-      st = nd
-      surv = st.where(col("__st") >= s).select(col("__src").as("__id"))
-    }
-    st.where(col("__st") >= s)
-      .selectExpr("__src AS id", "__st AS strength")
-  }
+                    rounds: Int = 3): DataFrame =
+    peel("kCoreWeighted", edges, srcCol, dstCol, Some(weightCol), s, rounds,
+      converge = false)
 
-  /** [[kCoreWeighted]] peeled to the TRUE s-core fixpoint (or `maxRounds`)
-    * — the weighted twin of [[kCoreConverged]], same convergence probe:
-    * the survivor set only SHRINKS per round (restricting edges to
-    * survivors can only lower strengths), so "survivor count unchanged"
-    * is an exact fixpoint test (count equality on nested sets is set
-    * equality), one 1-row driver scalar per round; rounds past the
-    * fixpoint are identity, so the result always equals the
-    * maxRounds-unrolled [[kCoreWeighted]] — oracle-replayable despite
-    * the data-dependent stop.
+  /** [[kCoreWeighted]] peeled to the TRUE s-core fixpoint (or
+    * `maxRounds`) — the weighted twin of [[kCoreConverged]] with the same
+    * exact probe: restricting edges to survivors can only lower
+    * strengths, so survivor sets only shrink and an unchanged count is an
+    * unchanged set. The result always equals the `maxRounds`-unrolled
+    * [[kCoreWeighted]].
+    *
+    * Returns (id, strength), as [[kCoreWeighted]].
     */
   def kCoreWeightedConverged(edges: DataFrame, srcCol: String,
                              dstCol: String, weightCol: String, s: Long,
-                             maxRounds: Int = 10): DataFrame = {
-    require(s >= 1, s"s=$s must be >= 1")
-    require(maxRounds >= 1 && maxRounds <= 100,
-      s"maxRounds=$maxRounds out of [1,100]")
-    val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"),
-          col(weightCol).cast("long").as("__w"))
-        .where(col("__src") =!= col("__dst"))
-        .groupBy("__src", "__dst").agg(sum("__w").as("__w"))
-        .persist(disk))
-    requirePositiveWeights(e, "__w", "kCoreWeightedConverged")
-    var surv = e.select(col("__src").as("__id")).distinct()
-    var nSurv = -1L // sentinel: first round always runs
-    var st: DataFrame = null
-    var t = 0
-    var converged = false
-    while (t < maxRounds && !converged) {
-      val rs = e.join(surv, e("__src") === surv("__id"), "left_semi")
-      val rd = rs.join(surv, rs("__dst") === surv("__id"), "left_semi")
-      val nd = graft.Checkpoints.eager(
-        rd.groupBy("__src").agg(sum("__w").cast("long").as("__st")))
-      if (st != null) graft.Checkpoints.release(st)
-      st = nd
-      surv = st.where(col("__st") >= s).select(col("__src").as("__id"))
-      t += 1
-      val n = surv.count()
-      converged = n == nSurv
-      nSurv = n
-    }
-    st.where(col("__st") >= s)
-      .selectExpr("__src AS id", "__st AS strength")
-  }
+                             maxRounds: Int = 10): DataFrame =
+    peel("kCoreWeightedConverged", edges, srcCol, dstCol, Some(weightCol), s,
+      maxRounds, converge = true)
 
-  def kCoreConverged(edges: DataFrame, srcCol: String, dstCol: String,
-                     k: Int, maxRounds: Int = 10): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(maxRounds >= 1 && maxRounds <= 100,
-      s"maxRounds=$maxRounds out of [1,100]")
+  /** The one core peel behind the four `kCore*` entry points: the count
+    * peel is the strength peel over the deduped edge set with unit
+    * weight.
+    *
+    * One round: restrict edges to pairs whose BOTH endpoints survived the
+    * previous round (two semi joins on the persisted edge table), sum
+    * strengths (one keyed agg), keep nodes with strength ≥ s. The
+    * surviving edge set only shrinks, so the shuffle budget falls round
+    * by round. Each round's node-sized strength table is truncated
+    * ([[graft.ops.Superstep]] every round) because the next round reads it twice
+    * (both semi joins): lazy, the recompute tree would double per round.
+    * With `converge` the survivor count is the fixpoint probe.
+    */
+  private def peel(op: String, edges: DataFrame, srcCol: String,
+                   dstCol: String, weightCol: Option[String], s: Long,
+                   rounds: Int, converge: Boolean): DataFrame = {
+    require(s >= 1,
+      s"${if (weightCol.isEmpty) "k" else "s"}=$s must be >= 1")
+    require(rounds >= 1 && rounds <= 100,
+      s"${if (converge) "maxRounds" else "rounds"}=$rounds out of [1,100]")
     val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .where(col("__src") =!= col("__dst"))
-        .distinct().persist(disk))
-    var surv = e.select(col("__src").as("__id")).distinct()
-    var nSurv = -1L // sentinel: first round always runs
-    var deg: DataFrame = null
-    var t = 0
-    var converged = false
-    while (t < maxRounds && !converged) {
+    // a duplicate edge counts once in the count peel (unit weight on the
+    // deduped set) and sums its weights in the strength peel
+    val ends = weightedEnds(edges, srcCol, dstCol, weightCol)
+      .where(col("__src") =!= col("__dst"))
+    val e = graft.CacheRegistry.track((
+      if (weightCol.isEmpty) ends.distinct()
+      else ends.groupBy("__src", "__dst").agg(sum("__w").as("__w"))
+    ).persist(disk))
+    if (weightCol.isDefined) requirePositiveWeights(e, "__w", op)
+    def survivors(st: DataFrame): DataFrame =
+      st.where(col("__st") >= s).select(col("__src").as("__id"))
+    // peeling only shrinks the survivor set, so an unchanged count is an
+    // unchanged set; -1 makes the first round a non-fixpoint
+    val probe = Option.when(converge)(
+      Superstep.unchanged(-1L)(st => survivors(st).count()))
+    // before the first round every edge source survives (strength s
+    // passes the filter)
+    val init = e.select(col("__src")).distinct().withColumn("__st", lit(s))
+    val st = Superstep.iterate(op, init, rounds, probe = probe) { prev =>
+      val surv = survivors(prev)
       val rs = e.join(surv, e("__src") === surv("__id"), "left_semi")
       val rd = rs.join(surv, rs("__dst") === surv("__id"), "left_semi")
-      val nd = graft.Checkpoints.eager(
-        rd.groupBy("__src").agg(count(lit(1)).cast("long").as("__d")))
-      if (deg != null) graft.Checkpoints.release(deg)
-      deg = nd
-      surv = deg.where(col("__d") >= k).select(col("__src").as("__id"))
-      t += 1
-      val n = surv.count()
-      converged = n == nSurv
-      nSurv = n
-    }
-    deg.where(col("__d") >= k).selectExpr("__src AS id", "__d AS degree")
+      rd.groupBy("__src").agg(sum("__w").cast("long").as("__st"))
+    }.frame
+    st.where(col("__st") >= s).select(col("__src").as("id"),
+      col("__st").as(if (weightCol.isEmpty) "degree" else "strength"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007), fixed rounds —
@@ -475,8 +366,8 @@ object GraphOps {
     * (asynchronous/randomized LPA is not, which is why rounds are fixed
     * and synchronous). Per round: ONE equijoin + a (node, label) count agg
     * + a per-node argmax window — all keyed on node id, no cross product.
-    * Each round's node-sized label table is materialized eagerly
-    * ([[graft.Checkpoints.eager]]): the next round reads it twice (vote join +
+    * Each round's node-sized label table is truncated
+    * ([[graft.ops.Superstep]]): the next round reads it twice (vote join +
     * carry-forward), so a lazy lineage doubles the recompute tree per
     * round — the Pregel superstep shape. Pass a symmetrized edge list
     * for undirected semantics.
@@ -496,16 +387,8 @@ object GraphOps {
                        iters: Int = 3,
                        weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters=$iters out of [1,100]")
-    val (e, nodes) = lpaInputs(edges, srcCol, dstCol, weightCol)
-    var lab = nodes.select(col("__id"), col("__id").as("__lab"))
-    for (t <- 1 to iters) {
-      val next = lpaRound(e, lab)
-      // round t's blocks are dead once t+1 materialized (release is a
-      // no-op on the initial non-checkpointed frame)
-      graft.Checkpoints.release(lab)
-      lab = next
-    }
-    lab.selectExpr("__id AS id", "__lab AS community")
+    lpa("labelPropagation", edges, srcCol, dstCol, iters, weightCol,
+      converge = false)
   }
 
   /** [[labelPropagation]] that votes until the labels STABILIZE (no node
@@ -525,54 +408,47 @@ object GraphOps {
     * (`lab_s = lab_t` for s ≡ t, `lab_{t-1}` otherwise, mod 2), so the
     * round-`maxRounds` labels are selected by PARITY without running the
     * remaining rounds — still exactly the unrolled recurrence. Both
-    * probes (fixpoint + cycle) are 1-row counts over adjacent
-    * materialized label tables — driver scalars, never data collects.
+    * probes (fixpoint + cycle) come from ONE 1-row scan-agg over the
+    * round's materialized label table — a driver scalar, never a data
+    * collect.
     */
   def labelPropagationConverged(edges: DataFrame, srcCol: String,
                                 dstCol: String, maxRounds: Int = 10,
                                 weightCol: Option[String] = None): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 100,
       s"maxRounds=$maxRounds out of [1,100]")
+    lpa("labelPropagationConverged", edges, srcCol, dstCol, maxRounds,
+      weightCol, converge = true)
+  }
+
+  /** The one LPA loop: `rounds` synchronous vote rounds ([[lpaRound]]),
+    * each truncated because the next round reads it twice (vote join +
+    * carry-forward). With `converge` one scan-agg over each round counts
+    * both the changed labels and the labels that differ from two rounds
+    * back, so the fixpoint and the period-2 probes cost one 1-row job
+    * together; a period-2 stop picks the round-`rounds` labels by parity
+    * from the carried previous-label column.
+    */
+  private def lpa(op: String, edges: DataFrame, srcCol: String,
+                  dstCol: String, rounds: Int, weightCol: Option[String],
+                  converge: Boolean): DataFrame = {
     val (e, nodes) = lpaInputs(edges, srcCol, dstCol, weightCol)
-    var lab = nodes.select(col("__id"), col("__id").as("__lab"))
-    var prev: DataFrame = null
-    var prev2: DataFrame = null
-    var t = 0
-    var done = false
-    while (t < maxRounds && !done) {
-      // the outgoing prev2 (round t-3) is read by nothing past this
-      // point — the fixpoint/cycle probes only look two rounds back —
-      // so its checkpoint blocks are released here instead of at GC
-      if (prev2 != null) graft.Checkpoints.release(prev2)
-      prev2 = prev
-      prev = lab
-      lab = lpaRound(e, prev, withChange = true)
-      t += 1
-      // fixpoint ⟺ zero changed labels — an exact test (the labelSum
-      // shortcut of MinHashLSH.clusters is a proxy; the count is not).
-      // The flag was computed inside the round's carry-forward join
-      // (lpaRound withChange), so the probe is a scan-agg over the
-      // checkpointed frame — no per-round probe join (r20).
-      val changed = lab.agg(coalesce(sum(col("__chg")), lit(0L)))
-        .head().getLong(0)
-      if (changed == 0L) done = true
-      else if (prev2 != null) {
-        // the period-2 probe compares t against t-2 — not derivable from
-        // per-round flags, so it stays a join (runs only while changing
-        // and from round 3 on). Project to (__id, __lab) first: both
-        // sides may carry a __chg column now.
-        val cyc = lab.select(col("__id"), col("__lab"))
-          .join(prev2.select(col("__id"), col("__lab").as("__old")), "__id")
-          .where(col("__lab") =!= col("__old"))
-          .count()
-        if (cyc == 0L) {
-          // period-2 orbit: round-maxRounds labels by parity
-          if ((maxRounds - t) % 2 != 0) lab = prev
-          done = true
-        }
-      }
+    var cycled = false
+    val probe = Option.when(converge) { (lab: DataFrame) =>
+      val r = lab.agg(coalesce(sum(col("__chg")), lit(0L)),
+        coalesce(sum(col("__cyc")), lit(0L))).head()
+      cycled = r.getLong(0) != 0L && r.getLong(1) == 0L
+      r.getLong(0) == 0L || cycled
     }
-    lab.selectExpr("__id AS id", "__lab AS community")
+    // the initial labels have no previous label: the null makes the first
+    // round a non-cycle
+    val init = nodes.select(col("__id"), col("__id").as("__lab"),
+      lit(null).cast("long").as("__prev"))
+    val res = Superstep.iterate(op, init, rounds, probe = probe)(lpaRound(e, _))
+    // period-2 orbit from round t: round `rounds` holds round t's labels
+    // when rounds − t is even, round t−1's otherwise
+    val pick = if (cycled && (rounds - res.rounds) % 2 != 0) "__prev" else "__lab"
+    res.frame.select(col("__id").as("id"), col(pick).as("community"))
   }
 
   /** Loud-failure guard for the weighted operators' POSITIVE-weight
@@ -594,17 +470,20 @@ object GraphOps {
           s"(micro-scaled similarities); found min weight ${r.getLong(0)}")
   }
 
+  /** The edge list as long (__src, __dst, __w); __w ≡ 1 without a
+    * weight column. */
+  private def weightedEnds(edges: DataFrame, srcCol: String, dstCol: String,
+                           weightCol: Option[String]): DataFrame =
+    edges.select(col(srcCol).cast("long").as("__src"),
+      col(dstCol).cast("long").as("__dst"),
+      weightCol.fold(lit(1L))(w => col(w).cast("long")).as("__w"))
+
   /** Shared LPA inputs: weight-fused persisted edge table + node set. */
   private def lpaInputs(edges: DataFrame, srcCol: String, dstCol: String,
                         weightCol: Option[String]): (DataFrame, DataFrame) = {
     val disk = StorageLevel.MEMORY_AND_DISK
-    val sel = weightCol match {
-      case Some(w) => edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"), col(w).cast("long").as("__w"))
-      case None => edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"), lit(1L).as("__w"))
-    }
-    val e = graft.CacheRegistry.track(sel.persist(disk))
+    val e = graft.CacheRegistry.track(
+      weightedEnds(edges, srcCol, dstCol, weightCol).persist(disk))
     if (weightCol.isDefined)
       requirePositiveWeights(e, "__w", "labelPropagation(weighted)")
     val nodes = graft.CacheRegistry.track(
@@ -614,24 +493,25 @@ object GraphOps {
     (e, nodes)
   }
 
-  /** One synchronous vote round. The new label table is MATERIALIZED
-    * ([[graft.Checkpoints.eager]]): the next round reads it TWICE — the vote
-    * join and the carry-forward left join — so a lazy lineage doubles the
-    * recompute tree per round (2^iters plans). One node-sized
-    * materialization per superstep is the Pregel shape. The weighted vote
-    * `sum(__w)` reduces to the classic count with __w ≡ 1 bit-for-bit
-    * (long sums are exact), so one round serves both forms.
+  /** One synchronous vote round over `lab` (__id, __lab, __prev): every
+    * node takes the heaviest label among its in-neighbors (ties to the
+    * smallest label), or keeps its own without in-edges. The weighted
+    * vote `sum(__w)` reduces to the classic count with __w ≡ 1
+    * bit-for-bit (long sums are exact), so one round serves both forms.
+    *
+    * The carry-forward join sees the old and the new label side by side,
+    * so the round also emits its probe inputs for free: `__prev` (the
+    * old label), `__chg` (new ≠ old, the fixpoint test) and `__cyc`
+    * (new ≠ the label two rounds back, the period-2 test; 1 while no
+    * such round exists).
     */
-  private def lpaRound(e: DataFrame, lab: DataFrame,
-                       withChange: Boolean = false): DataFrame = {
-    // r19 measured rejection: replacing this window with the declarative
-    // argmax `groupBy(__dst).agg(min(struct(-__v, __lab)))` — identical
-    // winner, map-side partial agg, "no sort" — is SLOWER (d149 5-rep A/B
-    // same box/config: 3.70-4.20 s vs 3.27-3.57 s here). The gotcha:
-    // struct aggregation buffers are not hash-aggregable, so Spark plans
-    // a partial+final SortAggregate pair — TWO sorts around the exchange
-    // where the window pays one after it, on vote rows that are already
-    // census-sized. Keep the window.
+  private def lpaRound(e: DataFrame, lab: DataFrame): DataFrame = {
+    // The window stays: the declarative argmax
+    // `groupBy(__dst).agg(min(struct(-__v, __lab)))` picks the same
+    // winner but measured slower on d149 (5-rep A/B: 3.70-4.20 s vs
+    // 3.27-3.57 s) — struct aggregation buffers are not hash-aggregable,
+    // so Spark plans a partial+final SortAggregate pair, two sorts around
+    // the exchange where the window pays one after it.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__dst").orderBy(col("__v").desc, col("__lab").asc)
     val win = e.join(lab, col("__src") === col("__id"))
@@ -640,23 +520,12 @@ object GraphOps {
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .select(col("__dst"), col("__lab").as("__newlab"))
-    val joined = lab.join(win, lab("__id") === win("__dst"), "left")
-    // withChange (r20, guide §2.4): the converged variant's fixpoint probe
-    // previously JOINED round t against round t-1 (two checkpointed
-    // node-sized tables — one shuffle join per round) just to count
-    // changed labels. The carry-forward join above already sees old and
-    // new side by side, so the flag is computed here for free and the
-    // probe becomes a scan-agg over the materialized frame.
-    // changed ⟺ coalesce(__newlab, __lab) ≠ __lab ⟺ __newlab IS NOT NULL
-    // AND __newlab ≠ __lab (labels are non-null) — exact.
-    val cols0 = Seq(col("__id"),
-      coalesce(col("__newlab"), lab("__lab")).as("__lab"))
-    val cols =
-      if (withChange)
-        cols0 :+ when(col("__newlab").isNotNull &&
-          col("__newlab") =!= lab("__lab"), 1L).otherwise(0L).as("__chg")
-      else cols0
-    graft.Checkpoints.eager(joined.select(cols: _*))
+    val newLab = coalesce(col("__newlab"), lab("__lab"))
+    lab.join(win, lab("__id") === win("__dst"), "left")
+      .select(col("__id"), newLab.as("__lab"), lab("__lab").as("__prev"),
+        when(newLab =!= lab("__lab"), 1L).otherwise(0L).as("__chg"),
+        when(lab("__prev").isNull || newLab =!= lab("__prev"), 1L)
+          .otherwise(0L).as("__cyc"))
   }
 
   /** Newman modularity of a community assignment on the 1e-6 integer

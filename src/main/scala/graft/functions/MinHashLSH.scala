@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Superstep
+
 /** MinHash + LSH near-duplicate detection for document corpora.
   *
   * Scale design (the point of LSH): everything up to the band-key join is
@@ -69,8 +71,8 @@ object MinHashLSH {
     // semantically free — every consumer is a set operation (minhash,
     // jaccard, containment, prefix ranks) — and the sorted-distinct
     // contract is property-pinned in SortedIntersectSpec.
-    // NO operator-internal spread here (removed in r20): the r19 guarded
-    // spread at this seam regressed d05 0.69 → 3.94 s at the canonical
+    // NO operator-internal spread here: a guarded spread at this seam
+    // measured d05 0.69 → 3.94 s at the canonical
     // local[32] (driver-measured, plan 8 → 13 Exchange — the added
     // REPARTITION_BY_NUM also pins AQE's partition count for every
     // downstream stage of all 17 shingle call sites). The single-row-group
@@ -180,8 +182,8 @@ object MinHashLSH {
                  a: Column, b: Column): Column = {
     val ni = intersectCountCol(spark, a, b)
     // graft_round_ratio = round(ni / union, 6) bit-for-bit (RoundRatioSpec)
-    // without Round(double)'s per-row Double.toString -> BigDecimal parse
-    // (r20, guide §4 — this evaluates once per CANDIDATE in every verify)
+    // without Round(double)'s per-row Double.toString -> BigDecimal parse,
+    // which this pays once per CANDIDATE in every verify
     graft.plans.ArrayExpressions.roundRatioColumn(spark,
       ni, (size(a) + size(b)).cast("long") - ni)
   }
@@ -223,82 +225,38 @@ object MinHashLSH {
     // Labels only ever decrease, so the label sum is strictly monotone until
     // the fixpoint: sum unchanged ⟺ converged. One tiny agg per round — no
     // join-based change detection. Decimal keeps the sum exact at any scale.
-    def labelSum(l: DataFrame): java.math.BigDecimal =
+    def labelSum(l: DataFrame): BigInt =
       Option(l.agg(sum(col("cluster").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO) // sum over zero rows is null
-    var labels = edges.groupBy(col("a").as("id"))
+        .fold(BigInt(0))(d => BigInt(d.toBigInteger)) // zero rows sum to null
+    val init = edges.groupBy(col("a").as("id"))
       .agg(least(min("b"), first("a")).as("cluster")).persist(disk)
-    var prevSum = labelSum(labels)
-    var converged = prevSum.signum == 0 && labels.isEmpty // empty input: done
-    var i = 0
-    // One hop per materialized round: min label over the 1-hop
-    // neighborhood. Near-dup components are near-cliques, so depth is
-    // small. Two rejected variants, both MEASURED slower: pointer jumping
-    // (label(label(id)) — extra join per round for rounds that don't
-    // materialize) and two hops per materialization (the inner hop's
-    // result feeds both the union and the join of the outer hop, so its
-    // shuffles recompute — exchange reuse does not reliably kick in).
-    // Each round's plan nests the previous round's, so after many rounds
-    // the logical plan itself (analysis + optimization on the driver)
-    // becomes the cost even though the data is persisted. Checkpointing
-    // every few rounds truncates lineage to the materialized partitions,
-    // bounding plan depth regardless of graph diameter. Near-dup graphs
-    // converge in 2-3 rounds, so the cadence only fires on adversarially
-    // deep components.
-    val checkpointEvery = 5
-    val sc = pairs.sparkSession.sparkContext
-    // latest cadence checkpoint — kept alive (the returned labels'
-    // lineage may root in it); superseded ones released eagerly
-    var prevCkpt: Option[DataFrame] = None
-    while (!converged && i < maxIter) {
+    // One hop per round: min label over the 1-hop neighborhood. Near-dup
+    // components are near-cliques, so depth is small. Two rejected
+    // variants, both MEASURED slower: pointer jumping (label(label(id)) —
+    // an extra join per round) and two hops per materialization (the
+    // inner hop feeds both the union and the join of the outer hop, so
+    // its shuffles recompute — exchange reuse does not reliably kick in).
+    // Every round is persisted for the sum probe; every 5th is truncated
+    // as well, because each round's plan nests the previous one and after
+    // many rounds analysis on the driver becomes the cost even with the
+    // data persisted. Near-dup graphs converge in 2-3 rounds, so the
+    // cadence only fires on adversarially deep components. The returned
+    // labels root in the last persist (CacheRegistry) and, after five
+    // rounds, the last truncation (Checkpoints) — drain both registries
+    // only once the result is consumed.
+    val labels = Superstep.iterate("clusters()", init, maxIter,
+      truncateEvery = 5,
+      probe = Some(Superstep.unchanged(labelSum(init))(labelSum)),
+      // silent non-convergence would return wrong clusters
+      mustConverge = Some("component diameter exceeds maxIter; raise " +
+        "maxIter (rounds needed ≈ graph diameter)")) { labels =>
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("id", "b"), "b")
         .select(col("a").as("id"), col("cluster"))
-      val next = labels.unionByName(viaNeighbor)
-        .groupBy("id").agg(min("cluster").as("cluster")).persist(disk)
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpersist(false)
-      labels = next
-      i += 1
-      // Lineage bounding for FUTURE rounds only: the frame we return is
-      // always the plain persisted `next` above, never a checkpointed
-      // one, so CacheRegistry.releaseAll() leaves the result recomputable
-      // from lineage (recomputability also needs the LAST cadence
-      // checkpoint's blocks, which Checkpoints.releaseAll() drops — so
-      // drain that registry only once the result is fully consumed). Reliable checkpoint() when the session has a
-      // checkpoint dir (the cluster deployment — survives executor loss
-      // and unpersist); localCheckpoint otherwise, with its single-node
-      // assumption made explicit: the truncated lineage roots in
-      // partitions held by THIS JVM's block manager, so a lost executor
-      // on a real cluster would fail the job instead of recomputing —
-      // set a checkpoint dir there. Retention: reliable checkpoint files
-      // are NOT freed by unpersist and outlive superseded rounds for the
-      // app's lifetime unless the deployment enables
-      // spark.cleaner.referenceTracking.cleanCheckpoints (tiny label
-      // frames, ~1/5 of rounds — but a long-running driver should set it).
-      if (!converged && i % checkpointEvery == 0) {
-        // Checkpoints.eager picks reliable vs local; the superseded
-        // checkpoint (5 rounds back) is released as soon as this one
-        // materializes — nothing reads it again (the intermediate rounds
-        // that rooted in it were materialized persists, themselves
-        // already dropped)
-        val cp = graft.Checkpoints.eager(labels)
-        prevCkpt.foreach(graft.Checkpoints.release)
-        prevCkpt = Some(cp)
-        labels.unpersist(false)
-        labels = cp
-      }
-    }
-    // Silent non-convergence would return wrong clusters (and diverge from
-    // any exact-transitive-closure oracle) — fail loudly instead.
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusters() did not converge in $maxIter rounds — component diameter " +
-          s"exceeds maxIter; raise maxIter (rounds needed ≈ graph diameter)")
-    edges.unpersist(false) // labels is persisted + materialized; edges done
-    graft.CacheRegistry.track(labels) // released by CacheRegistry.releaseAll()
+      labels.unionByName(viaNeighbor)
+        .groupBy("id").agg(min("cluster").as("cluster"))
+    }.frame
+    edges.unpersist(false)
     labels
   }
 
@@ -323,10 +281,10 @@ object MinHashLSH {
     * detection.
     *
     * Reliable-checkpoint retention: each round's frame is EDGE-LIST-sized
-    * (not label-sized like [[clusters]]'), so superseded rounds' checkpoint
-    * files are deleted explicitly as the loop advances — only the final
-    * round's file remains for the app's lifetime (it backs the returned
-    * labels' lineage), regardless of whether the deployment enables
+    * (not label-sized like [[clusters]]'), so superseded rounds are
+    * released as the loop advances ([[graft.Checkpoints.release]] deletes
+    * their files) — only the final round's file-set remains (it backs the
+    * returned labels' lineage), whether or not the deployment enables
     * spark.cleaner.referenceTracking.cleanCheckpoints.
     */
   def clustersStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
@@ -341,7 +299,7 @@ object MinHashLSH {
     val pp = graft.CacheRegistry.track(pairs
       .select(col("doc_a").as("pa"), col("doc_b").as("pb"))
       .persist(disk))
-    var edges = graft.CacheRegistry.track(pp
+    val edges0 = graft.CacheRegistry.track(pp
       .select(greatest(col("pa"), col("pb")).as("a"),
         least(col("pa"), col("pb")).as("b"))
       .where(col("a") =!= col("b"))
@@ -354,10 +312,10 @@ object MinHashLSH {
     // cast each endpoint to decimal BEFORE the addition: ids near 2^63
     // (hash-derived node ids) would wrap a long a+b and a wrapped sum
     // colliding across rounds would declare convergence on a non-fixpoint
-    def edgeSum(e: DataFrame): java.math.BigDecimal =
+    def edgeSum(e: DataFrame): BigInt =
       Option(e.agg(sum(col("a").cast("decimal(38,0)") +
           col("b").cast("decimal(38,0)")))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+        .head().getDecimal(0)).fold(BigInt(0))(d => BigInt(d.toBigInteger))
     // the two star operations, exactly per the paper: each center u links
     // a side of its neighborhood to a local minimum.
     //  - large-star(u): m = min(Γ(u) ∪ {u}) over the FULL neighborhood;
@@ -389,68 +347,20 @@ object MinHashLSH {
           least(col("x"), col("m")).as("b"))
         .distinct()
     }
-    var prev = edgeSum(edges)
-    var converged = prev.signum == 0 && edges.isEmpty
-    var i = 0
-    val sc = pairs.sparkSession.sparkContext
-    val spark = pairs.sparkSession
-    // checkpoint EVERY round, not on a cadence: one round stacks ~6 plan
-    // operators (two stars of groupBy+join+union+distinct), so un-truncated
-    // lineage makes driver-side analysis the dominant cost within 2-3
-    // rounds (measured: 75 s for an 11-node chain on cadence-5; 3 s with
-    // per-round truncation). Rounds are O(log n), so the per-round
-    // materialization is the cheap side of the trade everywhere.
-    //
-    // Reliable-checkpoint retention: these per-round frames are EDGE-LIST-
-    // sized (unlike clusters()' tiny label frames), and without
-    // spark.cleaner.referenceTracking.cleanCheckpoints their files live for
-    // the app's lifetime — ~log n full edge-list copies. So the reliable
-    // path checkpoints through an RDD we own (getCheckpointFile is public
-    // there) and DELETES each superseded round's file as soon as the next
-    // round has materialized; only the FINAL round's file survives (it
-    // backs the returned labels' lineage) — one edge-list-sized file for
-    // the app's lifetime instead of a stack of them.
-    var prevCkptFile: Option[String] = None
-    def deletePrevCkpt(): Unit = prevCkptFile.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    while (!converged && i < maxIter) {
-      val nextRaw = star(star(edges, large = true), large = false)
-      val (next, ckptFile) =
-        if (sc.getCheckpointDir.isDefined) {
-          val rdd = nextRaw.rdd
-          // persist BEFORE the materializing action: checkpoint() writes
-          // its files in a SEPARATE job after the first action, which
-          // would otherwise recompute the whole round's plan a second
-          // time; the cached blocks feed that write job, then free —
-          // the checkpoint files back all later reads
-          rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rdd.checkpoint()
-          rdd.count() // materialize: runs the plan once, then the ckpt write
-          rdd.unpersist(false)
-          (spark.createDataFrame(rdd, nextRaw.schema), rdd.getCheckpointFile)
-        } else (graft.Checkpoints.eager(nextRaw), None)
-      val s = edgeSum(next)
-      converged = s.compareTo(prev) == 0
-      prev = s
-      // only round 1's unpersist frees anything (the genuinely persisted
-      // initial edge list); later rounds' frames are checkpoint results
-      // whose blocks Dataset.unpersist doesn't govern. Local-checkpoint
-      // blocks are released explicitly (Checkpoints.release — the local
-      // analog of deletePrevCkpt; no reader of the OLD edges remains
-      // once `next` has materialized); reliable files are deleted
-      // explicitly here.
-      edges.unpersist(false)
-      deletePrevCkpt() // the file backing the OLD edges — no reader remains
-      graft.Checkpoints.release(edges)
-      prevCkptFile = ckptFile
-      edges = next
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"clustersStar() did not converge in $maxIter rounds (~log2(n) expected)")
+    // Every round is truncated: one round stacks ~6 plan operators (two
+    // stars of groupBy+join+union+distinct), so untruncated lineage makes
+    // driver-side analysis the dominant cost within 2-3 rounds (an
+    // 11-node chain measured 75 s on a 5-round cadence, 3 s truncating
+    // each round); rounds are O(log n), so the truncation is the cheap
+    // side everywhere. Superseded rounds are released as the loop
+    // advances — with a checkpoint dir that deletes their files — so only
+    // the last round's edge-list-sized frame, which backs the returned
+    // labels, outlives the call.
+    val edges = Superstep.iterate("clustersStar()", edges0, maxIter,
+      probe = Some(Superstep.unchanged(edgeSum(edges0))(edgeSum)),
+      mustConverge = Some("~log2(n) rounds expected")) { e =>
+      star(star(e, large = true), large = false)
+    }.frame
     // at the fixpoint every component is a star centered at its min, so a
     // non-root node's single edge is (member, root); group-min defensively
     // (a duplicate edge could only over-report, never change the min) and

@@ -34,11 +34,11 @@ import org.apache.spark.sql.DataFrame
   *    materialize their shuffle stages eagerly at plan-construction time
   *    (and re-run them at action time), and a shuffle has already decided
   *    their parallelism;
-  *  - NON-FILE leaves (LogicalRDD from [[graft.Checkpoints.eager]]'s
-  *    localCheckpoints, in-memory relations, local tables, Range): the
-  *    r19 guard matched ANY LeafNode, so iterative operators that
-  *    checkpoint per superstep were re-spread EVERY round — the driver
-  *    measured d12's plan bloating 194 → 676 Exchange occurrences, and at
+  *  - NON-FILE leaves (LogicalRDD from the superstep localCheckpoints of
+  *    [[graft.Checkpoints]], in-memory relations, local tables, Range): a
+  *    guard matching ANY LeafNode re-spread the iterative operators that
+  *    checkpoint per superstep EVERY round — d12's plan was measured
+  *    bloating 194 → 676 Exchange occurrences, and at
   *    100 TB a checkpointed intermediate AQE-coalesced below the core
   *    count would be round-robin-reshuffled each superstep;
   *  - streaming frames (micro-batch partitioning is the runner's concern,

@@ -31,7 +31,7 @@ object Profile {
         .map { case (c, v) => s"$c=$v" }.mkString(" ")
       println(s"[profile] $name steady=${f3(q.steady)} cold=${f3(q.cold)} " +
         s"samples=${q.runs.map(f3).mkString("[", ",", "]")} $accounting" +
-        (if (q.failed) " FAILED" else ""))
+        (if (q.failed) " FAILED" else "") + q.error.fold("")(e => s" ($e)"))
       q.stream.foreach(l => println(s"[profile]   $l"))
     }
     spark.stop()

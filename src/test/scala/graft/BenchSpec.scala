@@ -21,6 +21,7 @@ class BenchSpec extends SparkSpec {
     assert(q.cold === -1.0)
     assert(q.steady === -1.0)
     assert(q.failed)
+    assert(q.error === Some("java.lang.IllegalStateException: boom"))
   }
 
   test("a passing query's steady time is the min of its 4 samples, with jobs") {

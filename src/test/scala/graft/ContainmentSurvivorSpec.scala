@@ -4,15 +4,16 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{JaccardJoin, MinHashLSH}
 
-/** Round-16 fixes, pinned.
+/** Containment-dedup survivors, cluster-size histograms, the converged
+  * s-core and StreamRunner's conf restore, pinned.
   *
   * 1. Containment-dedup survivor guarantee: the mutual tie-break is
   *    lexicographic (shingle-set size, id) when the pair frame carries
   *    sizes — every drop then points at a strictly-(size,id)-greater
   *    container, the drop relation is acyclic, and every connected group
   *    keeps at least one member. The previous id-only rule could drop a
-  *    whole group on a mixed mutual/strict cycle (the round-15 ADVICE
-  *    counterexample, reproduced below).
+  *    whole group on a mixed mutual/strict cycle (the counterexample is
+  *    reproduced below).
   * 2. [[MinHashLSH.clusterSizeProfileFromHistogram]] combines duplicate
   *    size rows instead of silently mis-assigning cumulative bases.
   * 3. [[graft.streaming.StreamRunner]] restores its session-global conf

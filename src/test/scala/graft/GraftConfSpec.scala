@@ -1,49 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-import graft.functions.GraphOps
-
-/** Round-14 infrastructure: the StreamRunner update-mode changelog guard
-  * and the GraftConf reliable-checkpoint path.
-  */
-class StreamRunnerGuardSpec extends SparkSpec {
-
-  test("update-mode refuses a multi-batch changelog instead of double-counting") {
-    import spark.implicits._
-    val dir = graft.WorkDirs.acquire("test_graft_multibatch")
-    // two files -> with maxFilesPerTrigger=1 the census for a key is
-    // emitted once per batch; summing the memory table would double-count
-    Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-      .coalesce(1).write.parquet(s"$dir/f1")
-    Seq(("a", 3L), ("b", 4L)).toDF("k", "v")
-      .coalesce(1).write.parquet(s"$dir/f2")
-    val stream = spark.readStream
-      .schema("k STRING, v BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(dir.toString)
-    val census = stream.groupBy("k").agg(sum("v").as("s"))
-    val e = intercept[IllegalArgumentException] {
-      streaming.StreamRunner.runToBatch(census, "guard_test", mode = "update")
-    }
-    assert(e.getMessage.contains("changelog"))
-  }
-
-  test("update-mode single-batch source still passes the guard") {
-    import spark.implicits._
-    val dir = graft.WorkDirs.acquire("test_graft_singlebatch")
-    Seq(("a", 1L), ("a", 2L), ("b", 4L)).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    val stream = spark.readStream
-      .schema("k STRING, v BIGINT").parquet(s"$dir/data")
-    val census = stream.groupBy("k").agg(sum("v").as("s"))
-    val got = streaming.StreamRunner
-      .runToBatch(census, "guard_ok", mode = "update")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got === Map("a" -> 3L, "b" -> 4L))
-  }
-}
+import graft.functions.{GraphOps, MinHashLSH}
 
 /** Reliable-checkpoint selection: with a checkpoint dir set, every
   * superstep materialization writes real checkpoint files (survives
@@ -85,17 +44,46 @@ class GraftConfSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L),
       (3L, 1L), (7L, 8L), (8L, 7L))
-    val local = GraphOps.labelPropagationConverged(
-        edges.toDF("src", "dst"), "src", "dst", maxRounds = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def runAll(): Seq[Map[Long, Long]] = {
+      val df = edges.toDF("src", "dst")
+      def pairs(out: DataFrame) =
+        out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Seq(
+        pairs(GraphOps.labelPropagationConverged(df, "src", "dst", maxRounds = 5)),
+        pairs(MinHashLSH.clustersStar(df.toDF("doc_a", "doc_b"))),
+        pairs(GraphOps.kCoreConverged(df, "src", "dst", k = 2)))
+    }
+    val local = runAll()
     val dir = graft.WorkDirs.acquire("test_graft_ckpt_lpa")
     val reliable = try {
       GraftConf.enableReliableCheckpoints(spark, dir.toString)
-      GraphOps.labelPropagationConverged(
-          edges.toDF("src", "dst"), "src", "dst", maxRounds = 5)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      runAll()
     } finally resetCheckpointDir()
     assert(reliable === local)
+  }
+
+  test("reliable clustersStar keeps one checkpoint file-set, for its result") {
+    import spark.implicits._
+    // a 16-node chain contracts over several rounds, each one truncated
+    val chain = (1L until 16L).map(a => (a, a + 1)).toDF("doc_a", "doc_b")
+    val dir = graft.WorkDirs.acquire("test_graft_ckpt_star")
+    try {
+      GraftConf.enableReliableCheckpoints(spark, dir.toString)
+      val labels = MinHashLSH.clustersStar(chain)
+      def rddDirs(f: java.io.File): Seq[java.io.File] =
+        Option(f.listFiles).toSeq.flatten.flatMap(c =>
+          if (c.isDirectory && c.getName.startsWith("rdd-")) Seq(c)
+          else if (c.isDirectory) rddDirs(c) else Nil)
+      assert(rddDirs(dir).size === 1,
+        s"superseded rounds' files must be deleted: ${rddDirs(dir).mkString(", ")}")
+      // the surviving file-set backs the returned labels
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        (1L to 16L).map(_ -> 1L).toMap)
+    } finally {
+      resetCheckpointDir()
+      CacheRegistry.releaseAll()
+      Checkpoints.releaseAll()
+    }
   }
 
   test("builderConf carries the checkpoint-file cleaner flag") {
