@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the first-run times for transparency. Min-of-3 matters: BASELINE.md's
   * yardstick is itself a min-of-3 noise floor, and a single warm sample
   * gated against a floor statistically guarantees false 2x flags on
-  * sub-second queries (seven such flags in round 6, all on untouched
-  * paths). Matching the statistic on both sides of the gate removes that
+  * sub-second queries (one suite run once raised seven such flags, all on
+  * untouched paths). Matching the statistic on both sides of the gate removes that
   * failure mode; scheduler jitter of a few hundred ms no longer reads as
   * a 5x regression on a 130 ms map-only query.
   *
@@ -122,8 +122,7 @@ object Bench {
     * iterative operators' supersteps, which are neither SQL-cache entries
     * nor CacheRegistry frames and otherwise die only when a JVM GC lets
     * the ContextCleaner notice (dead blocks from early graph queries were
-    * measured pressuring the storage pool of later ones, BASELINE.md
-    * round 14). Order matters: CacheRegistry persists may root in
+    * measured pressuring the storage pool of later ones, BASELINE.md). Order matters: CacheRegistry persists may root in
     * checkpoint blocks, never the reverse.
     */
   def dropCaches(spark: SparkSession): Unit = {

@@ -29,8 +29,8 @@ object CacheRegistry {
   /** Register an internally persisted frame; returns it for chaining. */
   def track[T <: Dataset[_]](df: T): T = { frames.add(df); df }
 
-  /** Unpersist every tracked frame and empty the registry. BLOCKING since
-    * round 10: a non-blocking unpersist lets the next query's persist of
+  /** Unpersist every tracked frame and empty the registry. BLOCKING,
+    * because a non-blocking unpersist lets the next query's persist of
     * an identical subplan race the in-flight removal in CacheManager
     * (same-plan cache entries are keyed by the analyzed plan), and losing
     * that race silently drops the new persist — the twice-read subplan

@@ -24,7 +24,7 @@ object WorkDirs {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   // per-family acquisition lock: two threads acquiring the SAME family
   // concurrently would otherwise interleave wipe(mine)+mkdirs and one
-  // could delete the other's in-flight files (advisor, round 18). The
+  // could delete the other's in-flight files. The
   // lock makes each acquire atomic; concurrent USE of one family after
   // acquire remains unsupported by contract — one dir per family per
   // JVM, and every acquire wipes it (Verify/Bench run queries

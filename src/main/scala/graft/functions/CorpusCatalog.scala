@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
 object CorpusCatalog {
 
   /** The catalog row for one dump: (dump_id, n_docs, n_tokens,
-    * mean_quality on the 1e-4 grid, the KMV distinct-gram sketch, and —
-    * round 12 — the CMS frequency sketch over the same gram stream, so
+    * mean_quality on the 1e-4 grid, the KMV distinct-gram sketch, and
+    * the CMS frequency sketch over the same gram stream, so
     * the catalog answers "how much do two dumps' gram SETS overlap"
     * (KMV splice) AND "how big is their gram EQUIJOIN" (CMS
     * inner-product splice) without re-reading any dump).
@@ -54,7 +54,7 @@ object CorpusCatalog {
       count(lit(1)).as("n_docs"),
       coalesce(sum(TextAnalysis.tokenCount(col(textCol))), lit(0L)).as("n_tokens"),
       round(avg(TextAnalysis.qualityScore(col(textCol))), 4).as("mean_quality"))
-    // gramRows (r20, guide §2.4 reuse): a caller that ALREADY holds this
+    // gramRows (reuse over recompute): a caller that ALREADY holds this
     // dump's (idCol, sh) gram rows — e.g. d163, whose containment
     // derivation persists the corpus-wide shingle-array table — passes
     // them here instead of paying a second full shingle-hash pass (one
@@ -69,7 +69,7 @@ object CorpusCatalog {
       Sketches.kmvAgg(grams, col("sh"), k).as("sketch"),
       Sketches.cmsAgg(grams, col("sh"), cmsDepth, cmsWidth).as("cms"),
       Sketches.csAgg(grams, col("sh"), csDepth, csWidth).as("cs"))
-    // round 14: the per-release DOMAIN CENSUS rides the catalog row too —
+    // The per-release DOMAIN CENSUS rides the catalog row too —
     // domain cardinality is census-sized, so the sorted (domain, cnt)
     // array is a few KB and release-over-release mixture drift
     // ([[domainDrift]]) becomes pure catalog math, the d87 pattern
@@ -83,7 +83,7 @@ object CorpusCatalog {
       case None => docs.sparkSession.sql("SELECT CAST(NULL AS " +
         "ARRAY<STRUCT<domain: STRING, cnt: BIGINT>>) AS domain_census")
     }
-    // round 15: the near-dup CLUSTER-SIZE HISTOGRAM rides the row too —
+    // The near-dup CLUSTER-SIZE HISTOGRAM rides the row too —
     // the histogram (distinct size values × counts) is census-sized, so
     // the sorted (sz, cnt) array is a few KB and release-over-release
     // duplication CONCENTRATION ([[MinHashLSH
@@ -100,7 +100,7 @@ object CorpusCatalog {
       case None => docs.sparkSession.sql("SELECT CAST(NULL AS " +
         "ARRAY<STRUCT<sz: BIGINT, cnt: BIGINT>>) AS cluster_census")
     }
-    // round 16: the CONTAINMENT-VERDICT CENSUS rides the row too — one
+    // The CONTAINMENT-VERDICT CENSUS rides the row too — one
     // (verdict, n_containers, cnt) row per distinct value pair, so
     // release-over-release containment posture (keep/drop split, fan-in
     // distribution, total containment edges) is pure catalog math via
@@ -119,7 +119,7 @@ object CorpusCatalog {
         "ARRAY<STRUCT<verdict: STRING, nc: BIGINT, cnt: BIGINT>>) " +
         "AS containment_census")
     }
-    // round 16: the TOP-K GRAM CENSUS rides the row too — the exact
+    // The TOP-K GRAM CENSUS rides the row too — the exact
     // (gram-hash, doc-frequency) rows of the dump's K most widespread
     // 3-gram shingles (ties to the smaller hash), K rows of two longs.
     // Together with the CMS already on the row it makes gram-level
@@ -192,7 +192,7 @@ object CorpusCatalog {
           .map(r => Option(r.getAs[Integer](0)).map(_.toInt))
         require(!ks.contains(None),
           s"catalog at $path mixes rows with and without a stored sketch " +
-            "size k (pre-round-11 appends); re-append those dumps or " +
+            "size k (older appends); re-append those dumps or " +
             "rebuild the catalog before splicing")
         val vals = ks.flatten
         require(vals.length == 1,
@@ -217,7 +217,7 @@ object CorpusCatalog {
                    dumpId: String): DataFrame = {
     val cat = spark.read.option("mergeSchema", "true").parquet(path)
     require(cat.columns.contains("domain_census"),
-      s"catalog at $path predates the domain_census column (round-14 " +
+      s"catalog at $path predates the domain_census column (current " +
         "appends carry it); re-append the dumps before splicing drift")
     val rows = cat.where(col("dump_id") === dumpId)
     val n = rows.count()
@@ -249,7 +249,7 @@ object CorpusCatalog {
                     dumpId: String): DataFrame = {
     val cat = spark.read.option("mergeSchema", "true").parquet(path)
     require(cat.columns.contains("cluster_census"),
-      s"catalog at $path predates the cluster_census column (round-15 " +
+      s"catalog at $path predates the cluster_census column (current " +
         "appends carry it); re-append the dumps before profiling " +
         "duplication concentration")
     val rows = cat.where(col("dump_id") === dumpId)
@@ -285,7 +285,7 @@ object CorpusCatalog {
     val cat = spark.read.option("mergeSchema", "true").parquet(path)
     require(cat.columns.contains("containment_census"),
       s"catalog at $path predates the containment_census column " +
-        "(round-16 appends carry it); re-append the dumps before " +
+        "(current appends carry it); re-append the dumps before " +
         "profiling containment posture")
     val rows = cat.where(col("dump_id") === dumpId)
     val n = rows.count()
@@ -347,7 +347,7 @@ object CorpusCatalog {
                dumpId: String): DataFrame = {
     val cat = spark.read.option("mergeSchema", "true").parquet(path)
     require(cat.columns.contains("gram_topk"),
-      s"catalog at $path predates the gram_topk column (round-16 " +
+      s"catalog at $path predates the gram_topk column (current " +
         "appends carry it); re-append the dumps before splicing " +
         "heavy-gram drift")
     val rows = cat.where(col("dump_id") === dumpId)
@@ -447,7 +447,7 @@ object CorpusCatalog {
       require(r.where(col("gram_topk").isNotNull && col("cms").isNotNull)
           .count() == 1,
         s"catalog row for dump '$id' at $path carries no top-gram census " +
-          "or no CMS (appended without topGrams, or pre-round-12); " +
+          "or no CMS (appended without topGrams, or before the CMS column); " +
           "re-append the dump before splicing heavy-gram drift")
       r
     }
@@ -527,7 +527,7 @@ object CorpusCatalog {
   def joinSizes(spark: SparkSession, path: String): DataFrame = {
     val cat = spark.read.option("mergeSchema", "true").parquet(path)
     require(cat.columns.contains("cms"),
-      s"catalog at $path predates the CMS column (round-12 appends carry " +
+      s"catalog at $path predates the CMS column (current appends carry " +
         "it); re-append the dumps or rebuild the catalog before splicing " +
         "join sizes")
     val dims = cat.select(col("cms_depth"), col("cms_width")).distinct()
@@ -564,7 +564,7 @@ object CorpusCatalog {
     val joined = a.join(b, col("dump_a") < col("dump_b"))
     // est_join: the CMS min-over-rows — a structural UPPER BOUND, tight
     // on heavy-hitter streams. est_join_cs (when the catalog carries
-    // Count-Sketches; round-13 appends do): the AMS median-of-rows —
+    // Count-Sketches; current appends do): the AMS median-of-rows —
     // UNBIASED, the number to plan with in the sparse wide-domain regime
     // where the CMS bound is loose. Pre-CS catalogs get est_join only.
     val base = joined.select(col("dump_a"), col("dump_b"),

@@ -237,7 +237,7 @@ object JaccardJoin {
   }
 
   /** The persisted (shingle-array, ranked-row) tables behind the
-    * containment family, exposed as a seam (r20, guide §2.4 reuse): a
+    * containment family, exposed as a seam for reuse: a
     * caller comparing several SUB-CORPORA of one dump (d163's per-release
     * drift) derives the corpus-wide tables ONCE and hands parity-filtered
     * views to [[containmentPairsFromRanked]], instead of re-running the
@@ -276,8 +276,8 @@ object JaccardJoin {
     // full ranked table (same global order, same ranks — prefixRows at
     // threshold t only adds the r ≤ |x| − ⌈t·|x|⌉ + 1 cut), so derive it
     // from the persisted `full` instead of re-running the whole
-    // explode + df-join + rank window a second time (r19 optimization,
-    // guide §2.4 "remove shuffles outright": one full pass over the
+    // explode + df-join + rank window a second time (removing the
+    // shuffles outright: one full pass over the
     // shingle table, its freq equijoin and its per-doc rank exchange
     // drop out of the plan; the filter reads cached blocks).
     val prefix = full.where(col("r") <=
@@ -299,7 +299,7 @@ object JaccardJoin {
       .join(sh.select(col(idCol).as("doc_b"), col("sh_arr").as("sb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         // round(|A∩B| / |A|, 6) via the native ratio kernel — identical
-        // values, no per-candidate BigDecimal round-trip (r20, guide §4)
+        // values, no per-candidate BigDecimal round-trip
         graft.plans.ArrayExpressions.roundRatioColumn(cand.sparkSession,
           MinHashLSH.intersectCountCol(cand.sparkSession,
             col("sa"), col("sb")),
@@ -363,7 +363,7 @@ object JaccardJoin {
       .join(shA.select(col(idCol).as("doc_a"), col("sh_arr").as("sa")), Seq("doc_a"))
       .join(shB.select(col(idCol).as("doc_b"), col("sh_arr").as("sb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        // same native ratio rounding as containmentPairs (r20, guide §4)
+        // same native ratio rounding as containmentPairs
         graft.plans.ArrayExpressions.roundRatioColumn(cand.sparkSession,
           MinHashLSH.intersectCountCol(cand.sparkSession,
             col("sa"), col("sb")),

@@ -216,6 +216,11 @@ object MinHashLSH {
     * groups are near-cliques, so 2-3 rounds typically suffice). Each round
     * is one join + one agg; nothing ever collects to the driver.
     * Returns (id, cluster) for every id appearing in `pairs`.
+    *
+    * Runs its rounds eagerly at call time (each round's convergence probe
+    * is a job), so a temp view over its output, or over
+    * [[canonicalByQuality]] fed by it, is not lazy like a projection:
+    * its jobs run when the view is defined.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

@@ -1444,7 +1444,7 @@ object TextAnalysis {
                 n: Int, k: Int): org.apache.spark.sql.DataFrame = {
     require(n > 0 && k > 0, s"need positive n/k, got n=$n k=$k")
     val w = col("__w")
-    // Native gram emission (r20, guide §4 / the ShingleHashes lesson):
+    // Native gram emission (the ShingleHashes lesson):
     // the interpreted `transform(sequence(...), i => array_join(slice(w,
     // i, n), " "))` walked a lambda tree and allocated a slice array per
     // gram POSITION — graft_grams builds each gram string in one
@@ -1480,7 +1480,7 @@ object TextAnalysis {
     */
   def charEntropy(df: org.apache.spark.sql.DataFrame, idCol: String,
                   textCol: String): org.apache.spark.sql.DataFrame = {
-    // Map-only since r20 (guide §2.3 taken to its limit): the result is
+    // Map-only, with no shuffle at all: the result is
     // per-doc and depends only on that doc's characters, so the explode →
     // (doc, char) partial agg → doc agg chain shuffled a census sized by
     // total corpus CHARACTERS for values that never needed to leave the

@@ -193,7 +193,7 @@ object VectorIVF {
     * v1 stamps carry no version prefix at all), so [[loadIndex]] can tell
     * "stamp computed by an older formula — recompute and re-save" from
     * "genuinely different corpus" instead of reporting every format change
-    * as corpus drift (advisor, round 18).
+    * as corpus drift.
     */
   val FingerprintVersion = "v2"
 

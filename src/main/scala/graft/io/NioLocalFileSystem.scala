@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** `file:` filesystem for JVMs WITHOUT the Hadoop native library, with the
   * shell-fork hot paths replaced by `java.nio` calls.
   *
-  * Why it exists (r19 optimization, guide §1 "measure first"): without
+  * Why it exists (measured first, then optimized): without
   * `libhadoop.so`, [[RawLocalFileSystem]] falls back to FORKING A PROCESS
   * for file metadata — `chmod` per created file/dir (`setPermission`),
   * `readlink`/`stat`/`ls -ld` per `getFileStatus` — and the default

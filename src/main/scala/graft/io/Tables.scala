@@ -26,17 +26,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/$name.parquet")
 
-  /** Scan the `events` table, normalizing its TIMESTAMP(NANOS) parquet column
-    * (which Spark 4 rejects outright) to a standard microsecond TIMESTAMP.
-    * Set per-session at runtime so this works under the driver's own
-    * SparkSession too. Truncation ns→µs is a floor, matching DuckDB's.
-    */
-  def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.withColumn("ts", asTimestamp(raw.schema("ts").dataType, "ts"))
-  }
-
   /** Scan `events` keeping `ts` in its RAW storage type — epoch-ns long
     * for legacy TIMESTAMP(NANOS) files (Spark 4 rejects them without
     * `nanosAsLong`), µs TIMESTAMP_NTZ for the current parquet. Preferred

@@ -29,8 +29,9 @@ object ArgmaxLatest {
   }
 
   /** Window-based variant (`row_number() == 1`). Same semantics; costs a full
-    * sort within each hash partition instead of a partial-agg combine. Kept
-    * for top-K > 1 and for plan comparison in tests/bench.
+    * sort within each hash partition instead of a partial-agg combine. It is
+    * the reference that OpsSpec's parity check compares [[latestRows]]
+    * against; top-K > 1 goes through [[topKPerKey]].
     */
   def latestRowsWindow(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(_.desc): _*)

@@ -39,10 +39,4 @@ object DynamicFilter {
     */
   def leArg(c: Column, v: Long): Option[Column] =
     if (v == -1L) None else Some(c <= lit(v))
-
-  /** Membership filter (`Backup.java:48-51`). For large lists prefer a
-    * left_semi join against a DataFrame of keys instead.
-    */
-  def inArg(c: Column, vs: Seq[Int]): Option[Column] =
-    if (vs == null || vs.isEmpty) None else Some(c.isin(vs: _*))
 }

@@ -28,7 +28,10 @@ object Scd2 {
   /** `df(keyCol, tsCol, ordCol, valueCol)` → one row per value CHANGE:
     * (keyCol, valueCol, eff_from = that row's `tsCol`, eff_to = the next
     * change's `tsCol`, or `openEnd` for the still-current interval).
-    * `ordCol` breaks same-instant ties deterministically.
+    * `ordCol` breaks same-instant ties deterministically. The NULL default
+    * `openEnd` is type-correct for any `tsCol` type, where a hard-coded
+    * `-1L` sentinel fails analysis against a timestamp column; callers on
+    * numeric epochs pass `lit(-1L)` to keep the q46 sentinel shape.
     */
   def fromLog(df: DataFrame, keyCol: String, tsCol: String, ordCol: String,
               valueCol: String, openEnd: Column = lit(null)): DataFrame = {

@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -16,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `OpenHashSet` over one side AND materializes the full intersection
   * array per row — only for `size` to read its length and drop it. On a
   * pair-verify stage that runs once per CANDIDATE (not per doc), that is
-  * the dominant allocation source of the whole join: the round-16 driver
-  * bench measured 48 s of GC on d131's 688 tasks where the quiet-box run
-  * of the same plan pays 2.4 s. This expression counts common elements
+  * the dominant allocation source of the whole join: one driver bench run
+  * measured 48 s of GC on d131's 688 tasks where the quiet-box run of the
+  * same plan pays 2.4 s. This expression counts common elements
   * with a two-pointer merge — ZERO allocation, no boxing, whole-stage
   * codegen-friendly — and returns the count directly.
   *
@@ -87,7 +86,7 @@ object SortedLongIntersectCount {
   * division instead of Spark's `Round(double)` path, which per row does
   * `Double.toString` → `new BigDecimal(String)` → `setScale` →
   * `doubleValue` (measured 4-6% of the containment family's executor
-  * samples at r20, since the verify evaluates it once per CANDIDATE).
+  * samples, since the verify evaluates it once per CANDIDATE).
   *
   * BIT-FOR-BIT equal to `round(CAST(num AS DOUBLE) / den, 6)` on the
   * fast path, proven as follows: HALF_UP at scale 6 of the EXACT rational
@@ -148,39 +147,27 @@ object RoundRatio6 {
   }
 }
 
-/** Registration for [[SortedLongIntersectCount]] under the SQL name
-  * `graft_intersect_count` (the [[TextExpressions]] discipline).
+/** The guarded builders and `Column` helpers for `graft_intersect_count`
+  * ([[SortedLongIntersectCount]]) and `graft_round_ratio` ([[RoundRatio6]]);
+  * [[GraftFunctions]] registers them.
   */
 object ArrayExpressions {
 
-  private val fid = FunctionIdentifier("graft_intersect_count")
-  private val info = new ExpressionInfo(
-    classOf[SortedLongIntersectCount].getName, "graft_intersect_count")
   private[plans] val builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2,
       s"graft_intersect_count expects 2 arguments, got ${exprs.length}")
     SortedLongIntersectCount(exprs.head, exprs(1))
   }
 
-  private val ratioFid = FunctionIdentifier("graft_round_ratio")
-  private val ratioInfo = new ExpressionInfo(
-    classOf[RoundRatio6].getName, "graft_round_ratio")
   private[plans] val ratioBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2,
       s"graft_round_ratio expects 2 arguments, got ${exprs.length}")
     RoundRatio6(exprs.head, exprs(1))
   }
 
-  /** Idempotent runtime registration (see [[VectorExpressions.ensureRegistered]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      ratioFid, ratioInfo, ratioBuilder)
-  }
-
   /** `Column` surface: |a ∩ b| for ascending-sorted distinct long arrays. */
   def intersectCountColumn(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_intersect_count", a, b)
   }
@@ -188,7 +175,7 @@ object ArrayExpressions {
   /** `Column` surface: `round(num / den, 6)` for integer columns — see
     * [[RoundRatio6]]. */
   def roundRatioColumn(spark: SparkSession, num: Column, den: Column): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_round_ratio", num, den)
   }

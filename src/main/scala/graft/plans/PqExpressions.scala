@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
@@ -100,15 +99,13 @@ object PqEncode {
   }
 }
 
-/** Registration for [[PqEncode]] under `graft_pq_encode(vec, m, ksub,
+/** The guarded builder for `graft_pq_encode(vec, m, ksub,
   * dsub, codebook_literal)` — the codebook rides as a foldable array
   * literal that the builder collapses into the expression's constructor
   * (plan-literal budget class; shipped once with the tree, not per row).
   */
 object PqExpressions {
 
-  private val fid = FunctionIdentifier("graft_pq_encode")
-  private val info = new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode")
   private[plans] val builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 5,
       s"graft_pq_encode expects 5 arguments, got ${exprs.length}")
@@ -120,13 +117,10 @@ object PqExpressions {
     PqEncode(exprs.head, m, ksub, dsub, cb)
   }
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-
   /** `Column` surface used by [[graft.functions.VectorPQ.encode]]. */
   def encodeColumn(spark: SparkSession, v: Column, m: Int, ksub: Int,
                    dsub: Int, codebook: Array[Array[Array[Double]]]): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     val flat = new Array[Double](m * ksub * dsub)
     var i = 0
     for (j <- 0 until m; c <- 0 until ksub; d <- 0 until dsub) {

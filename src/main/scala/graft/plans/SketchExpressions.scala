@@ -4,8 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -323,13 +322,12 @@ case class CountSketch(child: Expression, depth: Int, width: Int,
     copy(child = newChild)
 }
 
-/** Registration for [[KmvSketch]] (`graft_kmv`) and [[CmsSketch]]
-  * (`graft_cms`).
+/** The guarded builders and `Column` helpers for `graft_kmv`
+  * ([[KmvSketch]]), `graft_cms` ([[CmsSketch]]) and `graft_countsketch`
+  * ([[CountSketch]]); [[GraftFunctions]] registers them.
   */
 object SketchExpressions {
 
-  private val fid = FunctionIdentifier("graft_kmv")
-  private val info = new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv")
   private[plans] val builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_kmv expects 2 arguments, got ${exprs.length}")
     require(exprs(1).foldable, "graft_kmv k must be a literal")
@@ -337,8 +335,6 @@ object SketchExpressions {
       .toAggregateExpression()
   }
 
-  private val cmsFid = FunctionIdentifier("graft_cms")
-  private val cmsInfo = new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms")
   private[plans] val cmsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 3, s"graft_cms expects 3 arguments, got ${exprs.length}")
     require(exprs(1).foldable && exprs(2).foldable,
@@ -349,9 +345,6 @@ object SketchExpressions {
       .toAggregateExpression()
   }
 
-  private val csFid = FunctionIdentifier("graft_countsketch")
-  private val csInfo = new ExpressionInfo(classOf[CountSketch].getName,
-    "graft_countsketch")
   private[plans] val csBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 3,
       s"graft_countsketch expects 3 arguments, got ${exprs.length}")
@@ -363,18 +356,11 @@ object SketchExpressions {
       .toAggregateExpression()
   }
 
-  /** Idempotent runtime registration (see [[VectorExpressions.ensureRegistered]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-    spark.sessionState.functionRegistry.registerFunction(cmsFid, cmsInfo, cmsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(csFid, csInfo, csBuilder)
-  }
-
   /** `Column` surface: the KMV sketch (k smallest distinct hashes,
     * ascending) of a 60-bit-hash column, as an aggregate.
     */
   def kmvColumn(spark: SparkSession, h: Column, k: Int): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_kmv", h, org.apache.spark.sql.functions.lit(k))
   }
@@ -383,7 +369,7 @@ object SketchExpressions {
     * bucket counts) of a 60-bit-hash column, as an aggregate.
     */
   def cmsColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_cms", h, org.apache.spark.sql.functions.lit(depth),
       org.apache.spark.sql.functions.lit(width))
@@ -393,7 +379,7 @@ object SketchExpressions {
     * bucket counts) of a 60-bit-hash column, as an aggregate.
     */
   def csColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_countsketch", h, org.apache.spark.sql.functions.lit(depth),
       org.apache.spark.sql.functions.lit(width))

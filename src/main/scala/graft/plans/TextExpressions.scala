@@ -3,8 +3,7 @@ package graft.plans
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -197,8 +196,8 @@ object CharEntropy {
   * map-only struct: (n_chars, n_distinct, entropy) from a single pass
   * over the string's code points with a local histogram.
   *
-  * Why this exists (r20, guide §2.3 "aggregate before you shuffle" taken
-  * to its limit): the aggregation form explodes one row PER CHARACTER and
+  * Why this exists ("aggregate before you shuffle" taken to its limit):
+  * the aggregation form explodes one row PER CHARACTER and
   * shuffles the (doc, char) census twice — at corpus scale that is a
   * shuffle sized by total corpus CHARACTERS for a per-doc result that
   * never needed to leave its row. This kernel computes the identical
@@ -273,29 +272,25 @@ object CharCensus {
   }
 }
 
-/** Registration for [[ShingleHashes]] under the SQL name `graft_shingles`. */
+/** The guarded builders and `Column` helpers for `graft_shingles`
+  * ([[ShingleHashes]]), `graft_entropy` ([[CharEntropy]]), `graft_grams`
+  * ([[GramStrings]]) and `graft_char_census` ([[CharCensusExpr]]);
+  * [[GraftFunctions]] registers them.
+  */
 object TextExpressions {
 
-  private val fid = FunctionIdentifier("graft_shingles")
-  private val info = new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles")
   private[plans] val builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_shingles expects 2 arguments, got ${exprs.length}")
     require(exprs(1).foldable, "graft_shingles n must be a literal")
     ShingleHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue)
   }
 
-  private val entropyFid = FunctionIdentifier("graft_entropy")
-  private val entropyInfo =
-    new ExpressionInfo(classOf[CharEntropy].getName, "graft_entropy")
   private[plans] val entropyBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1,
       s"graft_entropy expects 1 argument, got ${exprs.length}")
     CharEntropy(exprs.head)
   }
 
-  private val gramsFid = FunctionIdentifier("graft_grams")
-  private val gramsInfo =
-    new ExpressionInfo(classOf[GramStrings].getName, "graft_grams")
   private[plans] val gramsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2,
       s"graft_grams expects 2 arguments, got ${exprs.length}")
@@ -303,43 +298,29 @@ object TextExpressions {
     GramStrings(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue)
   }
 
-  private val censusFid = FunctionIdentifier("graft_char_census")
-  private val censusInfo =
-    new ExpressionInfo(classOf[CharCensusExpr].getName, "graft_char_census")
   private[plans] val censusBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1,
       s"graft_char_census expects 1 argument, got ${exprs.length}")
     CharCensusExpr(exprs.head)
   }
 
-  /** Idempotent runtime registration (see [[VectorExpressions.ensureRegistered]]). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      entropyFid, entropyInfo, entropyBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      gramsFid, gramsInfo, gramsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      censusFid, censusInfo, censusBuilder)
-  }
-
   /** `Column` surface: hashes of the n-word grams of a string-array column. */
   def shinglesColumn(spark: SparkSession, words: Column, n: Int): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_shingles", words, org.apache.spark.sql.functions.lit(n))
   }
 
   /** `Column` surface: per-row char-entropy in nats (null for empty). */
   def entropyColumn(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function("graft_entropy", text)
   }
 
   /** `Column` surface: the n-word gram STRINGS of a string-array column —
     * see [[GramStrings]]. */
   def gramsColumn(spark: SparkSession, words: Column, n: Int): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
       "graft_grams", words, org.apache.spark.sql.functions.lit(n))
   }
@@ -347,7 +328,7 @@ object TextExpressions {
   /** `Column` surface: per-row char census struct (n_chars, n_distinct,
     * entropy); null for null/empty text — see [[CharCensusExpr]]. */
   def charCensusColumn(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function("graft_char_census", text)
   }
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for the embedding dot product.
@@ -134,27 +132,16 @@ case class SqDistance(left: Expression, right: Expression)
     })
 }
 
-/** Registration for [[DotProduct]] under the SQL name `graft_dot`. */
+/** The guarded builders and `Column` helpers for `graft_dot` ([[DotProduct]])
+  * and `graft_l2` ([[SqDistance]]); [[GraftFunctions]] registers them.
+  */
 object VectorExpressions {
 
-  private val fid = FunctionIdentifier("graft_dot")
-  private val info = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
   private[plans] val builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_dot expects 2 arguments, got ${exprs.length}")
     DotProduct(exprs.head, exprs(1))
   }
 
-  /** Idempotently register into an existing session (the driver owns the
-    * SparkSession in the harness, so config-time extensions aren't
-    * guaranteed — this is the runtime path the library calls itself).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-    spark.sessionState.functionRegistry.registerFunction(l2Fid, l2Info, l2Builder)
-  }
-
-  private val l2Fid = FunctionIdentifier("graft_l2")
-  private val l2Info = new ExpressionInfo(classOf[SqDistance].getName, "graft_l2")
   private[plans] val l2Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_l2 expects 2 arguments, got ${exprs.length}")
     SqDistance(exprs.head, exprs(1))
@@ -162,50 +149,13 @@ object VectorExpressions {
 
   /** `Column` surface: registers on first use, then plain `call_function`. */
   def dotColumn(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function("graft_dot", a, b)
   }
 
   /** `Column` surface for the squared-L2 kernel. */
   def l2Column(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.registerFunction(l2Fid, l2Info, l2Builder)
+    GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function("graft_l2", a, b)
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` for deployments that
-  * own the session config (a real cluster) — same function, injected at
-  * session build instead of first use.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  // Reuse the runtime-registry builders so both registration paths share
-  // the same arity/foldability guards (a one-arg or non-literal-n SQL call
-  // must fail with the clear require message, not an IndexOutOfBounds or
-  // an obscure eval error).
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      VectorExpressions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles"),
-      TextExpressions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_entropy"),
-      TextExpressions.entropyBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2"),
-      new ExpressionInfo(classOf[SqDistance].getName, "graft_l2"),
-      VectorExpressions.l2Builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      PqExpressions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv"),
-      SketchExpressions.builder))
   }
 }

@@ -1,13 +1,19 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.io.Tables
-import graft.plans.VectorExpressions
+import graft.plans.GraftFunctions
 
 /** SQL surface (SURVEY.md §7.1 `sql/`): make the whole catalog and the
   * native functions reachable from `spark.sql("...")` — temp views for
-  * every testdata table plus the `graft_dot` expression. Idempotent.
+  * every testdata table, the document-analysis views below, and every
+  * `graft_*` function in [[GraftFunctions.Table]]. Idempotent.
+  *
+  * Any other operator reaches SQL the same way these views do: call it,
+  * then `.createOrReplaceTempView(name)` on its output. Most operators
+  * take arguments a SQL literal cannot carry (a join `Column`, a `Seq` of
+  * frames, a loader function), so there is no per-operator wrapper here.
   */
 object GraftSql {
 
@@ -24,9 +30,7 @@ object GraftSql {
     // events via the storage-typed scan so SQL-level ts predicates stay
     // pushable (TIMESTAMP literals coerce against the NTZ column)
     Tables.loadEventsRaw(spark, dir).createOrReplaceTempView("events")
-    VectorExpressions.ensureRegistered(spark)
-    graft.plans.TextExpressions.ensureRegistered(spark)
-    graft.plans.SketchExpressions.ensureRegistered(spark)
+    GraftFunctions.register(spark)
     registerDocViews(spark, contaminationThreshold, heldOutSplit)
   }
 
@@ -35,8 +39,8 @@ object GraftSql {
     * quality >= 0.3 AND lang_pred = 'en'`). Views stay lazy projections —
     * codegen'd column math over the base scan, no UDFs, filters still push
     * through to parquet.
-    */
-  /** @param contaminationThreshold min Jaccard for `contamination_pairs`
+    *
+    * @param contaminationThreshold min Jaccard for `contamination_pairs`
     * @param heldOutSplit which `split` value counts as held-out (that side
     *                     becomes `doc_a`; every other split is the corpus
     *                     side) — so a SQL user wanting 0.7 or a val-split
@@ -75,10 +79,11 @@ object GraftSql {
       // `documents_scored` (the d26 shape). Lazy like every view here —
       // the prefix-join work runs only when the view is queried.
       val scored = spark.table("documents_scored")
-      registerCrossDups(spark, "contamination_pairs",
-        scored.where(col("split") === heldOutSplit),
-        scored.where(col("split") =!= heldOutSplit),
-        "doc_id", "text", threshold = contaminationThreshold)
+      graft.functions.JaccardJoin.similarPairsAcross(
+          scored.where(col("split") === heldOutSplit),
+          scored.where(col("split") =!= heldOutSplit),
+          "doc_id", "text", contaminationThreshold)
+        .createOrReplaceTempView("contamination_pairs")
       // Verbatim-span twin of contamination_pairs (the d35 shape): per
       // held-out doc, how many exact 13-grams also occur in the train
       // splits. Same split parameterization; lazy like every view here.
@@ -120,516 +125,4 @@ object GraftSql {
         .createOrReplaceTempView("semdedup_flags")
     }
   }
-
-  /** Cross-set near-dup pairs ([[graft.functions.JaccardJoin
-    * .similarPairsAcross]]) as a named temp view, so the newest dedup
-    * operator is reachable from `spark.sql` — `r`-side ids come back as
-    * `doc_a`, `s`-side as `doc_b`, with the exact `jaccard` attached.
-    */
-  def registerCrossDups(spark: SparkSession, viewName: String,
-                        r: DataFrame, s: DataFrame, idCol: String,
-                        textCol: String, threshold: Double): Unit =
-    graft.functions.JaccardJoin
-      .similarPairsAcross(r, s, idCol, textCol, threshold)
-      .createOrReplaceTempView(viewName)
-
-  /** BM25 top-k retrieval ([[graft.functions.TextAnalysis.bm25TopK]]) as a
-    * named temp view — `SELECT * FROM <viewName>` is the ranked result
-    * list (idCol, bm25, rk) for the given literal query terms; the d125
-    * shape for `spark.sql` users.
-    */
-  def registerBm25(spark: SparkSession, viewName: String, docs: DataFrame,
-                   idCol: String, textCol: String, terms: Seq[String],
-                   topK: Int = 10): Unit =
-    graft.functions.TextAnalysis
-      .bm25TopK(docs, idCol, textCol, terms, topK = topK)
-      .createOrReplaceTempView(viewName)
-
-  /** PageRank over an edge frame ([[graft.functions.GraphOps.pageRank]])
-    * as a named temp view — `SELECT * FROM <viewName>` is (id, rank_ppb),
-    * the d126 shape for `spark.sql` users (e.g. canonical-doc election by
-    * centrality: highest rank_ppb per cluster).
-    */
-  def registerPageRank(spark: SparkSession, viewName: String,
-                       edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 3,
-                       weightCol: Option[String] = None,
-                       seeds: Option[DataFrame] = None,
-                       danglingMass: Boolean = false): Unit =
-    graft.functions.GraphOps.pageRank(edges, srcCol, dstCol, iters,
-        weightCol = weightCol, seeds = seeds, danglingMass = danglingMass)
-      .createOrReplaceTempView(viewName)
-
-  /** Reciprocal-rank fusion ([[graft.functions.Retrieval.rrfFuse]]) as a
-    * named temp view — the d127 shape: fuse any top-k lists (each a
-    * (idCol, rankCol) frame) into one ranked view.
-    */
-  def registerRrf(spark: SparkSession, viewName: String,
-                  lists: Seq[(String, DataFrame)], idCol: String,
-                  rankCol: String, topK: Int = 10): Unit =
-    graft.functions.Retrieval.rrfFuse(lists, idCol, rankCol, topK = topK)
-      .createOrReplaceTempView(viewName)
-
-  /** Fixed-round k-core peel ([[graft.functions.GraphOps.kCore]]) as a
-    * named temp view — the d136 shape: (id, degree) of the duplicate-dense
-    * core of a symmetrized edge frame.
-    */
-  def registerKCore(spark: SparkSession, viewName: String, edges: DataFrame,
-                    srcCol: String, dstCol: String, k: Int,
-                    rounds: Int = 3): Unit =
-    graft.functions.GraphOps.kCore(edges, srcCol, dstCol, k, rounds)
-      .createOrReplaceTempView(viewName)
-
-  /** Label-propagation communities ([[graft.functions.GraphOps
-    * .labelPropagation]]) as a named temp view — the d135 shape.
-    */
-  def registerCommunities(spark: SparkSession, viewName: String,
-                          edges: DataFrame, srcCol: String, dstCol: String,
-                          iters: Int = 3,
-                          weightCol: Option[String] = None): Unit =
-    graft.functions.GraphOps.labelPropagation(edges, srcCol, dstCol, iters,
-        weightCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Fixpoint LPA communities ([[graft.functions.GraphOps
-    * .labelPropagationConverged]]) as a named temp view — the d149
-    * shape: vote until stable (or a period-2 orbit is detected and
-    * fast-forwarded), bounded by maxRounds.
-    */
-  def registerCommunitiesConverged(spark: SparkSession, viewName: String,
-                                   edges: DataFrame, srcCol: String,
-                                   dstCol: String, maxRounds: Int = 10,
-                                   weightCol: Option[String] = None): Unit =
-    graft.functions.GraphOps.labelPropagationConverged(edges, srcCol,
-        dstCol, maxRounds, weightCol)
-      .createOrReplaceTempView(viewName)
-
-  /** True-k-core view ([[graft.functions.GraphOps.kCoreConverged]]) —
-    * the d148 shape: peel to the fixpoint, bounded by maxRounds.
-    */
-  def registerKCoreConverged(spark: SparkSession, viewName: String,
-                             edges: DataFrame, srcCol: String,
-                             dstCol: String, k: Int,
-                             maxRounds: Int = 10): Unit =
-    graft.functions.GraphOps.kCoreConverged(edges, srcCol, dstCol, k,
-        maxRounds)
-      .createOrReplaceTempView(viewName)
-
-  /** Catalog-answered release drift ([[graft.functions.CorpusCatalog
-    * .domainDrift]]) as a one-row view — the d150 shape: JSD between two
-    * ingested releases with zero corpus passes.
-    */
-  def registerCatalogDrift(spark: SparkSession, viewName: String,
-                           catalogPath: String, dumpA: String,
-                           dumpB: String): Unit =
-    graft.functions.CorpusCatalog.domainDrift(spark, catalogPath,
-        dumpA, dumpB)
-      .createOrReplaceTempView(viewName)
-
-  /** Perceptual-hash near-dup pairs ([[graft.functions.SimHash
-    * .hammingPairs]]) over an (id, bit-sketch) media frame — the d164
-    * media dedup gate as SQL: `(id_a, id_b, hamming)`, id_a < id_b,
-    * pigeonhole band equijoin + exact verify (never all-pairs).
-    */
-  def registerPhashDups(spark: SparkSession, viewName: String,
-                        media: DataFrame, idCol: String, sketchCol: String,
-                        width: Int = 64, maxHamming: Int = 3): Unit =
-    graft.functions.SimHash.hammingPairs(media, idCol, sketchCol, width,
-        maxHamming)
-      .createOrReplaceTempView(viewName)
-
-  /** Release-over-release heavy-gram surge ([[graft.functions
-    * .CorpusCatalog.heavyGramDrift]]) from the persisted catalog alone —
-    * the d165 "which boilerplate surged" detector as SQL: one row per
-    * gram in either release's stored top-K census, exact counts where a
-    * gram made a top set, stored-CMS estimates where it did not.
-    */
-  def registerHeavyGramDrift(spark: SparkSession, viewName: String,
-                             catalogPath: String, dumpA: String,
-                             dumpB: String): Unit =
-    graft.functions.CorpusCatalog.heavyGramDrift(spark, catalogPath,
-        dumpA, dumpB)
-      .createOrReplaceTempView(viewName)
-
-  /** One-row Newman modularity ([[graft.functions.GraphOps.modularity]])
-    * of a community view over an edge frame — the d139 gate as SQL.
-    */
-  def registerModularity(spark: SparkSession, viewName: String,
-                         edges: DataFrame, srcCol: String, dstCol: String,
-                         assign: DataFrame, idCol: String,
-                         commCol: String): Unit =
-    graft.functions.GraphOps
-      .modularity(edges, srcCol, dstCol, assign, idCol, commCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Weighted Newman modularity ([[graft.functions.GraphOps
-    * .modularityWeighted]]) — the d152 gate as SQL.
-    */
-  def registerModularityWeighted(spark: SparkSession, viewName: String,
-                                 edges: DataFrame, srcCol: String,
-                                 dstCol: String, weightCol: String,
-                                 assign: DataFrame, idCol: String,
-                                 commCol: String): Unit =
-    graft.functions.GraphOps
-      .modularityWeighted(edges, srcCol, dstCol, weightCol, assign,
-        idCol, commCol)
-      .createOrReplaceTempView(viewName)
-
-  /** One-row degree assortativity ([[graft.functions.GraphOps
-    * .degreeAssortativity]]) of a symmetrized edge frame — the d144
-    * meter as SQL.
-    */
-  def registerAssortativity(spark: SparkSession, viewName: String,
-                            edges: DataFrame, srcCol: String,
-                            dstCol: String): Unit =
-    graft.functions.GraphOps.degreeAssortativity(edges, srcCol, dstCol)
-      .createOrReplaceTempView(viewName)
-
-  /** One-row mixture-entropy meter ([[graft.functions.Sampling
-    * .mixtureEntropy]]) — the d134 diversity census as SQL.
-    */
-  def registerMixtureEntropy(spark: SparkSession, viewName: String,
-                             df: DataFrame, domainCol: String): Unit =
-    graft.functions.Sampling.mixtureEntropy(df, domainCol)
-      .createOrReplaceTempView(viewName)
-
-  /** One-row mutual-information meter ([[graft.functions.Sampling
-    * .mutualInformation]]) — the d138 dependence census as SQL.
-    */
-  def registerMutualInformation(spark: SparkSession, viewName: String,
-                                df: DataFrame, aCol: String,
-                                bCol: String): Unit =
-    graft.functions.Sampling.mutualInformation(df, aCol, bCol)
-      .createOrReplaceTempView(viewName)
-
-  /** One-row Jensen-Shannon drift meter ([[graft.functions.Sampling
-    * .jensenShannon]]) between two frames' domain mixtures — the d141
-    * release-drift census as SQL.
-    */
-  def registerDrift(spark: SparkSession, viewName: String, p: DataFrame,
-                    q: DataFrame, domainCol: String): Unit =
-    graft.functions.Sampling.jensenShannon(p, q, domainCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Per-dimension embedding-drift census ([[graft.functions.VectorOps
-    * .embeddingDrift]]) between two vector frames — the d143 meter as SQL.
-    */
-  def registerEmbeddingDrift(spark: SparkSession, viewName: String,
-                             p: DataFrame, q: DataFrame,
-                             vecCol: String): Unit =
-    graft.functions.VectorOps.embeddingDrift(p, q, vecCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Gap-based session rollup over a (user_id, ts, value) events frame as
-    * a named temp view — the q39 shape for `spark.sql` users: one row per
-    * closed-or-open session with (user_id, session_idx, n_events,
-    * duration_s, sum_value). `tsNsCol` may be epoch-ns long or a µs
-    * timestamp (any storage the events table ships — normalized post-scan
-    * by the rollup); duration is exact integer ns division.
-    */
-  def registerSessions(spark: SparkSession, viewName: String,
-                       events: DataFrame, gapMinutes: Int = 30,
-                       tsNsCol: String = "ts"): Unit =
-    graft.ops.Sessionize.rollup(events, gapMinutes, tsNsCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Epoch-weighted training mixture (the d43 shape) as a named temp view:
-    * one row per kept (doc, epoch), weights as a plan literal — `SELECT *
-    * FROM train_mix` is the writer's feed in mixture order. See
-    * [[graft.functions.Sampling.epochMix]].
-    */
-  def registerEpochMix(spark: SparkSession, viewName: String, docs: DataFrame,
-                       idCol: String, domainCol: String,
-                       weights: Map[String, Double],
-                       default: Double = 1.0): Unit =
-    graft.functions.Sampling.epochMix(docs, idCol, domainCol, weights, default)
-      .createOrReplaceTempView(viewName)
-
-  /** Token-budget training mixture (the d44 shape) as a named temp view:
-    * per-domain weights derived from the corpus census (w = budget * share
-    * / tokens). See [[graft.functions.Sampling.tokenBudgetMix]].
-    */
-  def registerTokenBudgetMix(spark: SparkSession, viewName: String,
-                             docs: DataFrame, idCol: String, domainCol: String,
-                             textCol: String, totalTokens: Long,
-                             shares: Map[String, Double]): Unit =
-    graft.functions.Sampling
-      .tokenBudgetMix(docs, idCol, domainCol, textCol, totalTokens, shares)
-      .createOrReplaceTempView(viewName)
-
-  /** Writer-ready packed training sequences (the d41 shape) as a named
-    * temp view: documents → overlapping chunks ([[graft.functions
-    * .TextAnalysis.chunk]]) → deterministic cross-doc packing
-    * ([[graft.functions.TextAnalysis.packSequencesAcross]]). One row per
-    * (bin_group, seq_idx) with the ordered membership and the packed
-    * `seq_text` payload — `SELECT seq_text FROM packed_sequences WHERE
-    * n_tokens >= …` is the writer's feed. `bpeBudgets = true` prices
-    * chunks in merges-table BPE tokens ([[graft.functions.TextAnalysis
-    * .bpeTokenCount]]) instead of whitespace tokens.
-    */
-  def registerPackedSequences(spark: SparkSession, viewName: String,
-                              docs: DataFrame, maxTokens: Int = 64,
-                              overlap: Int = 0, seqTokens: Int = 256,
-                              numGroups: Int = 32,
-                              bpeBudgets: Boolean = false,
-                              hashOrder: Boolean = false): Unit = {
-    import graft.functions.TextAnalysis
-    val counter: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
-      if (bpeBudgets) Some(TextAnalysis.bpeTokenCount(_)) else None
-    val chunks = TextAnalysis.chunk(docs, "doc_id", "text", maxTokens,
-      overlap, tokenCounter = counter)
-    TextAnalysis.packSequencesAcross(chunks, "doc_id", seqTokens, numGroups,
-        hashOrder)
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** Distribution-matched resample (the d50 shape) as a named temp view:
-    * the corpus rebalanced to target domain shares by deterministic
-    * downsampling. See [[graft.functions.Sampling.matchDistribution]].
-    */
-  def registerMatchedMix(spark: SparkSession, viewName: String,
-                         docs: DataFrame, idCol: String, domainCol: String,
-                         targets: Map[String, Double]): Unit =
-    graft.functions.Sampling.matchDistribution(docs, idCol, domainCol, targets)
-      .createOrReplaceTempView(viewName)
-
-  /** Cluster-balanced resample (the d57 shape) as a named temp view:
-    * embedding rows rebalanced to uniform (or caller-set) quantizer-cell
-    * shares — IVF cell assignment as pseudo-domains feeding
-    * [[graft.functions.Sampling.matchDistribution]].
-    */
-  def registerClusterMix(spark: SparkSession, viewName: String,
-                         embeddings: DataFrame, idCol: String, vecCol: String,
-                         k: Int, dim: Int,
-                         targets: Option[Map[String, Double]] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.{Sampling, VectorIVF}
-    val asn = VectorIVF.assign(embeddings, idCol, vecCol,
-        VectorIVF.mdCentroids(spark, k, dim), "cell_id", "cvec")
-      .withColumn("cell", col("cell").cast("string"))
-    val tgt = targets.getOrElse(
-      (0 until k).map(c => c.toString -> 1.0 / k).toMap)
-    Sampling.matchDistribution(asn, idCol, "cell", tgt)
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** SCD2 interval history (the q46 shape) as a named temp view: the
-    * change log collapsed to `[eff_from, eff_to)` intervals. See
-    * [[graft.ops.Scd2.fromLog]].
-    */
-  def registerScd2(spark: SparkSession, viewName: String, log: DataFrame,
-                   keyCol: String, tsCol: String, ordCol: String,
-                   valueCol: String,
-                   openEnd: org.apache.spark.sql.Column =
-                     org.apache.spark.sql.functions.lit(null)): Unit =
-    // openEnd default NULL: type-correct for ANY tsCol type (a hard-coded
-    // -1L sentinel fails analysis against a timestamp column); callers on
-    // numeric epochs can pass lit(-1L) to keep the q46 sentinel shape
-    graft.ops.Scd2.fromLog(log, keyCol, tsCol, ordCol, valueCol, openEnd)
-      .createOrReplaceTempView(viewName)
-
-  /** Ordered-funnel conversion (the q48 shape) as a named temp view. See
-    * [[graft.ops.Funnel.conversion]].
-    */
-  def registerFunnel(spark: SparkSession, viewName: String, events: DataFrame,
-                     keyCol: String, tsCol: String, typeCol: String,
-                     steps: Seq[String]): Unit =
-    graft.ops.Funnel.conversion(events, keyCol, tsCol, typeCol, steps)
-      .createOrReplaceTempView(viewName)
-
-  /** Temperature-scaled domain rebalancing (the d102 shape) as a named
-    * temp view. See [[graft.functions.Sampling.temperatureMix]].
-    */
-  def registerTemperatureMix(spark: SparkSession, viewName: String,
-                             docs: DataFrame, idCol: String, domainCol: String,
-                             temperature: Double): Unit =
-    graft.functions.Sampling
-      .temperatureMix(docs, idCol, domainCol, temperature)
-      .createOrReplaceTempView(viewName)
-
-  /** 2-D skyline / Pareto frontier (the d105 shape) as a named temp view.
-    * See [[graft.ops.Skyline.skyline2D]].
-    */
-  def registerSkyline(spark: SparkSession, viewName: String, df: DataFrame,
-                      xCol: String, yCol: String): Unit =
-    graft.ops.Skyline.skyline2D(df, xCol, yCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Per-domain skyline (the d106 shape) as a named temp view. See
-    * [[graft.ops.Skyline.skylineByDomain]].
-    */
-  def registerSkylineByDomain(spark: SparkSession, viewName: String,
-                              df: DataFrame, domCol: String, xCol: String,
-                              yCol: String): Unit =
-    graft.ops.Skyline.skylineByDomain(df, domCol, xCol, yCol)
-      .createOrReplaceTempView(viewName)
-
-  /** Temporal (as-of) enrichment against an SCD2 interval table (the q49
-    * shape) as a named temp view: each event row picks up the dimension
-    * value in effect at its event time. Works on batch frames here — the
-    * same operator runs unchanged on a stream
-    * ([[graft.streaming.IntervalStream.enrichAsOf]] is the shared
-    * implementation; registering a VIEW is inherently batch-side). The
-    * join key columns must be distinct between the two frames (alias the
-    * interval side first, as q49 does with its `dim_*` columns).
-    */
-  def registerEnrichAsOf(spark: SparkSession, viewName: String,
-                         events: DataFrame, intervals: DataFrame,
-                         keyEq: org.apache.spark.sql.Column, tsCol: String,
-                         effFromCol: String = "eff_from",
-                         effToCol: String = "eff_to",
-                         openEndSentinel: Long = -1L): Unit =
-    graft.streaming.IntervalStream.enrichAsOf(events, intervals, keyEq,
-        tsCol, effFromCol, effToCol, openEndSentinel)
-      .createOrReplaceTempView(viewName)
-
-  /** Corpus distinct-cardinality sketch (the d86 shape) as a named temp
-    * view: one row (sketch, n_sketch, est_distinct) for the distinct
-    * n-gram count of a text frame — the sub-linear `COUNT(DISTINCT)`.
-    * See [[graft.functions.Sketches.kmvDistinct]]. The `graft_kmv`
-    * aggregate itself is also registered for direct SQL use
-    * (`SELECT graft_kmv(h, 256) FROM ...`).
-    */
-  def registerGramCardinality(spark: SparkSession, viewName: String,
-                              docs: DataFrame, idCol: String, textCol: String,
-                              n: Int = 3, k: Int = 256): Unit = {
-    graft.plans.SketchExpressions.ensureRegistered(spark)
-    val g = graft.functions.MinHashLSH.shingles(docs, idCol, textCol, n)
-    graft.functions.Sketches
-      .kmvDistinct(g, org.apache.spark.sql.functions.col("sh"), k)
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** Gram-frequency gate (the d110 shape) as a named temp view: the CMS
-    * estimate vs the exact count for the `topK` heaviest n-gram hashes of
-    * a text frame — the bounded-state point-frequency dual of
-    * [[registerGramCardinality]]. The `graft_cms` aggregate itself is
-    * also registered for direct SQL use
-    * (`SELECT graft_cms(h, 4, 2048) FROM ...`).
-    * See [[graft.functions.Sketches.cmsTopFreq]].
-    */
-  def registerGramFrequency(spark: SparkSession, viewName: String,
-                            docs: DataFrame, idCol: String, textCol: String,
-                            n: Int = 3, depth: Int = 4, width: Int = 2048,
-                            topK: Int = 15): Unit = {
-    graft.plans.SketchExpressions.ensureRegistered(spark)
-    val g = graft.functions.MinHashLSH.shingles(docs, idCol, textCol, n)
-    graft.functions.Sketches
-      .cmsTopFreq(g, org.apache.spark.sql.functions.col("sh"), depth, width, topK)
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** Per-domain quantile summary (the d114 shape) as a named temp view:
-    * one row per domain with n_rows and the requested integer-percent
-    * quantile points (inverted CDF, census-shaped — the corpus is never
-    * sorted). See [[graft.functions.Sampling.quantilesByDomain]].
-    */
-  def registerQuantilesByDomain(spark: SparkSession, viewName: String,
-                                df: DataFrame, domCol: String,
-                                valueCol: String,
-                                pcts: Seq[Int] = Seq(50, 90, 99)): Unit =
-    graft.functions.Sampling.quantilesByDomain(df, domCol, valueCol, pcts)
-      .createOrReplaceTempView(viewName)
-
-  /** Weighted sample (the d90 shape) as a named temp view: top-n rows per
-    * domain with inclusion probability proportional to `weightCol`
-    * (Efraimidis–Spirakis). See [[graft.functions.Sampling.weightedSample]].
-    */
-  def registerWeightedSample(spark: SparkSession, viewName: String,
-                             docs: DataFrame, idCol: String,
-                             weightCol: String, domainCol: String,
-                             n: Int): Unit =
-    graft.functions.Sampling.weightedSample(docs, idCol, weightCol, domainCol, n)
-      .createOrReplaceTempView(viewName)
-
-  /** The d56 tokenization as a named temp view: `doc_id`, the BPE token-id
-    * array, and its count — the sequence-writer column reachable from SQL.
-    * Lazy map-only projection; filters push through to the base scan.
-    */
-  def registerBpeTokens(spark: SparkSession, viewName: String,
-                        docs: DataFrame, idCol: String,
-                        textCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.TextAnalysis
-    docs.select(col(idCol),
-        TextAnalysis.bpeTokenIds(col(textCol)).as("token_ids"),
-        TextAnalysis.bpeTokenCount(col(textCol)).as("n_bpe"))
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** Semantic decontamination flags (the d81 shape) as a named temp view:
-    * `SELECT vec_id FROM <view>` is the embedding-space drop list —
-    * train rows within cosine `threshold` of any benchmark vector, with
-    * `bench_hits` for severity triage. Lazy like the tag views.
-    */
-  def registerSemanticDecon(spark: SparkSession, viewName: String,
-                            train: DataFrame, bench: DataFrame,
-                            idCol: String, vecCol: String,
-                            threshold: Double): Unit =
-    graft.functions.VectorOps
-      .semanticDecontaminate(train, bench, idCol, vecCol, threshold)
-      .createOrReplaceTempView(viewName)
-
-  /** Contrastive pairs (the d116 shape) as a named temp view:
-    * (anchor_id, cand_id, is_pos, rank) — per anchor, the top-kPos
-    * same-label positives and top-kNeg different-label hard negatives.
-    * See [[graft.functions.VectorOps.contrastivePairs]].
-    */
-  def registerContrastivePairs(spark: SparkSession, viewName: String,
-                               anchors: DataFrame, corpus: DataFrame,
-                               idCol: String, vecCol: String,
-                               labelCol: String, kPos: Int,
-                               kNeg: Int): Unit =
-    graft.functions.VectorOps
-      .contrastivePairs(anchors, corpus, idCol, vecCol, labelCol, kPos, kNeg)
-      .createOrReplaceTempView(viewName)
-
-  /** IVF cell routing (the d84 shape) as a named temp view: every row of
-    * `vectors` plus its nearest-quantizer `cell` — `GROUP BY cell` is the
-    * occupancy census, `WHERE cell = ?` the probe-side scan. Quantizer =
-    * the md5 closed-form centroids (k cells over the probed vector width),
-    * same as the ANN path's default.
-    */
-  def registerIvfCells(spark: SparkSession, viewName: String,
-                       vectors: DataFrame, idCol: String, vecCol: String,
-                       k: Int = 8, dim: Int = 64): Unit =
-    graft.functions.VectorIVF.assign(vectors, idCol, vecCol,
-        graft.functions.VectorIVF.mdCentroids(spark, k, dim),
-        "cell_id", "cvec")
-      .createOrReplaceTempView(viewName)
-
-  /** Quality-aware near-dup canonicals (the d49 shape) as a named temp
-    * view: `SELECT * FROM <view> WHERE keep` is the deduped corpus keeping
-    * each cluster's best-quality member. NOT lazy like the other views —
-    * [[graft.functions.MinHashLSH.clusters]] iterates to a fixpoint, so
-    * registration runs those jobs eagerly.
-    */
-  def registerCanonicalDocs(spark: SparkSession, viewName: String,
-                            docs: DataFrame, idCol: String, textCol: String,
-                            minJaccard: Double = 0.5): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.{MinHashLSH, TextAnalysis}
-    val pairs = MinHashLSH.nearDupPairs(docs, idCol, textCol)
-      .where(col("jaccard") >= minJaccard)
-    MinHashLSH.canonicalByQuality(docs, idCol,
-        TextAnalysis.qualityScore(col(textCol)), MinHashLSH.clusters(pairs))
-      .createOrReplaceTempView(viewName)
-  }
-
-  /** The composed reference pipeline ([[graft.queries.UpdateHistory
-    * .updateHistoryFromLog]]: seed reconstruction at `startId` + LOCF
-    * history to `endId`) as a named temp view for `spark.sql` users.
-    * `wide = false` gives the fixed-schema long form that survives
-    * unbounded argument lists.
-    */
-  def registerUpdateHistory(spark: SparkSession, viewName: String,
-                            instanceField: DataFrame, uevolField: DataFrame,
-                            snapshotCatalog: Option[DataFrame],
-                            snapshotLoader: String => DataFrame,
-                            args: DataFrame, startId: Long, endId: Long,
-                            wide: Boolean = true): Unit =
-    graft.queries.UpdateHistory
-      .updateHistoryFromLog(instanceField, uevolField, snapshotCatalog,
-        snapshotLoader, args, startId, endId, wide)
-      .createOrReplaceTempView(viewName)
 }

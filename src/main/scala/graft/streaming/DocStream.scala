@@ -189,7 +189,7 @@ object DocStream {
     * periodically over accumulated edges IS that pass, kept batch-side
     * deliberately: exact transitive closure needs corpus-wide iteration,
     * and an in-stream union-find would serialize every edge through one
-    * state key (documented in COVERAGE.md since round 5).
+    * state key (documented in COVERAGE.md).
     *
     * Canonical-verify is the SemDeDup trade (d34, spec-pinned there): a
     * doc near-duplicate of a bucket MEMBER but not of the bucket's
@@ -557,7 +557,7 @@ object DocStream {
     * this engine runs (256); a deployment pushing cap into the tens of
     * thousands should swap the scan for SpaceSaving's stream-summary
     * bucket list (O(1) eviction), a drop-in change behind this signature.
-    * ADJUDICATED round 18 (BASELINE.md standing notes): at the
+    * Measured (BASELINE.md standing notes): at the
     * adversarial end of this engine's operating points the scan is
     * single-digit ms per key per batch — the swap is documented, not
     * needed.

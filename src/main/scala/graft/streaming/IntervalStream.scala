@@ -51,7 +51,9 @@ object IntervalStream {
     * every event in the most recent (open) interval, the most common
     * lookup of all. An event before the key's first interval gets no
     * row (inner join — the caller chooses outer semantics by unioning
-    * misses).
+    * misses). The join key columns must be distinct between the two
+    * frames: alias the interval side first, as q49 does with its `dim_*`
+    * columns.
     */
   def enrichAsOf(events: DataFrame, intervals: DataFrame, keyEq: Column,
                  tsCol: String, effFromCol: String = "eff_from",

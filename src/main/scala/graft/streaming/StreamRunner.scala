@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Per-batch accounting of every [[StreamRunner.runToBatch]] run, kept in a
   * bounded in-memory queue so the BENCH artifact can decompose a streaming
-  * row's wall time into batches×cost (round 14's d38 flag was bimodal
+  * row's wall time into batches×cost (a d38 flag once came from bimodal
   * 7 s / 36 s samples — a lifecycle signature no total-seconds number can
   * explain). Bench drains this after each query into BENCH_DETAIL.json;
   * Verify and tests ignore it (the queue caps itself, so not draining
@@ -144,7 +144,7 @@ object StreamRunner {
     // exist to detect corruption in LONG-LIVED checkpoints between runs.
     // Every run here writes an EPHEMERAL checkpoint (temp dir, deleted on
     // completion) — yet the checksum manager was measured to dominate the
-    // stateful rows' task time (r19 stack sampling: 56% of q45's executor
+    // stateful rows' task time (stack sampling: 56% of q45's executor
     // samples in ChecksumCancellableFSDataOutputStream create/close plus
     // the per-file awaitResult thread spawns; a store commit writes one
     // sidecar per delta file × 4 stores × partitions for a stream-stream

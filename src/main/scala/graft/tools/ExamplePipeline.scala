@@ -84,7 +84,7 @@ object ExamplePipeline {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val n3 = deduped.count()
 
-    // 3b. structural audit of the pair set itself (round 14): is the
+    // 3b. structural audit of the pair set itself: is the
     // near-dup graph duplicate-dense (triangle-heavy, positive
     // modularity on its vote communities) or band-collision noise? One
     // row each — the gates a production dedup run logs per release.
@@ -149,7 +149,7 @@ object ExamplePipeline {
     graft.io.TableWriter.writeShards(packed, outDir, "seq_key", nShards = 8)
 
     // 7. append this run's catalog row — counts, grid quality, the KMV
-    // gram sketch, and (round 14) the language census: the standing
+    // gram sketch, and the language census: the standing
     // artifact any later dump-overlap OR mixture-drift question splices
     // against without re-reading this corpus
     // (CorpusCatalog.domainDrift(path, thisRun, nextRun)).

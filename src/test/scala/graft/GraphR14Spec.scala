@@ -418,9 +418,9 @@ class GraphR14Spec extends SparkSpec {
   test("round-14 graph views answer plain SQL") {
     import spark.implicits._
     // dangling PageRank view: 1 -> 2 sink fixture, mass conserved
-    graft.sql.GraftSql.registerPageRank(spark, "pr14",
-      Seq((1L, 2L)).toDF("src", "dst"), "src", "dst", iters = 1,
-      danglingMass = true)
+    GraphOps.pageRank(Seq((1L, 2L)).toDF("src", "dst"), "src", "dst",
+        iters = 1, danglingMass = true)
+      .createOrReplaceTempView("pr14")
     assert(spark.sql("SELECT sum(rank_ppb) AS s FROM pr14").head()
       .getLong(0) === 1000000000L)
     // weighted + converged community views: strong edge wins, and the
@@ -429,22 +429,23 @@ class GraphR14Spec extends SparkSpec {
       .toDF("src", "dst")
     val sym = tri.union(tri.select(tri("dst"), tri("src")))
       .withColumn("w", lit(1L))
-    graft.sql.GraftSql.registerCommunitiesConverged(spark, "comm14", sym,
-      "src", "dst", maxRounds = 5, weightCol = Some("w"))
+    GraphOps.labelPropagationConverged(sym, "src", "dst", maxRounds = 5,
+        weightCol = Some("w"))
+      .createOrReplaceTempView("comm14")
     assert(spark.sql(
       "SELECT count(DISTINCT community) AS k FROM comm14").head()
       .getLong(0) === 1L)
     // true-k-core view: 9-node path has an EMPTY 2-core
     val path = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
-    graft.sql.GraftSql.registerKCoreConverged(spark, "core14",
-      path.union(path.select(path("dst"), path("src"))), "src", "dst",
-      k = 2, maxRounds = 10)
+    GraphOps.kCoreConverged(path.union(path.select(path("dst"), path("src"))),
+        "src", "dst", k = 2, maxRounds = 10)
+      .createOrReplaceTempView("core14")
     assert(spark.sql("SELECT count(*) AS n FROM core14").head()
       .getLong(0) === 0L)
     // weighted modularity view over the converged communities
-    graft.sql.GraftSql.registerModularityWeighted(spark, "mq14",
-      tri.withColumn("w", lit(2L)), "src", "dst", "w",
-      spark.table("comm14"), "id", "community")
+    GraphOps.modularityWeighted(tri.withColumn("w", lit(2L)), "src", "dst",
+        "w", spark.table("comm14"), "id", "community")
+      .createOrReplaceTempView("mq14")
     val mq = spark.sql(
       "SELECT total_w, intra_w, q_micro FROM mq14").head()
     // one community holding every edge: q = 1 - 1 = 0 exactly
@@ -459,8 +460,8 @@ class GraphR14Spec extends SparkSpec {
       cdir.toString, "rA", domainCol = Some("source"))
     graft.functions.CorpusCatalog.append(d, "doc_id", "text",
       cdir.toString, "rB", domainCol = Some("source"))
-    graft.sql.GraftSql.registerCatalogDrift(spark, "drift14",
-      cdir.toString, "rA", "rB")
+    graft.functions.CorpusCatalog.domainDrift(spark, cdir.toString, "rA", "rB")
+      .createOrReplaceTempView("drift14")
     assert(spark.sql("SELECT jsd2_micro FROM drift14").head()
       .getLong(0) === 0L)
   }

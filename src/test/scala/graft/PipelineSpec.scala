@@ -1638,7 +1638,7 @@ class NativeShingleSpec extends SparkSpec {
   }
 
   test("graft_shingles skips null elements exactly like concat_ws") {
-    graft.plans.TextExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     val fast = spark.sql(
       "SELECT graft_shingles(array('a', CAST(NULL AS STRING), 'b'), 3)").head().getSeq[Long](0)
     val ref = spark.sql(
@@ -1669,7 +1669,7 @@ class DotProductExprSpec extends SparkSpec {
 
   test("graft_dot nulls out on null arrays and null elements; casts floats") {
     import spark.implicits._
-    graft.plans.VectorExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     val r1 = spark.sql("SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))").head()
     assert(r1.isNullAt(0))
     val r2 = spark.sql("SELECT graft_dot(array(1.0d, NULL), array(2.0d, 3.0d))").head()
@@ -1679,7 +1679,7 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("graft_dot nulls out on ragged lengths, agreeing with zip_with") {
-    graft.plans.VectorExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     val native = spark.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d)) AS d").head()
     assert(native.isNullAt(0))
     val hof = spark.sql(
@@ -1689,7 +1689,7 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("graft_dot is usable from SQL text after registration") {
-    graft.plans.VectorExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
       .head().getDouble(0) === 11.0)
   }
@@ -2058,12 +2058,13 @@ class GraftSqlSpec extends SparkSpec {
          FROM documents""").head().getSeq[Long](0)
     assert(sk.length === 8 && sk === sk.sorted)
     val docs = graft.io.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    graft.sql.GraftSql.registerGramCardinality(spark, "gram_card", docs,
-      "doc_id", "text", n = 3, k = 64)
+    val sh3 = MinHashLSH.shingles(docs, "doc_id", "text", 3)
+    Sketches.kmvDistinct(sh3, col("sh"), 64)
+      .createOrReplaceTempView("gram_card")
     val est = spark.sql("SELECT est_distinct, n_sketch FROM gram_card").head()
     assert(est.getDouble(0) > 0.0 && est.getInt(1) === 64)
-    graft.sql.GraftSql.registerWeightedSample(spark, "wsample", docs,
-      "doc_id", "n_chars", "source", n = 3)
+    Sampling.weightedSample(docs, "doc_id", "n_chars", "source", n = 3)
+      .createOrReplaceTempView("wsample")
     val per = spark.sql(
       "SELECT source, count(*) AS n FROM wsample GROUP BY source").collect()
     assert(per.nonEmpty && per.forall(_.getLong(1) <= 3))
@@ -2072,27 +2073,29 @@ class GraftSqlSpec extends SparkSpec {
       """SELECT graft_cms(CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT), 2, 8) AS s
          FROM documents""").head().getSeq[Long](0)
     assert(cms.length === 16 && cms.sum > 0)
-    graft.sql.GraftSql.registerGramFrequency(spark, "gram_freq", docs,
-      "doc_id", "text", n = 3, depth = 4, width = 2048, topK = 5)
+    Sketches.cmsTopFreq(sh3, col("sh"), depth = 4, width = 2048, topK = 5)
+      .createOrReplaceTempView("gram_freq")
     val gf = spark.sql(
       "SELECT count(*) AS n, min(no_undercount) AS ok FROM gram_freq").head()
     assert(gf.getLong(0) === 5L && gf.getInt(1) === 1)
     // per-domain quantile summary view (d114)
-    graft.sql.GraftSql.registerQuantilesByDomain(spark, "qtiles",
-      docs.select(col("source"), col("n_chars")), "source", "n_chars")
+    Sampling.quantilesByDomain(
+        docs.select(col("source"), col("n_chars")), "source", "n_chars")
+      .createOrReplaceTempView("qtiles")
     val qt = spark.sql(
       "SELECT count(*) AS n FROM qtiles WHERE p50 <= p90 AND p90 <= p99").head()
     assert(qt.getLong(0) > 0)
     // BM25 retrieval view (d125): ranked, rk dense from 1
-    graft.sql.GraftSql.registerBm25(spark, "bm25_hits", docs,
-      "doc_id", "text", Seq("spark", "table"), topK = 5)
+    TextAnalysis.bm25TopK(docs, "doc_id", "text", Seq("spark", "table"),
+        topK = 5)
+      .createOrReplaceTempView("bm25_hits")
     val bm = spark.sql(
       "SELECT count(*) AS n, min(rk) AS lo, max(rk) AS hi FROM bm25_hits").head()
     assert(bm.getLong(0) === 5L && bm.getInt(1) === 1 && bm.getInt(2) === 5)
     // PageRank view (d126): symmetric 2-cycle fixpoint through plain SQL
     import spark.implicits._
-    graft.sql.GraftSql.registerPageRank(spark, "pr",
-      Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), "src", "dst")
+    GraphOps.pageRank(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), "src", "dst")
+      .createOrReplaceTempView("pr")
     val pr = spark.sql(
       "SELECT count(*) AS n, min(rank_ppb) AS lo, max(rank_ppb) AS hi FROM pr")
       .head()
@@ -2100,8 +2103,8 @@ class GraftSqlSpec extends SparkSpec {
       pr.getLong(2) === 500000000L)
     // RRF view (d127): single-list fusion preserves rank order
     val lst = Seq((7L, 1), (8L, 2)).toDF("id", "rank")
-    graft.sql.GraftSql.registerRrf(spark, "rrf_hits", Seq("a" -> lst),
-      "id", "rank")
+    Retrieval.rrfFuse(Seq("a" -> lst), "id", "rank")
+      .createOrReplaceTempView("rrf_hits")
     val rf = spark.sql(
       "SELECT id FROM rrf_hits WHERE rk = 1").head()
     assert(rf.getLong(0) === 7L)
@@ -2113,39 +2116,40 @@ class GraftSqlSpec extends SparkSpec {
       .toDF("src", "dst")
     val sym = tri.union(tri.select(tri("dst"), tri("src")))
     // k-core view (d136): triangle survives k=2, tail peels
-    graft.sql.GraftSql.registerKCore(spark, "core", sym, "src", "dst", k = 2)
+    GraphOps.kCore(sym, "src", "dst", k = 2).createOrReplaceTempView("core")
     assert(spark.sql("SELECT count(*) AS n FROM core").head().getLong(0) === 3L)
     // communities view (d135): one clique collapses to one label
-    graft.sql.GraftSql.registerCommunities(spark, "comm", sym, "src", "dst")
+    GraphOps.labelPropagation(sym, "src", "dst").createOrReplaceTempView("comm")
     assert(spark.sql(
       "SELECT count(DISTINCT community) AS k FROM comm WHERE id <= 3")
       .head().getLong(0) === 1L)
     // modularity view (d139) over those communities
-    graft.sql.GraftSql.registerModularity(spark, "mq", tri, "src", "dst",
-      spark.table("comm"), "id", "community")
+    GraphOps.modularity(tri, "src", "dst", spark.table("comm"), "id",
+        "community")
+      .createOrReplaceTempView("mq")
     assert(spark.sql("SELECT n_edges FROM mq").head().getLong(0) === 4L)
     // assortativity view (d144): star is exactly -1
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("src", "dst")
-    graft.sql.GraftSql.registerAssortativity(spark, "ast",
-      star.union(star.select(star("dst"), star("src"))), "src", "dst")
+    GraphOps.degreeAssortativity(
+        star.union(star.select(star("dst"), star("src"))), "src", "dst")
+      .createOrReplaceTempView("ast")
     assert(spark.sql("SELECT r_micro FROM ast").head().getLong(0) === -1000000L)
     // entropy + MI + drift meters (d134/d138/d141)
     val df = Seq(("a", "x"), ("a", "x"), ("b", "y"), ("b", "y"))
       .toDF("dom", "other")
-    graft.sql.GraftSql.registerMixtureEntropy(spark, "ent", df, "dom")
+    Sampling.mixtureEntropy(df, "dom").createOrReplaceTempView("ent")
     // balanced 2-source mix: 2*round(0.5*ln2*1e6) = 693148 over the ln2
     // grid 693147 -> the documented 1-micro-nat overshoot
     assert(spark.sql("SELECT evenness_micro FROM ent").head()
       .getLong(0) === 1000001L)
-    graft.sql.GraftSql.registerMutualInformation(spark, "mi", df,
-      "dom", "other")
+    Sampling.mutualInformation(df, "dom", "other").createOrReplaceTempView("mi")
     assert(spark.sql("SELECT nmi_micro FROM mi").head().getLong(0) === 1000000L)
-    graft.sql.GraftSql.registerDrift(spark, "drift", df, df, "dom")
+    Sampling.jensenShannon(df, df, "dom").createOrReplaceTempView("drift")
     assert(spark.sql("SELECT jsd2_micro FROM drift").head().getLong(0) === 0L)
     // embedding drift view (d143): identical sides -> zero shift
     val vecs = Seq((1L, Array(1.0f, -0.5f))).toDF("vec_id", "embedding")
-    graft.sql.GraftSql.registerEmbeddingDrift(spark, "edrift", vecs, vecs,
-      "embedding")
+    VectorOps.embeddingDrift(vecs, vecs, "embedding")
+      .createOrReplaceTempView("edrift")
     assert(spark.sql(
       "SELECT max(abs(dmean_micro)) AS s FROM edrift").head().getLong(0) === 0L)
   }
@@ -2155,7 +2159,8 @@ class GraftSqlSpec extends SparkSpec {
     // phash dups view (d164): identical sketches pair at hamming 0, the
     // all-bits-differ sketch stays out
     val media = Seq((1L, 0L), (2L, 0L), (3L, -1L)).toDF("id", "ph")
-    graft.sql.GraftSql.registerPhashDups(spark, "pdups", media, "id", "ph")
+    SimHash.hammingPairs(media, "id", "ph", width = 64)
+      .createOrReplaceTempView("pdups")
     val pd = spark.sql("SELECT id_a, id_b, hamming FROM pdups").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(pd === Seq((1L, 2L, 0)))
@@ -2173,8 +2178,8 @@ class GraftSqlSpec extends SparkSpec {
       topGrams = Some(2))
     graft.functions.CorpusCatalog.append(b, "doc_id", "text", path, "rb",
       topGrams = Some(2))
-    graft.sql.GraftSql.registerHeavyGramDrift(spark, "hsurge", path,
-      "ra", "rb")
+    CorpusCatalog.heavyGramDrift(spark, path, "ra", "rb")
+      .createOrReplaceTempView("hsurge")
     assert(spark.sql("SELECT max(surge) AS s FROM hsurge").head()
       .getLong(0) === 4L)
     assert(spark.sql(
@@ -2188,19 +2193,20 @@ class GraftSqlSpec extends SparkSpec {
       .toDF("k", "t", "o", "v")
     // default openEnd is NULL (type-correct for any ts type); numeric
     // epochs can opt into the -1 sentinel explicitly
-    graft.sql.GraftSql.registerScd2(spark, "hist", log, "k", "t", "o", "v")
+    graft.ops.Scd2.fromLog(log, "k", "t", "o", "v")
+      .createOrReplaceTempView("hist")
     val ivNull = spark.sql(
       "SELECT count(*) FROM hist WHERE eff_to IS NULL").head().getLong(0)
     assert(ivNull === 2) // one open tail per key
-    graft.sql.GraftSql.registerScd2(spark, "hist", log, "k", "t", "o", "v",
-      openEnd = lit(-1L))
+    graft.ops.Scd2.fromLog(log, "k", "t", "o", "v", openEnd = lit(-1L))
+      .createOrReplaceTempView("hist")
     val iv = spark.sql(
       "SELECT count(*) FROM hist WHERE eff_to = -1").head().getLong(0)
     assert(iv === 2)
     val ev = Seq((1L, 10L, "a"), (1L, 20L, "b"), (1L, 30L, "c"), (2L, 5L, "b"))
       .toDF("u", "t", "ty")
-    graft.sql.GraftSql.registerFunnel(spark, "funnel", ev, "u", "t", "ty",
-      Seq("a", "b", "c"))
+    graft.ops.Funnel.conversion(ev, "u", "t", "ty", Seq("a", "b", "c"))
+      .createOrReplaceTempView("funnel")
     val conv = spark.sql(
       "SELECT u, steps_reached FROM funnel ORDER BY u").collect()
     assert(conv.map(r => (r.getLong(0), r.getInt(1))).toSeq ===
@@ -2211,22 +2217,22 @@ class GraftSqlSpec extends SparkSpec {
     import spark.implicits._
     val df = (1L to 500L).map(i => (i, if (i <= 400) "a" else "b"))
       .toDF("id", "dom")
-    graft.sql.GraftSql.registerTemperatureMix(spark, "tmix", df, "id", "dom",
-      temperature = 2.0)
+    Sampling.temperatureMix(df, "id", "dom", temperature = 2.0)
+      .createOrReplaceTempView("tmix")
     val rates = spark.sql(
       "SELECT dom, max(rate) AS r FROM tmix GROUP BY dom ORDER BY dom")
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(rates.toSeq === Seq(("a", 0.5), ("b", 1.0)))
     val pts = Seq((1L, 1.0, 10L), (2L, 2.0, 8L), (3L, 0.5, 9L))
       .toDF("id", "x", "y")
-    graft.sql.GraftSql.registerSkyline(spark, "sky", pts, "x", "y")
+    graft.ops.Skyline.skyline2D(pts, "x", "y").createOrReplaceTempView("sky")
     val ids = spark.sql("SELECT id FROM sky ORDER BY id").collect()
       .map(_.getLong(0))
     assert(ids.toSeq === Seq(1L, 2L)) // (0.5, 9) dominated by (1, 10)
     val dpts = Seq((1L, "a", 1.0, 10L), (2L, "a", 2.0, 8L),
       (3L, "b", 0.5, 9L)).toDF("id", "dom", "x", "y")
-    graft.sql.GraftSql.registerSkylineByDomain(spark, "skyd", dpts,
-      "dom", "x", "y")
+    graft.ops.Skyline.skylineByDomain(dpts, "dom", "x", "y")
+      .createOrReplaceTempView("skyd")
     val perDom = spark.sql("SELECT id FROM skyd ORDER BY id").collect()
       .map(_.getLong(0))
     assert(perDom.toSeq === Seq(1L, 2L, 3L)) // b's lone point survives
@@ -2240,8 +2246,9 @@ class GraftSqlSpec extends SparkSpec {
       .select(col("k").as("dim_k"), col("v").as("dim_v"),
         col("eff_from"), col("eff_to"))
     val ev = Seq((1L, 15L), (1L, 25L), (2L, 7L), (2L, 1L)).toDF("k", "ts")
-    graft.sql.GraftSql.registerEnrichAsOf(spark, "enriched", ev, hist,
-      col("k") === col("dim_k"), "ts")
+    graft.streaming.IntervalStream.enrichAsOf(ev, hist,
+        col("k") === col("dim_k"), "ts")
+      .createOrReplaceTempView("enriched")
     val got = spark.sql(
       "SELECT k, ts, dim_v FROM enriched ORDER BY k, ts").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
@@ -2316,8 +2323,11 @@ class GraftSqlSpec extends SparkSpec {
     assert(spans.forall(r => r.getLong(1) <= r.getLong(2) && r.getLong(3) >= 1L))
     // packed_sequences: the d41 composition reachable from plain SQL,
     // with token mass conserved across the packing
-    graft.sql.GraftSql.registerPackedSequences(spark, "packed_sequences",
-      spark.table("documents"), maxTokens = 32, seqTokens = 128, numGroups = 8)
+    val chunks = TextAnalysis.chunk(spark.table("documents"), "doc_id", "text",
+      maxTokens = 32)
+    TextAnalysis.packSequencesAcross(chunks, "doc_id", seqTokens = 128,
+        numGroups = 8)
+      .createOrReplaceTempView("packed_sequences")
     val packed = spark.sql(
       """SELECT sum(n_tokens) AS mass, count(*) AS n,
            min(size(chunks)) AS minc, min(length(seq_text)) AS minlen
@@ -2331,18 +2341,18 @@ class GraftSqlSpec extends SparkSpec {
 
   test("mixing views: epoch_mix and budget_mix from plain SQL") {
     graft.sql.GraftSql.register(spark, "/root/testdata/sf0.001")
-    graft.sql.GraftSql.registerEpochMix(spark, "train_mix",
-      spark.table("documents"), "doc_id", "source",
-      Map("src1" -> 2.0, "src2" -> 0.0))
+    Sampling.epochMix(spark.table("documents"), "doc_id", "source",
+        Map("src1" -> 2.0, "src2" -> 0.0))
+      .createOrReplaceTempView("train_mix")
     val mix = spark.sql(
       """SELECT source, count(*) AS n, count(DISTINCT doc_id) AS d
          FROM train_mix GROUP BY source""").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(mix("src1")._1 === 2 * mix("src1")._2)   // weight 2: every doc twice
     assert(!mix.contains("src2"))                   // weight 0 drops
-    graft.sql.GraftSql.registerTokenBudgetMix(spark, "budget_mix",
-      spark.table("documents"), "doc_id", "source", "text", 10000L,
-      Map("src1" -> 0.5, "src3" -> 0.5))
+    Sampling.tokenBudgetMix(spark.table("documents"), "doc_id", "source",
+        "text", 10000L, Map("src1" -> 0.5, "src3" -> 0.5))
+      .createOrReplaceTempView("budget_mix")
     val doms = spark.sql("SELECT DISTINCT source FROM budget_mix").collect()
       .map(_.getString(0)).toSet
     assert(doms.subsetOf(Set("src1", "src3")) && doms.nonEmpty)
@@ -2356,16 +2366,20 @@ class GraftSqlSpec extends SparkSpec {
       .head()
     assert(g.getLong(0) > 0 && g.getLong(1) <= g.getLong(0))
     // matched mix: only listed domains survive, rate attached
-    graft.sql.GraftSql.registerMatchedMix(spark, "matched_mix",
-      spark.table("documents"), "doc_id", "lang",
-      Map("en" -> 0.6, "de" -> 0.4))
+    Sampling.matchDistribution(spark.table("documents"), "doc_id", "lang",
+        Map("en" -> 0.6, "de" -> 0.4))
+      .createOrReplaceTempView("matched_mix")
     val doms = spark.sql(
       "SELECT DISTINCT lang FROM matched_mix").collect().map(_.getString(0)).toSet
     assert(doms.subsetOf(Set("en", "de")) && doms.nonEmpty)
     assert(spark.sql("SELECT min(rate) FROM matched_mix").head().getDouble(0) > 0.0)
     // canonical docs: every doc labeled, keeps form a per-cluster argmax
-    graft.sql.GraftSql.registerCanonicalDocs(spark, "canonical_docs",
-      spark.table("documents"), "doc_id", "text")
+    val docs = spark.table("documents")
+    val pairs = MinHashLSH.nearDupPairs(docs, "doc_id", "text")
+      .where(col("jaccard") >= 0.5)
+    MinHashLSH.canonicalByQuality(docs, "doc_id",
+        TextAnalysis.qualityScore(col("text")), MinHashLSH.clusters(pairs))
+      .createOrReplaceTempView("canonical_docs")
     val c = spark.sql(
       """SELECT count(*) AS n, count(CASE WHEN keep THEN 1 END) AS k,
            count(DISTINCT cluster) AS cl FROM canonical_docs""").head()
@@ -2377,15 +2391,21 @@ class GraftSqlSpec extends SparkSpec {
 
   test("registerClusterMix and registerBpeTokens serve the d57/d56 shapes") {
     graft.sql.GraftSql.register(spark, "/root/testdata/sf0.001")
-    graft.sql.GraftSql.registerClusterMix(spark, "cluster_mix",
-      spark.table("embeddings"), "vec_id", "embedding", k = 8, dim = 64)
+    val cells = VectorIVF.assign(spark.table("embeddings"), "vec_id",
+        "embedding", VectorIVF.mdCentroids(spark, 8, 64), "cell_id", "cvec")
+      .withColumn("cell", col("cell").cast("string"))
+    Sampling.matchDistribution(cells, "vec_id", "cell",
+        (0 until 8).map(c => c.toString -> 1.0 / 8).toMap)
+      .createOrReplaceTempView("cluster_mix")
     val cm = spark.sql(
       """SELECT count(DISTINCT cell) AS cells, count(*) AS n, min(rate) AS r
          FROM cluster_mix""").head()
     assert(cm.getLong(0) >= 1L && cm.getLong(1) >= cm.getLong(0))
     assert(cm.getDouble(2) > 0.0)
-    graft.sql.GraftSql.registerBpeTokens(spark, "bpe_tokens",
-      spark.table("documents"), "doc_id", "text")
+    spark.table("documents").select(col("doc_id"),
+        TextAnalysis.bpeTokenIds(col("text")).as("token_ids"),
+        TextAnalysis.bpeTokenCount(col("text")).as("n_bpe"))
+      .createOrReplaceTempView("bpe_tokens")
     val bt = spark.sql(
       """SELECT count(*) AS n,
            count(CASE WHEN size(token_ids) = n_bpe THEN 1 END) AS agree
@@ -2402,17 +2422,18 @@ class GraftSqlSpec extends SparkSpec {
     graft.sql.GraftSql.register(spark, "/root/testdata/sf0.001")
     import org.apache.spark.sql.functions.col
     val e = spark.table("embeddings")
-    graft.sql.GraftSql.registerSemanticDecon(spark, "semantic_decon",
-      e.where(col("vec_id") >= 20), e.where(col("vec_id") < 20),
-      "vec_id", "embedding", threshold = 0.35)
+    VectorOps.semanticDecontaminate(e.where(col("vec_id") >= 20),
+        e.where(col("vec_id") < 20), "vec_id", "embedding", threshold = 0.35)
+      .createOrReplaceTempView("semantic_decon")
     val sd = spark.sql(
       "SELECT count(*) AS n, min(bench_hits) AS mn FROM semantic_decon").head()
     // every flagged row carries at least one hit; no bench ids leak in
     if (sd.getLong(0) > 0) assert(sd.getLong(1) >= 1L)
     assert(spark.sql(
       "SELECT count(*) FROM semantic_decon WHERE vec_id < 20").head().getLong(0) === 0L)
-    graft.sql.GraftSql.registerIvfCells(spark, "ivf_cells", e,
-      "vec_id", "embedding", k = 8, dim = 64)
+    VectorIVF.assign(e, "vec_id", "embedding",
+        VectorIVF.mdCentroids(spark, 8, 64), "cell_id", "cvec")
+      .createOrReplaceTempView("ivf_cells")
     val ic = spark.sql(
       """SELECT count(*) AS n, count(DISTINCT cell) AS cells,
            min(cell) AS lo, max(cell) AS hi FROM ivf_cells""").head()
@@ -2420,9 +2441,9 @@ class GraftSqlSpec extends SparkSpec {
     assert(ic.getLong(1) >= 1L && ic.getInt(2) >= 0 && ic.getInt(3) <= 7)
     // contrastive pairs view (d116): per anchor at most kPos positives
     // and kNeg negatives, ranks contiguous from 1 per (anchor, side)
-    graft.sql.GraftSql.registerContrastivePairs(spark, "cpairs",
-      e.where(col("vec_id") < 5), e, "vec_id", "embedding", "label",
-      kPos = 2, kNeg = 3)
+    VectorOps.contrastivePairs(e.where(col("vec_id") < 5), e, "vec_id",
+        "embedding", "label", kPos = 2, kNeg = 3)
+      .createOrReplaceTempView("cpairs")
     val cp = spark.sql(
       """SELECT max(CASE WHEN is_pos = 1 THEN rank ELSE 0 END) AS maxp,
            max(CASE WHEN is_pos = 0 THEN rank ELSE 0 END) AS maxn,
@@ -2432,8 +2453,8 @@ class GraftSqlSpec extends SparkSpec {
 
   test("registerSessions serves the q39 rollup to plain SQL") {
     graft.sql.GraftSql.register(spark, "/root/testdata/sf0.001")
-    graft.sql.GraftSql.registerSessions(spark, "sessions",
-      spark.table("events"), gapMinutes = 30)
+    graft.ops.Sessionize.rollup(spark.table("events"), gapMinutes = 30)
+      .createOrReplaceTempView("sessions")
     val rows = spark.sql(
       """SELECT user_id, count(*) AS n_sessions, max(n_events) AS biggest
          FROM sessions GROUP BY user_id ORDER BY user_id""").collect()
@@ -2441,8 +2462,8 @@ class GraftSqlSpec extends SparkSpec {
     assert(rows.forall(_.getLong(2) >= 1L))
     // a tighter gap can only split sessions further
     val n30 = spark.sql("SELECT count(*) FROM sessions").head().getLong(0)
-    graft.sql.GraftSql.registerSessions(spark, "sessions",
-      spark.table("events"), gapMinutes = 5)
+    graft.ops.Sessionize.rollup(spark.table("events"), gapMinutes = 5)
+      .createOrReplaceTempView("sessions")
     val n5 = spark.sql("SELECT count(*) FROM sessions").head().getLong(0)
     assert(n5 >= n30)
   }
@@ -2469,10 +2490,11 @@ class GraftSqlSpec extends SparkSpec {
     import spark.implicits._
     val args = Seq((1, Fixtures.Src, Fixtures.Dst, ""), (6, Fixtures.Src, Fixtures.Dst, ""))
       .toDF("uevol_field_id", "src_id", "dst_id", "filter")
-    graft.sql.GraftSql.registerUpdateHistory(spark, "field_history",
-      Fixtures.instanceField(spark), Fixtures.uevolField(spark),
-      Some(Fixtures.snapshotCatalog(spark)), Fixtures.snapshots(spark)(_),
-      args, 100L, 150L)
+    graft.queries.UpdateHistory.updateHistoryFromLog(
+        Fixtures.instanceField(spark), Fixtures.uevolField(spark),
+        Some(Fixtures.snapshotCatalog(spark)), Fixtures.snapshots(spark)(_),
+        args, 100L, 150L)
+      .createOrReplaceTempView("field_history")
     val got = spark.sql(
       """SELECT instance_message_id, id1_src10_dst20 AS f1, id6_src10_dst20 AS f6
          FROM field_history WHERE instance_message_id >= 120""")
@@ -2483,6 +2505,11 @@ class GraftSqlSpec extends SparkSpec {
 
 class ExtensionsSpec extends SparkSpec {
 
+  private val graftFunctions = Seq("graft_dot", "graft_l2", "graft_pq_encode",
+    "graft_shingles", "graft_entropy", "graft_grams", "graft_char_census",
+    "graft_intersect_count", "graft_round_ratio", "graft_kmv", "graft_cms",
+    "graft_countsketch")
+
   test("GraftExtensions applies cleanly; imperative registration covers SQL") {
     // spark.sql.extensions is a STATIC conf — it only takes effect on a
     // fresh JVM/SparkContext, so the config path can't run inside the
@@ -2491,18 +2518,35 @@ class ExtensionsSpec extends SparkSpec {
     // the function resolvable from SQL (the path the library actually uses
     // under the harness-owned session).
     new graft.plans.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    graft.plans.VectorExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
       .head().getDouble(0) === 11.0)
   }
 
+  test("GraftSql.register resolves every graft_* function on a fresh session") {
+    val fresh = spark.newSession()
+    graft.sql.GraftSql.register(fresh, "/root/testdata/sf0.001")
+    val missing = graftFunctions.filterNot(n => fresh.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not registered: $missing")
+  }
+
+  test("GraftExtensions injects every graft_* function") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.plans.GraftExtensions().apply(ext)
+    val registry = org.apache.spark.sql.ExtensionsProbe.injectedFunctions(ext)
+    val missing = graftFunctions.filterNot(n => registry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not injected: $missing")
+  }
+
   test("builders reject bad arity / non-literal n with a clear message") {
-    // Both registration paths (runtime registry and GraftExtensions) now
-    // share the SAME guarded builders, so pinning the registry path pins
-    // the extensions path too: a one-arg call or a non-literal n must die
-    // with the require message, not IndexOutOfBounds or an eval error.
-    graft.plans.TextExpressions.ensureRegistered(spark)
-    graft.plans.VectorExpressions.ensureRegistered(spark)
+    // Both registration paths (runtime registry and GraftExtensions) read
+    // the one GraftFunctions table of guarded builders, so pinning the
+    // registry path pins the extensions path too: a one-arg call or a
+    // non-literal n must die with the require message, not
+    // IndexOutOfBounds or an eval error.
+    graft.plans.GraftFunctions.register(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT graft_shingles(array('a','b'))").collect()
     }
@@ -3759,7 +3803,7 @@ class NativeEntropySpec extends SparkSpec {
 
   test("SQL name, null for empty, and the entropy gate band") {
     import spark.implicits._
-    graft.plans.TextExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     val h = spark.sql("SELECT graft_entropy('aabb') AS h").head().getDouble(0)
     assert(math.abs(h - math.log(2)) < 1e-5)
     assert(spark.sql("SELECT graft_entropy('') AS h").head().isNullAt(0))

@@ -28,7 +28,7 @@ class SortedIntersectSpec extends SparkSpec {
   }
 
   test("graft_intersect_count: empty and null edges") {
-    graft.plans.ArrayExpressions.ensureRegistered(spark)
+    graft.plans.GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT graft_intersect_count(array(), array(1L,2L))").head().getLong(0) === 0L)
     assert(spark.sql(
