@@ -44,15 +44,17 @@ object GraftConf {
     * `local[cpus]` with as many shuffle partitions, AQE on, UTC, no UI,
     * and [[localFsConf]].
     *
-    * The bench's stdout contract line must be its only stdout line: a
-    * raised `maxToStringFields` keeps the "Truncated the string
-    * representation of a plan" WARN from ever firing (10k covers every
-    * plan here; the widest, the q24 pivot, is far under 1k fields).
+    * A raised `maxToStringFields` keeps the "Truncated the string
+    * representation of a plan since it was too large" WARN (a plan node
+    * with more fields than the limit) from firing: 10k covers every plan
+    * here; the widest, the q24 pivot, is far under 1k fields.
     * `maxPlanStringLength` caps the plan description AQE renders on every
     * plan update even with the UI off — uncapped, that rendering measured
     * 4-9% of the deep composed queries' wall (d14/d19/d38; BASELINE.md,
     * "Plan-description rendering is capped"); no query result depends on
-    * it.
+    * it. The cap itself logs "Truncated the string representation of a
+    * plan since it was too long" on stderr each time it cuts a plan
+    * string: that WARN is the cap working, not a fault.
     */
   def session(cpus: Int): SparkSession =
     SparkSession.builder()

@@ -536,80 +536,20 @@ object GraphOps {
     * sampling per community" on the partition actually being denser than
     * chance (Q > 0) instead of trusting the fixed-round vote blindly.
     *
-    * Integer discipline: per community the positive term
-    * `(L_c·10^6) div m` and the expectation term
-    * `(D_c²·10^6) div (4m²)` are each computed in decimal(38,0) (D_c² at
-    * web scale exceeds long range) and truncated to a long SEPARATELY —
-    * both non-negative, so truncating `div` and the oracle's floor `//`
-    * agree — then summed exactly: `q_micro = Σadd − Σsub`. No float
-    * enters, so the score is a pure function of (edges, assignment).
-    *
-    * Plan: orient + dedup edges once (persisted, read twice — the
-    * [[triangleStats]] S4 shape); TWO broadcast-or-keyed joins hang the
-    * community id on each endpoint; intra-edge count and community
-    * degree are keyed aggs; the scalar m rides a broadcast 1-row
-    * crossJoin. Nodes missing from `assign` keep their own id as a
-    * singleton community (coalesce), so the score is total.
+    * Scored by `modularityCore`, shared with [[modularityWeighted]]; the
+    * one difference is unit weight over the DISTINCT edge set (a
+    * duplicate edge counts once): W = m, W_c = L_c and S_c = D_c, so the
+    * add/sub terms are the same integers. The weight columns are dropped.
     *
     * Returns ONE row: (n_nodes, n_edges, n_communities, intra_edges,
     * q_micro).
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  assign: DataFrame, idCol: String,
-                 commCol: String): DataFrame = {
-    val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(
-          least(col(srcCol), col(dstCol)).cast("long").as("a"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct().persist(disk))
-    // persisted: BOTH endpoint joins read the assignment, and the caller
-    // may hand over an expensive unmaterialized proposal (d139 feeds the
-    // 3-round LPA output here — unpersisted, every vote round would
-    // recompute once per endpoint side). Deduplicated to ONE community
-    // per id (smallest, a deterministic tie-break) — duplicate (id,comm)
-    // rows would otherwise fan out both endpoint joins and silently
-    // inflate lc/dc past n_edges.
-    val cm = graft.CacheRegistry.track(
-      assign.select(col(idCol).cast("long").as("__id"),
-          col(commCol).cast("long").as("__cm"))
-        .groupBy("__id").agg(min("__cm").as("__cm"))
-        .persist(disk))
-    val mRow = broadcast(e.agg(count(lit(1)).cast("long").as("m")))
-    // community on each endpoint; unassigned nodes become singletons
-    val cma = cm.select(col("__id").as("__ida"), col("__cm").as("__ca"))
-    val cmb = cm.select(col("__id").as("__idb"), col("__cm").as("__cb"))
-    val withC = e
-      .join(cma, e("a") === col("__ida"), "left")
-      .join(cmb, e("b") === col("__idb"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("__ca"), col("a")).as("ca"),
-        coalesce(col("__cb"), col("b")).as("cb"))
-    val intra = withC.where(col("ca") === col("cb"))
-      .groupBy(col("ca").as("c")).agg(count(lit(1)).cast("long").as("lc"))
-    val deg = withC.select(col("ca").as("c"))
-      .union(withC.select(col("cb").as("c")))
-      .groupBy("c").agg(count(lit(1)).cast("long").as("dc"))
-    val terms = deg.join(intra, Seq("c"), "left")
-      .select(col("c"), coalesce(col("lc"), lit(0L)).as("lc"), col("dc"))
-      .crossJoin(mRow)
-      .selectExpr("c", "lc",
-        "lc * CAST(1000000 AS BIGINT) div m AS add_micro",
-        ("CAST(dc AS DECIMAL(38,0)) * dc * 1000000" +
-          " div (CAST(4 AS DECIMAL(38,0)) * m * m) AS sub_micro"))
-    val nn = broadcast(e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id"))).distinct()
-      .agg(count(lit(1)).cast("long").as("n_nodes")))
-    terms.agg(
-        count(lit(1)).cast("long").as("n_communities"),
-        coalesce(sum("lc"), lit(0L)).cast("long").as("intra_edges"),
-        (coalesce(sum("add_micro"), lit(0L)) -
-          coalesce(sum("sub_micro"), lit(0L))).cast("long").as("q_micro"))
-      .crossJoin(nn).crossJoin(mRow)
-      .selectExpr("n_nodes", "m AS n_edges", "n_communities",
-        "intra_edges", "q_micro")
-  }
+                 commCol: String): DataFrame =
+    modularityCore(edges, srcCol, dstCol, None, assign, idCol, commCol)
+      .select("n_nodes", "n_edges", "n_communities", "intra_edges",
+        "q_micro")
 
   /** WEIGHTED Newman modularity (Newman 2004, "Analysis of weighted
     * networks"): `Q_w = Σ_c [W_c/W − (S_c/2W)²]` with W the total edge
@@ -618,41 +558,65 @@ object GraphOps {
     * weighted LPA vote ([[labelPropagation]] with `weightCol`): strong
     * duplicate edges count proportionally in BOTH the proposal and the
     * gate, so a community of few-but-certain duplicates scores above a
-    * blob of marginal band matches. With w ≡ 1 on a duplicate-free edge
-    * list this reduces to [[modularity]] exactly.
+    * blob of marginal band matches.
     *
-    * Same integer discipline: weights are POSITIVE longs (micro-scaled
-    * similarities), every sum a long, both grid terms truncated
-    * SEPARATELY in decimal(38,0). Capacity bound (loud ANSI overflow,
-    * never silent): the expectation term needs `S_c²·10^6 < 10^38`, i.e.
-    * total weight `W < 5·10^15` — ~5·10^9 edges at full micro (10^6)
-    * weights; at larger scales coarsen the weight grid (each 10× buys
-    * 10× the edges, an exact and documented trade). Duplicate (a, b)
-    * rows SUM their weights (multigraph convention — the unweighted
-    * form's `distinct` has no weighted analog that keeps w ≡ 1 parity
-    * on clean inputs, which the spec pins).
-    *
-    * Plan: one orient + weight-sum agg (persisted, read twice), two
-    * endpoint joins against the deduped assignment, keyed aggs, 1-row
-    * broadcast totals — the [[modularity]] shape with weight columns
-    * riding along.
+    * Scored by `modularityCore`, shared with [[modularity]]; the one
+    * difference is the weight column. Weights are POSITIVE longs (micro-scaled similarities), enforced
+    * loudly. Capacity bound (loud ANSI overflow, never silent): the
+    * expectation term needs `S_c²·10^6 < 10^38`, i.e. total weight
+    * `W < 5·10^15` — ~5·10^9 edges at full micro (10^6) weights; at
+    * larger scales coarsen the weight grid (each 10× buys 10× the edges,
+    * an exact and documented trade). Duplicate (a, b) rows SUM their
+    * weights (the multigraph convention).
     *
     * Returns ONE row: (n_nodes, n_edges, total_w, n_communities,
     * intra_edges, intra_w, q_micro).
     */
   def modularityWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                          weightCol: String, assign: DataFrame,
-                         idCol: String, commCol: String): DataFrame = {
+                         idCol: String, commCol: String): DataFrame =
+    modularityCore(edges, srcCol, dstCol, Some(weightCol), assign, idCol,
+      commCol)
+
+  /** The one modularity scorer behind [[modularity]] (unit weight on the
+    * deduped edge set) and [[modularityWeighted]] (summed weights).
+    *
+    * Integer discipline: per community the positive term
+    * `(W_c·10^6) div W` and the expectation term `(S_c²·10^6) div (4W²)`
+    * are each computed in decimal(38,0) and truncated to a long
+    * SEPARATELY — both non-negative, so truncating `div` and the oracle's
+    * floor `//` agree — then summed exactly: `q_micro = Σadd − Σsub`. No
+    * float enters, so the score is a pure function of (edges, assignment).
+    *
+    * Plan: orient + dedup edges once (persisted, read twice — the
+    * [[triangleStats]] S4 shape); TWO broadcast-or-keyed joins hang the
+    * community id on each endpoint; intra mass and community strength are
+    * keyed aggs; the totals ride a broadcast 1-row crossJoin. Nodes
+    * missing from `assign` keep their own id as a singleton community
+    * (coalesce), so the score is total.
+    */
+  private def modularityCore(edges: DataFrame, srcCol: String,
+                             dstCol: String, weightCol: Option[String],
+                             assign: DataFrame, idCol: String,
+                             commCol: String): DataFrame = {
     val disk = StorageLevel.MEMORY_AND_DISK
-    val e = graft.CacheRegistry.track(
-      edges.select(
-          least(col(srcCol), col(dstCol)).cast("long").as("a"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("b"),
-          col(weightCol).cast("long").as("w"))
-        .where(col("a") =!= col("b"))
-        .groupBy("a", "b").agg(sum("w").as("w"))
-        .persist(disk))
-    requirePositiveWeights(e, "w", "modularityWeighted")
+    val ends = edges.select(
+        least(col(srcCol), col(dstCol)).cast("long").as("a"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("b"),
+        weightCol.fold(lit(1L))(w => col(w).cast("long")).as("w"))
+      .where(col("a") =!= col("b"))
+    val e = graft.CacheRegistry.track((
+      if (weightCol.isEmpty) ends.distinct()
+      else ends.groupBy("a", "b").agg(sum("w").as("w"))
+    ).persist(disk))
+    if (weightCol.isDefined) requirePositiveWeights(e, "w", "modularityWeighted")
+    // persisted: BOTH endpoint joins read the assignment, and the caller
+    // may hand over an expensive unmaterialized proposal (d139 feeds the
+    // 3-round LPA output here — unpersisted, every vote round would
+    // recompute once per endpoint side). Deduplicated to ONE community
+    // per id (smallest, a deterministic tie-break) — duplicate (id,comm)
+    // rows would otherwise fan out both endpoint joins and silently
+    // inflate the intra and strength sums.
     val cm = graft.CacheRegistry.track(
       assign.select(col(idCol).cast("long").as("__id"),
           col(commCol).cast("long").as("__cm"))
@@ -660,6 +624,7 @@ object GraphOps {
         .persist(disk))
     val mRow = broadcast(e.agg(count(lit(1)).cast("long").as("m"),
       coalesce(sum("w"), lit(0L)).cast("long").as("wt")))
+    // community on each endpoint; unassigned nodes become singletons
     val cma = cm.select(col("__id").as("__ida"), col("__cm").as("__ca"))
     val cmb = cm.select(col("__id").as("__idb"), col("__cm").as("__cb"))
     val withC = e

@@ -266,6 +266,8 @@ object JaccardJoin {
   /** Candidate generation + exact verify of [[containmentPairs]] over
     * prebuilt [[rankedShingles]] tables (optionally filtered to a
     * sub-corpus — see rankedShingles on why ranks survive filtering).
+    * Runs `containmentCore`, shared with [[containmentPairsAcross]]; the
+    * one difference is the self-pair rule: a doc never pairs with itself.
     */
   def containmentPairsFromRanked(sh: DataFrame, full: DataFrame,
                                  idCol: String,
@@ -275,38 +277,12 @@ object JaccardJoin {
     // the probe prefix is BY DEFINITION the rank-filtered head of the
     // full ranked table (same global order, same ranks — prefixRows at
     // threshold t only adds the r ≤ |x| − ⌈t·|x|⌉ + 1 cut), so derive it
-    // from the persisted `full` instead of re-running the whole
-    // explode + df-join + rank window a second time (removing the
-    // shuffles outright: one full pass over the
-    // shingle table, its freq equijoin and its per-doc rank exchange
-    // drop out of the plan; the filter reads cached blocks).
+    // from the persisted `full` instead of re-running the explode +
+    // df-join + rank window a second time; the filter reads cached blocks
     val prefix = full.where(col("r") <=
       col("sz") - safeCeil(col("sz") * threshold) + 1)
-    val cand = prefix
-      .select(col(idCol).as("doc_a"), col("sz").as("sz_a"),
-        col("sh"), col("r").as("ra"))
-      .join(full.select(col(idCol).as("doc_b"), col("sz").as("sz_b"),
-        col("sh"), col("r").as("rb")), Seq("sh"))
-      .where(col("doc_a") =!= col("doc_b"))
-      .where(col("sz_b") >= safeCeil(col("sz_a") * threshold))
-      .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-      .agg(min("ra").as("ra"), min("rb").as("rb"))
-      .where(lit(1) + least(col("sz_a") - col("ra"), col("sz_b") - col("rb")) >=
-        safeCeil(col("sz_a") * threshold))
-      .select("doc_a", "doc_b")
-    cand
-      .join(sh.select(col(idCol).as("doc_a"), col("sh_arr").as("sa")), Seq("doc_a"))
-      .join(sh.select(col(idCol).as("doc_b"), col("sh_arr").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        // round(|A∩B| / |A|, 6) via the native ratio kernel — identical
-        // values, no per-candidate BigDecimal round-trip
-        graft.plans.ArrayExpressions.roundRatioColumn(cand.sparkSession,
-          MinHashLSH.intersectCountCol(cand.sparkSession,
-            col("sa"), col("sb")),
-          size(col("sa")).cast("long")).as("containment"),
-        size(col("sa")).cast("long").as("sz_a"),
-        size(col("sb")).cast("long").as("sz_b"))
-      .where(col("containment") >= threshold)
+    containmentCore(prefix, full, sh, sh, idCol, threshold,
+      _.where(col("doc_a") =!= col("doc_b")))
   }
 
   /** Cross-set DIRECTED containment: every (doc_a ∈ probe, doc_b ∈ corpus,
@@ -319,19 +295,18 @@ object JaccardJoin {
     * never formed (the [[similarPairsAcross]] asymmetry, here for free —
     * containment's prefix lemma is already one-sided).
     *
+    * Runs `containmentCore`, shared with [[containmentPairsFromRanked]];
+    * the one difference is the self-pair rule: none. Shared id spaces are
+    * fine (sides are tagged by frame, never unioned); a probe doc that
+    * also exists in the corpus reports its own copy at containment 1.0,
+    * the correct answer for a contamination audit.
+    *
     * Ranking correctness: prefix(A) and full(B) must be ranked under ONE
     * global order for the positional filter's min(ra)/min(rb) to land on
     * the same shared shingle — the document-frequency order is computed
-    * over BOTH sides' shingles. Shared id spaces are fine (sides are
-    * tagged by frame, never unioned); a probe doc that also exists in
-    * the corpus will report its own copy at containment 1.0, which is
-    * the correct answer for a contamination audit.
-    *
-    * Scale shape: the probe side is typically tiny (a benchmark) — its
-    * prefix table broadcasts; the corpus side is scanned once into its
-    * ranked-rows table; candidates form only on shared shingles with the
-    * length + positional pruning of [[containmentPairs]] — no false
-    * negatives, never probe×corpus.
+    * over BOTH sides' shingles. The probe side is typically tiny (a
+    * benchmark) and its prefix table broadcasts; the corpus side is
+    * scanned once into its ranked-rows table.
     */
   def containmentPairsAcross(probe: DataFrame, corpus: DataFrame,
                              idCol: String, textCol: String,
@@ -348,11 +323,26 @@ object JaccardJoin {
       prefixRows(shA, Seq(idCol), threshold, freq).persist(disk))
     val full = CacheRegistry.track(
       prefixRows(shB, Seq(idCol), 0.0, freq).persist(disk))
-    val cand = prefix
+    containmentCore(prefix, full, shA, shB, idCol, threshold, identity)
+  }
+
+  /** The containment candidate filter and exact verify shared by
+    * [[containmentPairsFromRanked]] and [[containmentPairsAcross]]:
+    * probe-prefix × candidate-full equijoin on shared shingles,
+    * `pairRule` (the caller's self-pair rule), the length filter
+    * `|B| ≥ ⌈t·|A|⌉`, the positional bound on the first shared shingle,
+    * then the exact `|A∩B| / |A|` over the shingle arrays (`shA` for the
+    * probe side, `shB` for the candidate side).
+    */
+  private def containmentCore(prefix: DataFrame, full: DataFrame,
+                              shA: DataFrame, shB: DataFrame, idCol: String,
+                              threshold: Double,
+                              pairRule: DataFrame => DataFrame): DataFrame = {
+    val cand = pairRule(prefix
       .select(col(idCol).as("doc_a"), col("sz").as("sz_a"),
         col("sh"), col("r").as("ra"))
       .join(full.select(col(idCol).as("doc_b"), col("sz").as("sz_b"),
-        col("sh"), col("r").as("rb")), Seq("sh"))
+        col("sh"), col("r").as("rb")), Seq("sh")))
       .where(col("sz_b") >= safeCeil(col("sz_a") * threshold))
       .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
       .agg(min("ra").as("ra"), min("rb").as("rb"))
@@ -363,7 +353,8 @@ object JaccardJoin {
       .join(shA.select(col(idCol).as("doc_a"), col("sh_arr").as("sa")), Seq("doc_a"))
       .join(shB.select(col(idCol).as("doc_b"), col("sh_arr").as("sb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        // same native ratio rounding as containmentPairs
+        // round(|A∩B| / |A|, 6) via the native ratio kernel — identical
+        // values, no per-candidate BigDecimal round-trip
         graft.plans.ArrayExpressions.roundRatioColumn(cand.sparkSession,
           MinHashLSH.intersectCountCol(cand.sparkSession,
             col("sa"), col("sb")),

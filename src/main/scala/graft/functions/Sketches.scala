@@ -220,29 +220,51 @@ object Sketches {
     * planner wants before running the join (Cormode & Muthukrishnan 2005,
     * §4.2). Closed-form array math over two broadcast-sized sketches.
     *
-    * Returns `decimal(38,0)`, NOT long: a row's product sum is
-    * ~N_A·N_B/width, which wraps past 2^63 once the streams reach ~1e11
-    * items at width 2048 — squarely inside the 100 TB regime — and a
-    * silently wrapped (possibly negative) estimate would violate the
-    * never-an-underestimate guarantee. Bucket counts are cast to decimal
-    * BEFORE the multiply, so the whole product-sum is exact up to 1e38.
+    * Reads `rowDots`, shared with [[csInnerProduct]]; the one difference
+    * is the combine: the min over rows.
     */
   def cmsInnerProduct(skA: Column, skB: Column, depth: Int, width: Int): Column =
-    array_min(transform(sequence(lit(0), lit(depth - 1)), r =>
+    array_min(rowDots(skA, skB, depth, width))
+
+  /** The per-row dot products `Σ_b a[r,b]·b[r,b]` of two row-major
+    * `depth × width` sketches, as `array<decimal(38,0)>` — the array
+    * [[cmsInnerProduct]] takes the min of and [[csInnerProduct]] the
+    * median of. Decimal, NOT long: a row's product sum is ~N_A·N_B/width,
+    * which wraps past 2^63 once the streams reach ~1e11 items at width
+    * 2048 — squarely inside the 100 TB regime — and a silently wrapped
+    * (possibly negative) estimate would void both estimators' guarantees.
+    * Bucket counts are cast to decimal BEFORE the multiply, so the whole
+    * product-sum is exact up to 1e38.
+    */
+  private def rowDots(skA: Column, skB: Column, depth: Int, width: Int): Column =
+    transform(sequence(lit(0), lit(depth - 1)), r =>
       aggregate(
         zip_with(
           slice(skA, r.cast("int") * width + 1, lit(width)),
           slice(skB, r.cast("int") * width + 1, lit(width)),
           (x, y) => x.cast("decimal(38,0)") * y.cast("decimal(38,0)")),
-        lit(0L).cast("decimal(38,0)"), (acc, v) => acc + v)))
+        lit(0L).cast("decimal(38,0)"), (acc, v) => acc + v))
+
+  /** The exact equijoin size `Σ_x fA(x)·fB(x)` of two hashed streams
+    * (column `h`) as a one-row `true_join` decimal(38,0): two censuses
+    * and one equijoin — the truth side of [[cmsJoinSize]] and
+    * [[csJoinSize]], never part of a deployed sketch path.
+    */
+  private def exactJoinSize(sa: DataFrame, sb: DataFrame): DataFrame =
+    sa.groupBy("h").agg(count(lit(1)).as("ca"))
+      .join(sb.groupBy("h").agg(count(lit(1)).as("cb")), "h")
+      .agg(coalesce(sum(col("ca").cast("decimal(38,0)") * col("cb")),
+        lit(0L).cast("decimal(38,0)")).as("true_join"))
 
   /** Join-size gate (the d113 shape): the CMS estimate of the gram-
     * equijoin size between two corpora vs the exact value, plus the
-    * structural no-underestimate flag. The exact side (two censuses +
-    * one equijoin) exists ONLY as the gate's truth source — the deployed
-    * path answers from two persisted sketches (depth·width longs each)
-    * without touching either corpus again, the same standing-artifact
-    * contract as [[kmvOverlap]] for set overlap.
+    * structural no-underestimate flag. The truth side is
+    * `exactJoinSize`, shared with [[csJoinSize]]; the difference is the
+    * estimator (Count-Min, [[cmsInnerProduct]]) and the row it emits. The
+    * truth exists ONLY as the gate's truth source — the deployed path
+    * answers from two persisted sketches (depth·width longs each) without
+    * touching either corpus again, the same standing-artifact contract as
+    * [[kmvOverlap]] for set overlap.
     *
     * Accuracy regime (measured, SCALE.md "Count-Min frequency sketch"):
     * relative error ≈ distinct-keys/width, so the estimate is TIGHT for
@@ -258,10 +280,7 @@ object Sketches {
     val sb = b.select(hb.cast("long").as("h"))
     val skA = sa.agg(cmsAgg(sa, col("h"), depth, width).as("sk_a"))
     val skB = sb.agg(cmsAgg(sb, col("h"), depth, width).as("sk_b"))
-    val truth = sa.groupBy("h").agg(count(lit(1)).as("ca"))
-      .join(sb.groupBy("h").agg(count(lit(1)).as("cb")), "h")
-      .agg(coalesce(sum(col("ca").cast("decimal(38,0)") * col("cb")),
-        lit(0L).cast("decimal(38,0)")).as("true_join"))
+    val truth = exactJoinSize(sa, sb)
     // the GATE emits longs (the oracle's BIGINT surface); both values are
     // exact decimals first, so an out-of-long-range estimate fails the
     // ANSI cast LOUDLY instead of wrapping — the deployed decimal path is
@@ -319,21 +338,13 @@ object Sketches {
     * (`element_at(array_sort(...), (depth+1)/2)` here,
     * `quantile_disc(v, 0.5)` in DuckDB).
     *
-    * decimal(38,0) throughout, like [[cmsInnerProduct]] — row sums at
-    * 100 TB scale exceed long range.
+    * Reads `rowDots`, shared with [[cmsInnerProduct]]; the one difference
+    * is the combine: the exact median over rows.
     */
   def csInnerProduct(skA: Column, skB: Column, depth: Int, width: Int): Column = {
     require(depth % 2 == 1,
       s"csInnerProduct depth=$depth must be odd (exact median element)")
-    element_at(
-      array_sort(transform(sequence(lit(0), lit(depth - 1)), r =>
-        aggregate(
-          zip_with(
-            slice(skA, r.cast("int") * width + 1, lit(width)),
-            slice(skB, r.cast("int") * width + 1, lit(width)),
-            (x, y) => x.cast("decimal(38,0)") * y.cast("decimal(38,0)")),
-          lit(0L).cast("decimal(38,0)"), (acc, v) => acc + v))),
-      (depth + 1) / 2)
+    element_at(array_sort(rowDots(skA, skB, depth, width)), (depth + 1) / 2)
   }
 
   /** The d118 gate (the d113 shape, unbiased estimator): Count-Sketch
@@ -344,8 +355,9 @@ object Sketches {
     * silent failure impossible: both item totals, the estimate, the
     * truth, the signed ratio, and the band flag.
     *
-    * `band`: |est − true| ≤ band·true ⇒ in_band = 1. The exact side is
-    * the gate's truth source only, as in [[cmsJoinSize]].
+    * `band`: |est − true| ≤ band·true ⇒ in_band = 1. The truth side is
+    * `exactJoinSize`, shared with [[cmsJoinSize]]; the difference is the
+    * estimator (Count-Sketch, [[csInnerProduct]]) and the row it emits.
     */
   def csJoinSize(a: DataFrame, b: DataFrame, ha: Column, hb: Column,
                  depth: Int, width: Int, band: Double): DataFrame = {
@@ -355,10 +367,7 @@ object Sketches {
       count(lit(1)).as("n_a"))
     val skB = sb.agg(csAgg(sb, col("h"), depth, width).as("sk_b"),
       count(lit(1)).as("n_b"))
-    val truth = sa.groupBy("h").agg(count(lit(1)).as("ca"))
-      .join(sb.groupBy("h").agg(count(lit(1)).as("cb")), "h")
-      .agg(coalesce(sum(col("ca").cast("decimal(38,0)") * col("cb")),
-        lit(0L).cast("decimal(38,0)")).as("true_join"))
+    val truth = exactJoinSize(sa, sb)
     val est = csInnerProduct(col("sk_a"), col("sk_b"), depth, width)
     skA.crossJoin(broadcast(skB)).crossJoin(broadcast(truth))
       .select(

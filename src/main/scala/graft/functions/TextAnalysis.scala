@@ -1076,17 +1076,14 @@ object TextAnalysis {
     * Complements [[ngramContamination]] (cross-split audit) and d05/d12
     * (whole-document dedup): this is the within-train, sub-document form.
     *
-    * Plan, all bucketed equijoins/windows — no all-pairs path:
-    * 1. (doc, pos, hash) for every gram start, via the native
-    *    [[graft.plans.ShingleHashes]] kernel + `posexplode` (map-only).
-    * 2. groupBy(hash): occurrences `cnt` and the canonical first
-    *    occurrence `min(struct(doc, pos))` in one partial-agg shuffle;
-    *    only grams with cnt > 1 survive (the duplicated-gram table is
-    *    tiny relative to the corpus — Lee et al. report ~1-3% of tokens).
-    * 3. join back on the hash (bucketed; output bounded by duplicated
-    *    occurrences, not by corpus size) and drop each gram's first.
-    * 4. per-doc gaps-and-islands window: gram starts within n of the
-    *    previous merge into one extent [min pos, max pos + n - 1].
+    * Shares `positionedGrams` (map-only gram starts) and `mergeSpans`
+    * (per-doc island merge) with [[contaminationSpans]]; the one
+    * difference is which occurrences are hits: groupBy(hash) finds each
+    * gram's occurrence count and canonical first occurrence
+    * `min(struct(doc, pos))` in one partial-agg shuffle, only grams with
+    * cnt > 1 survive (the duplicated-gram table is tiny relative to the
+    * corpus — Lee et al. report ~1-3% of tokens), and the join back on
+    * the hash drops each gram's first. No all-pairs path.
     *
     * The reference scheme uses suffix arrays on a single node; the
     * gram-hash bucket join is the shuffle-native equivalent (identical
@@ -1102,34 +1099,16 @@ object TextAnalysis {
   def duplicateSpans(df: org.apache.spark.sql.DataFrame, idCol: String,
                      textCol: String, n: Int = 13): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"n=$n must be positive")
-    val grams = df
-      .select(col(idCol), split(lower(col(textCol)), " ").as("__words"))
-      .where(size(col("__words")) >= n)
-      .select(col(idCol), posexplode(graft.plans.TextExpressions
-        .shinglesColumn(df.sparkSession, col("__words"), n)))
-      .select(col(idCol), col("pos"), col("col").as("sh"))
+    val grams = positionedGrams(df, idCol, textCol, n)
     val firsts = grams
       .groupBy("sh")
       .agg(min(struct(col(idCol), col("pos"))).as("__first"),
         count(lit(1)).as("__cnt"))
       .where(col("__cnt") > 1)
       .select("sh", "__first")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy("pos")
-    grams
+    mergeSpans(grams
       .join(firsts, Seq("sh"))
-      .where(struct(col(idCol), col("pos")) =!= col("__first"))
-      .select(col(idCol), col("pos"))
-      .withColumn("__brk",
-        when(col("pos") - lag("pos", 1).over(w) <= n, 0).otherwise(1))
-      .withColumn("__run", sum("__brk").over(w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-      .groupBy(col(idCol), col("__run"))
-      .agg(min("pos").as("span_start"),
-        (max("pos") + lit(n - 1)).as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(col(idCol), col("span_start"), col("span_end"), col("n_grams"))
+      .where(struct(col(idCol), col("pos")) =!= col("__first")), idCol, n)
   }
 
   /** Benchmark-contamination EXTENTS in the training corpus — where
@@ -1140,31 +1119,50 @@ object TextAnalysis {
     * surgical variant real pipelines prefer when a popular quote or
     * license block would otherwise delete millions of documents.
     *
-    * Shape: bench reduces to its DISTINCT gram-hash set (one partial agg
-    * — bounded by bench volume, broadcastable in practice); train
-    * per-position hashes (native kernel, map-only) take ONE left-semi
-    * against it; only the HIT positions — contamination mass, not corpus
-    * mass — reach the per-doc island-merge window. Every train
-    * occurrence excises (no first-keep: contaminated text has no
-    * canonical copy worth keeping). Returns (idCol, span_start,
-    * span_end, n_grams), [[duplicateSpans]]'s contract.
+    * Shares `positionedGrams` and `mergeSpans` with [[duplicateSpans]];
+    * the one difference is which occurrences are hits: every train gram
+    * whose hash is in the bench's DISTINCT gram-hash set (one partial agg
+    * — bounded by bench volume, broadcastable in practice; ONE left-semi).
+    * No first-keep: contaminated text has no canonical copy worth
+    * keeping. Only the hit positions — contamination mass, not corpus
+    * mass — reach the island-merge window. Returns (idCol, span_start,
+    * span_end, n_grams).
     */
   def contaminationSpans(train: org.apache.spark.sql.DataFrame,
                          bench: org.apache.spark.sql.DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 13): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"n=$n must be positive")
-    def grams(d: org.apache.spark.sql.DataFrame) = d
-      .select(col(idCol), split(lower(col(textCol)), " ").as("__words"))
-      .where(size(col("__words")) >= n)
-      .select(col(idCol), posexplode(graft.plans.TextExpressions
-        .shinglesColumn(d.sparkSession, col("__words"), n)))
-      .select(col(idCol), col("pos"), col("col").as("sh"))
-    val benchSet = grams(bench).select("sh").distinct()
+    val benchSet = positionedGrams(bench, idCol, textCol, n).select("sh").distinct()
+    mergeSpans(positionedGrams(train, idCol, textCol, n)
+      .join(benchSet, Seq("sh"), "left_semi"), idCol, n)
+  }
+
+  /** (idCol, pos, sh): one row per n-word gram start of every doc with at
+    * least n words — the lower-cased word split, the native
+    * [[graft.plans.ShingleHashes]] kernel and `posexplode`, map-only. The
+    * positioned-gram builder shared by [[duplicateSpans]] and
+    * [[contaminationSpans]].
+    */
+  private def positionedGrams(d: org.apache.spark.sql.DataFrame, idCol: String,
+                              textCol: String, n: Int): org.apache.spark.sql.DataFrame = d
+    .select(col(idCol), split(lower(col(textCol)), " ").as("__words"))
+    .where(size(col("__words")) >= n)
+    .select(col(idCol), posexplode(graft.plans.TextExpressions
+      .shinglesColumn(d.sparkSession, col("__words"), n)))
+    .select(col(idCol), col("pos"), col("col").as("sh"))
+
+  /** The island merge shared by [[duplicateSpans]] and
+    * [[contaminationSpans]]: per doc, hit gram starts within n of the
+    * previous one merge into one extent [min pos, max pos + n − 1]
+    * (gaps-and-islands over a doc-partitioned window). Returns (idCol,
+    * span_start, span_end, n_grams).
+    */
+  private def mergeSpans(hits: org.apache.spark.sql.DataFrame, idCol: String,
+                         n: Int): org.apache.spark.sql.DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(idCol).orderBy("pos")
-    grams(train)
-      .join(benchSet, Seq("sh"), "left_semi")
+    hits
       .select(col(idCol), col("pos"))
       .withColumn("__brk",
         when(col("pos") - lag("pos", 1).over(w) <= n, 0).otherwise(1))
@@ -1389,40 +1387,53 @@ object TextAnalysis {
     * dropped from every doc; docs are rebuilt in line order. `lines` must
     * be an array column (from real newlines or [[reflowLines]]).
     *
-    * Scale shape: explode is map-only; the line-frequency census is ONE
-    * partial-agg shuffle keyed by the line hash (md5 — uniform by
-    * construction, no skew salt needed); membership returns via a
-    * hash-equijoin on the same key (co-partitioned with the census — AQE
-    * broadcasts when the over-threshold set is small, the common case);
-    * the rebuild is one groupBy(doc) re-agg, the exciseSpans pattern. No
-    * all-pairs path: docs sharing a line never join each other, only the
-    * census row.
+    * Runs `rebuildLines`, shared with [[dedupParagraphs]]; the one
+    * difference is the keep rule, a census anti-join: the line-frequency
+    * census is ONE partial-agg shuffle keyed by the line hash (md5 —
+    * uniform by construction, no skew salt needed) and the anti-join
+    * drops the over-threshold lines (AQE broadcasts the census when it is
+    * small, the common case). No all-pairs path: docs sharing a line
+    * never join each other, only the census row. Returns (idCol, n_lines,
+    * n_kept, clean_text).
     */
   def stripBoilerplate(df: org.apache.spark.sql.DataFrame, idCol: String,
                        linesCol: String,
-                       maxDocFreq: Int = 1): org.apache.spark.sql.DataFrame = {
-    // S4 persist rule, MEASURED (SCALE.md, boilerplate stripping): the
-    // census branch and the anti-join branch both descend from this
-    // explode, and their exchanges differ (partial-agg vs join build) so
-    // AQE reuse cannot dedup the double tokenize — persist is 0.45→0.30 s
-    // at a 10x corpus, a wash at 1x.
+                       maxDocFreq: Int = 1): org.apache.spark.sql.DataFrame =
+    rebuildLines(df, idCol, linesCol) { exploded =>
+      val census = exploded.groupBy("__h")
+        .agg(countDistinct(col(idCol)).as("__df"))
+        .where(col("__df") > maxDocFreq)
+      exploded.join(census, Seq("__h"), "left_anti")
+    }
+
+  /** The line explode and doc rebuild shared by [[stripBoilerplate]] and
+    * [[dedupParagraphs]]; `keep` is the caller's keep rule over the
+    * exploded (idCol, pos, line, __h) rows.
+    *
+    * The exploded root is persisted (S4 rule, MEASURED — SCALE.md,
+    * boilerplate stripping): both keep rules read it twice (a census
+    * branch and a join branch) and their exchanges differ (partial-agg vs
+    * join build), so AQE reuse cannot dedup the double tokenize — persist
+    * is 0.45→0.30 s at a 10x corpus, a wash at 1x. The rebuild is one
+    * groupBy(doc) re-agg in line order, the exciseSpans pattern; docs
+    * whose every line is dropped come back with empty text. Returns
+    * (idCol, n_lines, n_kept, clean_text).
+    */
+  private def rebuildLines(df: org.apache.spark.sql.DataFrame, idCol: String,
+                           linesCol: String)(
+      keep: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val exploded = graft.CacheRegistry.track(df
       .select(col(idCol), posexplode_outer(col(linesCol)).as(Seq("pos", "line")))
       .where(col("line").isNotNull)
       .withColumn("__h", md5(col("line")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val census = exploded.groupBy("__h")
-      .agg(countDistinct(col(idCol)).as("__df"))
-      .where(col("__df") > maxDocFreq)
-    val kept = exploded
-      .join(census, Seq("__h"), "left_anti")
+    val kept = keep(exploded)
       .groupBy(col(idCol))
-      .agg(
-        sort_array(collect_list(struct(col("pos"), col("line")))).as("__k"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("line")))).as("__k"))
       .select(col(idCol),
         size(col("__k")).cast("long").as("n_kept"),
         array_join(transform(col("__k"), k => k("line")), "\n").as("clean_text"))
-    // fully-boilerplate docs still come back (empty), like exciseSpans
     df.select(col(idCol), size(col(linesCol)).cast("long").as("n_lines"))
       .join(kept, Seq(idCol), "left")
       .select(col(idCol), col("n_lines"),
@@ -1511,35 +1522,19 @@ object TextAnalysis {
     * keeping); here one canonical copy survives — the right rule for
     * syndicated content where the first occurrence is real prose.
     *
-    * Same scale shape as stripBoilerplate: persisted exploded root (the
-    * winner census and the keep join both read it), ONE md5-keyed
-    * `min(struct)` partial-agg for the winners (a paragraph repeated a
-    * million times combines map-side to one row), a 3-key semi join that
-    * only the duplicate occurrences lose, one doc-keyed re-agg. No
-    * all-pairs path. Returns (idCol, n_lines, n_kept, clean_text);
-    * fully-duplicate docs come back with empty text, like exciseSpans.
+    * Runs `rebuildLines`, shared with [[stripBoilerplate]]; the one
+    * difference is the keep rule, a first-occurrence semi-join: ONE
+    * md5-keyed `min(struct)` partial-agg for the winners (a paragraph
+    * repeated a million times combines map-side to one row), then a 3-key
+    * semi join that only the duplicate occurrences lose. No all-pairs
+    * path. Returns (idCol, n_lines, n_kept, clean_text).
     */
   def dedupParagraphs(df: org.apache.spark.sql.DataFrame, idCol: String,
-                      linesCol: String): org.apache.spark.sql.DataFrame = {
-    val exploded = graft.CacheRegistry.track(df
-      .select(col(idCol), posexplode_outer(col(linesCol)).as(Seq("pos", "line")))
-      .where(col("line").isNotNull)
-      .withColumn("__h", md5(col("line")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val winners = exploded.groupBy("__h")
-      .agg(min(struct(col(idCol), col("pos"))).as("__w"))
-      .select(col("__h"), col("__w")(idCol).as(idCol), col("__w")("pos").as("pos"))
-    val kept = exploded
-      .join(winners, Seq("__h", idCol, "pos"), "left_semi")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("pos"), col("line")))).as("__k"))
-      .select(col(idCol),
-        size(col("__k")).cast("long").as("n_kept"),
-        array_join(transform(col("__k"), k => k("line")), "\n").as("clean_text"))
-    df.select(col(idCol), size(col(linesCol)).cast("long").as("n_lines"))
-      .join(kept, Seq(idCol), "left")
-      .select(col(idCol), col("n_lines"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-  }
+                      linesCol: String): org.apache.spark.sql.DataFrame =
+    rebuildLines(df, idCol, linesCol) { exploded =>
+      val winners = exploded.groupBy("__h")
+        .agg(min(struct(col(idCol), col("pos"))).as("__w"))
+        .select(col("__h"), col("__w")(idCol).as(idCol), col("__w")("pos").as("pos"))
+      exploded.join(winners, Seq("__h", idCol, "pos"), "left_semi")
+    }
 }

@@ -240,70 +240,72 @@ object VectorPQ {
     * nearest cells; only THOSE cells' codes are ADC-scanned — the two
     * pruning factors multiply (visit ~nprobe/k_cells of the corpus, at 4
     * bytes per visited vector), which is the working-set arithmetic that
-    * makes billion-vector ANN feasible on an executor's memory. Plan
-    * shape: the d15 probe join + the d94 scan, nothing new — and still
-    * rank-replayable (d95).
+    * makes billion-vector ANN feasible on an executor's memory.
+    *
+    * Runs `adcRank`, shared with [[adcTopK]]; the one difference is the
+    * candidate pairs: the d15 probe join (query → probed cells → the
+    * corpus vectors assigned to them) instead of every corpus vector. With
+    * `nprobe` = the cell count the result equals [[adcTopK]].
     */
   def ivfAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                  vecCol: String, k: Int, dim: Int, centroids: DataFrame,
                  cellIdCol: String, cellVecCol: String, nprobe: Int = 2,
                  m: Int = 8, ksub: Int = 16,
                  codebook: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val dsub = dim / m
-    val cb = codebookLit(codebook.getOrElse(mdCodebook(m, ksub, dsub)))
-    // degenerate vectors encode to codes=NULL (whole-row contract); they
-    // must not enter the ranking — a NULL ADC distance would sort FIRST
-    // under the default ascending order and displace every real neighbor
-    val enc = encode(corpus, idCol, vecCol, dim, m, ksub, codebook)
-      .where(col("codes").isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("codes"))
     val cells = VectorIVF
       .assign(corpus, idCol, vecCol, centroids, cellIdCol, cellVecCol)
       .select(col(idCol).as("neighbor_id"), col("cell"))
     val qp = VectorIVF
       .probes(queries, idCol, vecCol, centroids, cellIdCol, cellVecCol, nprobe)
       .select("query_id", "cell")
-    val qraw = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv"))
-    // native graft_l2 on the hot per-pair path (bit-identical left fold —
-    // the d95 oracle replay is unchanged); the per-subspace argmins inside
-    // encode stay HOF-shaped (lambda-bound subvector slices)
-    val nl2 = graft.plans.VectorExpressions.l2Column(corpus.sparkSession, _, _)
-    qp.join(cells, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .join(enc, Seq("neighbor_id"))
-      .join(broadcast(qraw), Seq("query_id"))
-      .withColumn("__d", nl2(col("__qv"), reconstruct(col("codes"), cb, m, ksub)))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("__d"), col("neighbor_id"))))
-      .where(col("rk") <= k)
-      .select("query_id", "neighbor_id", "rk")
+    adcRank(queries, corpus, idCol, vecCol, k, dim, m, ksub, codebook) {
+      (enc, q) =>
+        qp.join(cells, Seq("cell"))
+          .where(col("query_id") =!= col("neighbor_id"))
+          .join(enc, Seq("neighbor_id"))
+          .join(broadcast(q), Seq("query_id"))
+    }
   }
 
   /** Asymmetric-distance top-k: exact queries against the PQ-compressed
     * corpus — rank by squared L2 to the reconstruction, k best per
-    * query, ties to the smaller neighbor id. Queries broadcast (the
-    * knnBruteForce small-side contract); the corpus side carries only
-    * (id, codes).
+    * query, ties to the smaller neighbor id.
+    *
+    * Runs `adcRank`, shared with [[ivfAdcTopK]]; the one difference is the
+    * candidate pairs: every (query, corpus vector) pair but the query
+    * itself, queries broadcast (the knnBruteForce small-side contract).
     */
   def adcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int,
               m: Int = 8, ksub: Int = 16,
-              codebook: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val dsub = dim / m
-    val cb = codebookLit(codebook.getOrElse(mdCodebook(m, ksub, dsub)))
-    // NULL-coded (degenerate) corpus rows are excluded — see ivfAdcTopK
+              codebook: Option[Array[Array[Array[Double]]]] = None): DataFrame =
+    adcRank(queries, corpus, idCol, vecCol, k, dim, m, ksub, codebook) {
+      (enc, q) => enc.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    }
+
+  /** The ADC scan behind [[adcTopK]] and [[ivfAdcTopK]]: encode the corpus
+    * to (neighbor_id, codes), let `pairs(enc, q)` form the candidate rows
+    * against the queries (query_id, __qv), then rank each query's
+    * candidates by squared L2 to the reconstruction — the native
+    * `graft_l2` left fold, so the d94/d95 oracle replay is bit-identical
+    * — and keep its k best, ties to the smaller neighbor id.
+    */
+  private def adcRank(queries: DataFrame, corpus: DataFrame, idCol: String,
+                      vecCol: String, k: Int, dim: Int, m: Int, ksub: Int,
+                      codebook: Option[Array[Array[Array[Double]]]])(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val cb = codebookLit(codebook.getOrElse(mdCodebook(m, ksub, dim / m)))
+    // degenerate vectors encode to codes=NULL (whole-row contract); they
+    // must not enter the ranking — a NULL ADC distance would sort FIRST
+    // under the default ascending order and displace every real neighbor
     val enc = encode(corpus, idCol, vecCol, dim, m, ksub, codebook)
       .where(col("codes").isNotNull)
       .select(col(idCol).as("neighbor_id"), col("codes"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("__qv"))
-    // native graft_l2 (bit-identical to the HOF fold — d94/d96 unchanged)
     val nl2 = graft.plans.VectorExpressions.l2Column(corpus.sparkSession, _, _)
-    val dist = nl2(col("__qv"), reconstruct(col("codes"), cb, m, ksub))
-    enc.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("__d", dist)
+    pairs(enc, q)
+      .withColumn("__d", nl2(col("__qv"), reconstruct(col("codes"), cb, m, ksub)))
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
           .orderBy(col("__d"), col("neighbor_id"))))

@@ -144,26 +144,56 @@ case class KmvSketch(child: Expression, k: Int,
   * min-over-rows splice (no private hash seeds, unlike Spark's built-in
   * CountMinSketchAgg whose binary layout no second engine replays).
   *
-  * Null inputs are skipped (SQL aggregate convention). Output:
-  * `array<long>` of length depth·width, row-major, no nulls.
+  * Shares the `RowHashTable` aggregate body with [[CountSketch]]; the one
+  * difference is the increment: 1 per row. Null inputs are skipped (SQL
+  * aggregate convention). Output: `array<long>` of length depth·width,
+  * row-major, no nulls.
   */
 case class CmsSketch(child: Expression, depth: Int, width: Int,
                      mutableAggBufferOffset: Int = 0,
                      inputAggBufferOffset: Int = 0)
+    extends RowHashTable("graft_cms", depth, width) {
+
+  override protected def increment(h1: Long, h2: Long, r: Int): Long = 1L
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketch =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): CmsSketch =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): CmsSketch =
+    copy(child = newChild)
+}
+
+/** The aggregate body shared by [[CmsSketch]] and [[CountSketch]]: a dense
+  * `depth × width` long table, row-major, where each non-null input hash
+  * `h` adds `increment(h1, h2, r)` to bucket
+  * `((h1 + r·h2) % P) % width` of every row r (h1 = h & M,
+  * h2 = 1 + ((h >>> 31) & M)); merge is element-wise addition. The two
+  * sketches differ only in the increment: 1 for Count-Min, the row's ±1
+  * sign for Count-Sketch.
+  */
+private[plans] abstract class RowHashTable(name: String, depth: Int, width: Int)
     extends TypedImperativeAggregate[Array[Long]]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-  require(depth > 0 && depth <= 16, s"graft_cms depth=$depth must be in [1,16]")
-  require(width > 0, s"graft_cms width=$width must be positive")
+    with ImplicitCastInputTypes with UnaryLike[Expression] with Serializable {
+  require(depth > 0 && depth <= 16, s"$name depth=$depth must be in [1,16]")
+  require(width > 0, s"$name width=$width must be positive")
   // the buffer is depth·width longs PER GROUP (per partition while
   // partial): cap the table at 2^24 cells (128 MB of longs) so a typo'd
   // width fails loudly here instead of as an executor OOM mid-stage
   require(depth.toLong * width <= (1L << 24),
-    s"graft_cms table depth*width=${depth.toLong * width} exceeds 2^24 cells")
+    s"$name table depth*width=${depth.toLong * width} exceeds 2^24 cells")
+
+  // Serializable here, not only on the case class: tasks Java-deserialize
+  // the expression, which needs this constructor-argument parent restored
+  // from the stream rather than through a no-arg constructor
+
+  /** What row r adds to its bucket for the hash halves (h1, h2). */
+  protected def increment(h1: Long, h2: Long, r: Int): Long
 
   override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "graft_cms"
+  override def prettyName: String = name
 
   override def createAggregationBuffer(): Array[Long] =
     new Array[Long](depth * width)
@@ -177,7 +207,7 @@ case class CmsSketch(child: Expression, depth: Int, width: Int,
       var r = 0
       while (r < depth) {
         val b = (((h1 + r.toLong * h2) % CmsSketch.P) % width).toInt
-        buf(r * width + b) += 1L
+        buf(r * width + b) += increment(h1, h2, r)
         r += 1
       }
     }
@@ -207,13 +237,6 @@ case class CmsSketch(child: Expression, depth: Int, width: Int,
     while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsSketch =
-    copy(child = newChild)
 }
 
 object CmsSketch {
@@ -236,9 +259,10 @@ object CmsSketch {
   * the median over rows concentrates it (Alon–Matias–Szegedy, STOC 1996;
   * Charikar–Chen–Farach-Colton, ICALP 2002 — the "tug-of-war" sketch).
   *
-  * Same scale contract as CMS: dense `depth × width` SIGNED long counts,
-  * row-major; exchange ≤ partitions × depth × width longs; merge =
-  * element-wise add; mergeable standing artifact per dump.
+  * Shares the `RowHashTable` aggregate body with [[CmsSketch]] (same
+  * buckets, exchange, merge and standing-artifact contract); the one
+  * difference is the increment: the row's ±1 sign instead of 1, so the
+  * counts are SIGNED.
   *
   * Deterministic and engine-replayable — both hashes come from the SAME
   * Kirsch–Mitzenmacher family `g_i(h) = (h1 + i·h2) mod P` the CMS uses
@@ -256,63 +280,10 @@ object CmsSketch {
 case class CountSketch(child: Expression, depth: Int, width: Int,
                        mutableAggBufferOffset: Int = 0,
                        inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-  require(depth > 0 && depth <= 16,
-    s"graft_countsketch depth=$depth must be in [1,16]")
-  require(width > 0, s"graft_countsketch width=$width must be positive")
-  require(depth.toLong * width <= (1L << 24),
-    s"graft_countsketch table depth*width=${depth.toLong * width} " +
-      "exceeds 2^24 cells")
+    extends RowHashTable("graft_countsketch", depth, width) {
 
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_countsketch"
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](depth * width)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      val h1 = h & CmsSketch.M
-      val h2 = 1L + ((h >>> 31) & CmsSketch.M)
-      var r = 0
-      while (r < depth) {
-        val b = (((h1 + r.toLong * h2) % CmsSketch.P) % width).toInt
-        val s = 1L - 2L * (((h1 + (depth + r).toLong * h2) % CmsSketch.P) & 1L)
-        buf(r * width + b) += s
-        r += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buf.length) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any =
-    new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-    buf
-  }
+  override protected def increment(h1: Long, h2: Long, r: Int): Long =
+    1L - 2L * (((h1 + (depth + r).toLong * h2) % CmsSketch.P) & 1L)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CountSketch =
     copy(mutableAggBufferOffset = newOffset)
@@ -335,22 +306,17 @@ object SketchExpressions {
       .toAggregateExpression()
   }
 
-  private[plans] val cmsBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3, s"graft_cms expects 3 arguments, got ${exprs.length}")
-    require(exprs(1).foldable && exprs(2).foldable,
-      "graft_cms depth and width must be literals")
-    CmsSketch(exprs.head,
-      exprs(1).eval().asInstanceOf[Number].intValue,
-      exprs(2).eval().asInstanceOf[Number].intValue)
-      .toAggregateExpression()
-  }
+  private[plans] val cmsBuilder = tableBuilder("graft_cms")(CmsSketch(_, _, _))
 
-  private[plans] val csBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3,
-      s"graft_countsketch expects 3 arguments, got ${exprs.length}")
+  private[plans] val csBuilder = tableBuilder("graft_countsketch")(CountSketch(_, _, _))
+
+  /** The guarded builder of a `(h, depth, width)` table sketch. */
+  private def tableBuilder(name: String)(
+      make: (Expression, Int, Int) => RowHashTable): Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 3, s"$name expects 3 arguments, got ${exprs.length}")
     require(exprs(1).foldable && exprs(2).foldable,
-      "graft_countsketch depth and width must be literals")
-    CountSketch(exprs.head,
+      s"$name depth and width must be literals")
+    make(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue,
       exprs(2).eval().asInstanceOf[Number].intValue)
       .toAggregateExpression()
@@ -368,20 +334,20 @@ object SketchExpressions {
   /** `Column` surface: the Count-Min sketch (row-major `depth × width`
     * bucket counts) of a 60-bit-hash column, as an aggregate.
     */
-  def cmsColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column = {
-    GraftFunctions.register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "graft_cms", h, org.apache.spark.sql.functions.lit(depth),
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def cmsColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column =
+    tableColumn(spark, "graft_cms", h, depth, width)
 
   /** `Column` surface: the Count-Sketch (row-major `depth × width` SIGNED
     * bucket counts) of a 60-bit-hash column, as an aggregate.
     */
-  def csColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column = {
+  def csColumn(spark: SparkSession, h: Column, depth: Int, width: Int): Column =
+    tableColumn(spark, "graft_countsketch", h, depth, width)
+
+  private def tableColumn(spark: SparkSession, name: String, h: Column,
+                          depth: Int, width: Int): Column = {
     GraftFunctions.register(spark)
     org.apache.spark.sql.functions.call_function(
-      "graft_countsketch", h, org.apache.spark.sql.functions.lit(depth),
+      name, h, org.apache.spark.sql.functions.lit(depth),
       org.apache.spark.sql.functions.lit(width))
   }
 }

@@ -35,8 +35,13 @@ object UpdateHistory {
   private def rewriteFilter(filter: String, cn: String): String =
     filter.replaceAll("\\bvalue\\b", java.util.regex.Matcher.quoteReplacement(cn))
 
-  /** The shared long-format core: the LOCF-filled (instant × triple) grid.
-    * Returns (filled, argRows) where `filled` has
+  /** The argument triples on the driver, as (uevol_field_id, src_id,
+    * dst_id, filter) rows: the pivot names and the filter strings. */
+  private def collectArgs(args: DataFrame): Array[Row] =
+    args.select(col("uevol_field_id").cast("int"), col("src_id").cast("int"),
+      col("dst_id").cast("int"), col("filter")).collect()
+
+  /** The shared long-format core: the LOCF-filled (instant × triple) grid,
     * (instance_message_id, uevol_field_id, src_id, dst_id, k, v).
     */
   private def filledGrid(
@@ -44,14 +49,10 @@ object UpdateHistory {
       args: DataFrame,
       startState: DataFrame,
       startId: Long,
-      endId: Long): (DataFrame, Array[Row]) = {
+      endId: Long): DataFrame = {
 
     val spark = instanceField.sparkSession
     val key = Seq("uevol_field_id", "src_id", "dst_id")
-    val argRows: Array[Row] = args.select(
-      col("uevol_field_id").cast("int"), col("src_id").cast("int"),
-      col("dst_id").cast("int"), col("filter")).collect()
-
     val keyCol = concat(lit("id"), col("uevol_field_id"),
       lit("_src"), col("src_id"), lit("_dst"), col("dst_id"))
 
@@ -89,8 +90,7 @@ object UpdateHistory {
       .join(seed.unionByName(events)
         .groupBy("instance_message_id", "k").agg(max("v").as("v")),
         Seq("instance_message_id", "k"), "left_outer")
-    (Locf.fill(longFmt, Seq("k"), Seq(col("instance_message_id")), Seq("v")),
-      argRows)
+    Locf.fill(longFmt, Seq("k"), Seq(col("instance_message_id")), Seq("v"))
   }
 
   /** @param args        (uevol_field_id, src_id, dst_id, filter) — `filter`
@@ -107,9 +107,19 @@ object UpdateHistory {
       args: DataFrame,
       startState: DataFrame,
       startId: Long,
+      endId: Long): DataFrame =
+    wideHistory(instanceField, args, collectArgs(args), startState, startId, endId)
+
+  /** [[updateHistory]] over already-collected argument rows. */
+  private def wideHistory(
+      instanceField: DataFrame,
+      args: DataFrame,
+      argRows: Array[Row],
+      startState: DataFrame,
+      startId: Long,
       endId: Long): DataFrame = {
 
-    val (filled, argRows) = filledGrid(instanceField, args, startState, startId, endId)
+    val filled = filledGrid(instanceField, args, startState, startId, endId)
     val names = argRows.map(r => colName(r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
 
     val wide = filled
@@ -188,23 +198,21 @@ object UpdateHistory {
     // an unbounded argument list would drive Catalyst into a 10k-column
     // plan. Above maxWideTriples the request auto-routes to the long form
     // — fixed 5-column schema, identical instants/values/filter semantics,
-    // just (triple, value) rows instead of pivot columns. The probe is
-    // limit(maxWideTriples + 1) so routing never executes more of the args
-    // plan than the decision needs — an args frame derived from a join
-    // would otherwise run fully TWICE (once to count, once inside).
-    val goWide = wide && (maxWideTriples <= 0 ||
-      args.limit(maxWideTriples + 1).count() <= maxWideTriples)
-    if (goWide) updateHistory(instanceField, args, startState, startId, endId)
-    else updateHistoryLong(instanceField, args, startState, startId, endId)
+    // just (triple, value) rows instead of pivot columns. Both forms need
+    // the argument rows on the driver anyway, so they are collected once
+    // and the route is decided on their count.
+    val argRows = collectArgs(args)
+    if (wide && argRows.length <= maxWideTriples)
+      wideHistory(instanceField, args, argRows, startState, startId, endId)
+    else longHistory(instanceField, args, argRows, startState, startId, endId)
   }
 
   /** Pivot-width ceiling for [[updateHistoryFromLog]]'s wide form: above
     * this many argument triples the call returns the long format instead.
     * 256 pivot columns is far past every reference workload (the widest
     * reference test drives ~20 triples) yet far below where a pivot plan's
-    * analysis/codegen cost becomes the bottleneck. Non-positive disables
-    * the guard (callers who truly want a wider pivot call
-    * [[updateHistory]] directly anyway).
+    * analysis/codegen cost becomes the bottleneck. Callers who truly want
+    * a wider pivot call [[updateHistory]] directly.
     */
   val maxWideTriples: Int = 256
 
@@ -221,9 +229,19 @@ object UpdateHistory {
       args: DataFrame,
       startState: DataFrame,
       startId: Long,
+      endId: Long): DataFrame =
+    longHistory(instanceField, args, collectArgs(args), startState, startId, endId)
+
+  /** [[updateHistoryLong]] over already-collected argument rows. */
+  private def longHistory(
+      instanceField: DataFrame,
+      args: DataFrame,
+      argRows: Array[Row],
+      startState: DataFrame,
+      startId: Long,
       endId: Long): DataFrame = {
 
-    val (filled, argRows) = filledGrid(instanceField, args, startState, startId, endId)
+    val filled = filledGrid(instanceField, args, startState, startId, endId)
 
     // AND-composed filters without materializing the width: an instant
     // survives iff every filtered triple's filled value passes its

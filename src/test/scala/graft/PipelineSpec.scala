@@ -791,6 +791,35 @@ class JaccardJoinSpec extends SparkSpec {
     }
   }
 
+  test("containmentPairsAcross(df, df) minus self pairs equals containmentPairs(df)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 30).map(i => s"w$i")
+    val base = Seq.fill(12)(vocab(rnd.nextInt(vocab.size)))
+    // shared-body docs with random edits, plus independent ones
+    val docs = (0 until 24).map { i =>
+      val words =
+        if (i % 3 == 0) Seq.fill(8 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size)))
+        else base.take(6 + rnd.nextInt(7)) ++
+          Seq.fill(rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
+      (i.toLong, words.mkString(" "))
+    } :+ (99L, "too short")
+    val df = (docs ++ mixedCorpus.as[(Long, String)].collect()
+      .map { case (id, t) => (id + 1000L, t) }).toDF("doc_id", "text")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("doc_a", "doc_b", "containment", "sz_a", "sz_b")
+        .collect().map(_.toSeq).toSet
+    for (t <- Seq(0.4, 0.7, 1.0); fo <- Seq(true, false)) {
+      val self = rows(JaccardJoin.containmentPairs(df, "doc_id", "text", t,
+        freqOrder = fo))
+      val across = rows(JaccardJoin.containmentPairsAcross(df, df, "doc_id",
+          "text", t, freqOrder = fo).where(col("doc_a") =!= col("doc_b")))
+      assert(self.nonEmpty, s"t=$t freqOrder=$fo")
+      assert(across === self, s"t=$t freqOrder=$fo")
+    }
+    graft.CacheRegistry.releaseAll()
+  }
+
   test("containment and edit-verify plans never contain a cross product") {
     val cp = JaccardJoin.containmentPairs(mixedCorpus, "doc_id", "text", 0.7)
       .queryExecution.executedPlan.toString

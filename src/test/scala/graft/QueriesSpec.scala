@@ -591,6 +591,48 @@ class PointLookupPlanSpec extends SparkSpec {
   }
 }
 
+class UpdateHistoryPlanSpec extends SparkSpec {
+
+  private lazy val dir = graft.WorkDirs.acquire("test_graft_update_history_plan").toString
+
+  override def afterAll(): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+
+  /** Jobs started while `body` ran, counted by a listener; the bus is
+    * drained on both sides so no other call's events leak in.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain(); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("fromLog reads its args once: one collect routes and names the pivot") {
+    import spark.implicits._
+    // parquet-backed args, so every read of them is a Spark job
+    Seq((1, 10, 20, ""), (6, 10, 20, "value >= 61"))
+      .toDF("uevol_field_id", "src_id", "dst_id", "filter")
+      .write.mode("overwrite").parquet(s"$dir/args")
+    val args = spark.read.parquet(s"$dir/args")
+    val jobs = jobsOf(UpdateHistory.updateHistoryFromLog(
+      Fixtures.instanceField(spark), Fixtures.uevolField(spark),
+      Some(Fixtures.snapshotCatalog(spark)), Fixtures.snapshots(spark)(_),
+      args, 100L, 150L))
+    assert(jobs === 1, s"expected one job (the args collect), got $jobs")
+  }
+}
+
 class DriverContractSpec extends SparkSpec {
 
   test("every declared query has an oracle; no orphan oracle SQL") {

@@ -211,6 +211,30 @@ class VectorPQSpec extends SparkSpec {
     assert(got.length === 3 && !got.contains(666L))
   }
 
+  test("ivfAdcTopK probing every cell equals adcTopK") {
+    import spark.implicits._
+    // with nprobe = the cell count every corpus vector is a candidate of
+    // every query, so the IVF pruning drops nothing and the ranks match
+    val rnd = new scala.util.Random(5)
+    val corpus = (0 until 80).map(i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
+    val queries = corpus.where(col("vec_id") < 6).union(
+      Seq((500L, Array.fill(16)(rnd.nextGaussian()))).toDF("vec_id", "embedding"))
+    val cells = 5
+    for (cb <- Seq(None, Some(VectorPQ.train(corpus, "vec_id", "embedding",
+        dim = 16, m = 4, ksub = 8, iters = 2)))) {
+      val flat = VectorPQ.adcTopK(queries, corpus, "vec_id", "embedding",
+          k = 7, dim = 16, m = 4, ksub = 8, codebook = cb)
+        .as[(Long, Long, Int)].collect().toSet
+      val ivf = VectorPQ.ivfAdcTopK(queries, corpus, "vec_id", "embedding",
+          k = 7, dim = 16, graft.functions.VectorIVF.mdCentroids(spark, cells, 16),
+          "cell_id", "cvec", nprobe = cells, m = 4, ksub = 8, codebook = cb)
+        .as[(Long, Long, Int)].collect().toSet
+      assert(flat.size === 7 * 7)
+      assert(ivf === flat)
+    }
+  }
+
   test("adcTopK ranks a PQ-identical vector first") {
     import spark.implicits._
     // corpus vector 100 IS the reconstruction of some codes; its ADC
